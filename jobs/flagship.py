@@ -11,6 +11,9 @@ Stages (each checkpointed with lineage, resumable mid-pipeline):
   2. matched  — point-in-polygon join vs broadcast boundary index
   3. tiles    — per-tile contributor/edit feature vectors + boundary hits
 
+The tiles checkpoint is checked against the uncheckpointed fused
+``jobs_api.flagship`` plan: both must have the same ``table_checksum``.
+
 ``--resume`` skips any stage whose checkpoint + lineage validate
 (BASELINE.json:6 "exact resume-from-checkpoint").
 """
@@ -80,7 +83,11 @@ def main() -> None:
         spark,
         os.path.join(args.out, "tiles"),
         lambda: tile_aggregate(
-            matched, res=args.res, cell_col="cell", contributor_col="contributor"
+            matched,
+            res=args.res,
+            cell_col="cell",
+            contributor_col="contributor",
+            boundary_col="boundary_id",
         ),
         cell_col="cell",
         force=not args.resume,
@@ -88,13 +95,22 @@ def main() -> None:
     elapsed = time.perf_counter() - t0
     n_pages = pages.count()
     n_tiles = tiles.count()
+    checksum = table_checksum(tiles)
     print(
         f"flagship: {n_pages} pages -> {n_tiles} tiles in {elapsed:.2f}s "
-        f"({n_pages / elapsed:.0f} pages/sec); checksum={table_checksum(tiles)}"
+        f"({n_pages / elapsed:.0f} pages/sec); checksum={checksum}"
     )
-    # sanity: identical to the uncheckpointed single-plan pipeline
-    direct = flagship(spark, args.sf_dir, multiplier=args.multiplier, res=args.res)
-    assert direct.count() >= n_tiles
+    fused = table_checksum(
+        flagship(
+            spark,
+            args.sf_dir,
+            multiplier=args.multiplier,
+            n_boundaries=args.n_boundaries,
+            res=args.res,
+        )
+    )
+    if checksum != fused:
+        raise RuntimeError(f"checkpointed tiles checksum {checksum} != fused flagship {fused}")
     spark.stop()
 
 

@@ -26,35 +26,28 @@ def flagship(
     res: int = FLAGSHIP_RES,
 ) -> DataFrame:
     """scan pages → geocode → cell-encode → PIP join vs broadcast
-    boundary index → per-tile contributor/edit feature vectors.
+    boundary index → per-tile contributor/edit feature vectors and
+    boundary hit counts.
 
-    Single logical plan: one broadcast join (coarse PIP), one Arrow
-    refine stage, two exchanges (the two-phase tile agg). The
-    `contributor` is the page's site id — the uid analog of the
-    reference's element history `[U: osmparsing]`.
+    Single logical plan that reads the matched pages once: one
+    broadcast join (coarse PIP), one Arrow refine stage, and four
+    exchanges (the pre-fan-out repartition of the page source, then
+    the three-phase tile agg, which also carries the per-tile
+    boundary count). The `contributor` is the page's site id — the
+    uid analog of the reference's element history `[U: osmparsing]`.
     """
     pages = geocoded_pages(spark, sf_dir, multiplier=multiplier, res=res)
     pages = pages.withColumn(
         "contributor", F.regexp_extract("url", r"site(\d+)", 1).try_cast("long")
     )
-    packed = packed_boundaries(n_boundaries)
-    matched = pip_join(pages, packed, res=res)
-    tiles = tile_aggregate(
-        matched, res=res, cell_col="cell", contributor_col="contributor"
+    matched = pip_join(pages, packed_boundaries(n_boundaries), res=res)
+    return tile_aggregate(
+        matched,
+        res=res,
+        cell_col="cell",
+        contributor_col="contributor",
+        boundary_col="boundary_id",
     )
-    # boundary hit-count per tile — two-phase distinct, matching the
-    # skew-proof tile-agg shape: phase 1 reduces to distinct
-    # (cell, boundary_id) pairs with map-side partial aggregation (a
-    # mega-cell's duplicate hits collapse before the shuffle), phase 2
-    # counts per cell. A single-phase countDistinct would plan an
-    # Expand and funnel every mega-cell row into one reduce group.
-    bhits = (
-        matched.select("cell", "boundary_id")
-        .distinct()
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n_boundaries"))
-    )
-    return tiles.join(bhits, "cell", "left").fillna(0, subset=["n_boundaries"])
 
 
 def run_curate(spark: SparkSession, sf_dir: str, out: str) -> tuple[int, int]:

@@ -721,7 +721,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     c = corpus(spark, sf_dir).unionByName(quotes)
-    sh = shingles(spread(c)).distinct().persist()
+    # Not persisted: the operator returns a lazy plan, so a persist here
+    # could never be released. Branches whose plans match reuse one
+    # exchange; the others re-derive the shingles.
+    sh = shingles(spread(c)).distinct()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("dfc"))
     rare = sh.join(

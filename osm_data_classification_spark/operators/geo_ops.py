@@ -11,8 +11,10 @@ Scale notes (the 1000-executor story):
 - The polygon set broadcasts (packed flat numpy arrays, rebuilt once
   per Python worker). The points side — the 10^12-row table — never
   shuffles for the PIP join at all: candidate generation is a
-  broadcast-hash join, the refine is a stateless map. The only
-  exchanges in the flagship are the tile-agg groupBys.
+  broadcast-hash join, the refine is a stateless map. The flagship's
+  exchanges are the page source's pre-fan-out repartition (|documents|
+  rows) and the three tile-agg groupBys, which also carry the
+  per-tile boundary count.
 - The kNN join shuffles both sides once, keyed by cell; border
   correctness comes from an in-plan certification bound. The
   scheduled ring passes are a static plan; only the RESIDUE (the
@@ -488,6 +490,7 @@ def tile_aggregate(
     res: int,
     cell_col: str | None = None,
     contributor_col: str = "contributor",
+    boundary_col: str | None = None,
 ) -> DataFrame:
     """Per-tile contributor/edit-count feature vectors (BASELINE.json:6).
 
@@ -501,15 +504,28 @@ def tile_aggregate(
     shuffle is keyed on (cell, contributor, url) so a mega-cell's rows
     spread across the cluster before the per-cell count (J9 salting by
     the distinct key itself).
+
+    ``boundary_col`` (e.g. :func:`pip_join`'s ``boundary_id``) appends
+    ``n_boundaries``, the distinct boundaries per tile, in the same
+    three phases: one ``explode`` (a Generate, not an Expand) makes
+    each row a kind-0 row (the tile key) and a kind-1 row keyed
+    (cell, boundary) with null measures, so the input is read once.
     """
     cell = F.col(cell_col) if cell_col else cell_encode_col(F.col("lon"), F.col("lat"), res)
     dow = F.dayofweek("warc_ts")
+    kind, mine, uid = [], (lambda c: c), F.col(contributor_col)
+    if boundary_col:
+        pages = pages.withColumn("__k", F.explode(F.array(F.lit(0), F.lit(1))))
+        own = F.col("__k") == 0
+        kind, mine = ["__k"], (lambda c: F.when(own, c))
+        uid = F.when(own, uid).otherwise(F.col(boundary_col))
     base = pages.select(
         cell.alias("cell"),
-        F.col(contributor_col).alias("__uid"),
-        F.col("url").alias("__url"),
-        F.col("lang").alias("__lang"),
-        dow.alias("__dow"),
+        *kind,
+        uid.alias("__uid"),
+        mine(F.col("url")).alias("__url"),
+        mine(F.col("lang")).alias("__lang"),
+        mine(dow).alias("__dow"),
     )
     lang_sums = [
         F.sum(F.when(F.col("__lang") == lg, 1).otherwise(0)).alias(f"__n_{lg}")
@@ -528,21 +544,24 @@ def tile_aggregate(
     # over the whole cluster in phases 1-2 and phase 3 only sees
     # #contributors rows per cell. (A url has one contributor — its
     # site — so distinct urls per cell = Σ per-uid distinct urls.)
-    p1 = base.groupBy("cell", "__uid", "__url").agg(
+    # Kind-1 rows sum to 0 in every lang/dow measure; `mine` keeps
+    # them out of the three counts, and Σ kind = #(cell, boundary) groups.
+    p1 = base.groupBy("cell", *kind, "__uid", "__url").agg(
         F.count(F.lit(1)).alias("__n"), *lang_sums, *dow_sums
     )
-    p2 = p1.groupBy("cell", "__uid").agg(
+    p2 = p1.groupBy("cell", *kind, "__uid").agg(
         F.count(F.lit(1)).alias("__n_urls"),
         F.sum("__n").alias("__n"),
         *[F.sum(f"__n_{lg}").alias(f"__n_{lg}") for lg in LANGS],
         *[F.sum(f"__d{d}").alias(f"__d{d}") for d in range(1, 8)],
     )
     return p2.groupBy("cell").agg(
-        F.sum("__n").alias("n_edits"),
-        F.count(F.lit(1)).alias("n_contributors"),
-        F.sum("__n_urls").alias("n_urls"),
+        F.sum(mine(F.col("__n"))).alias("n_edits"),
+        F.count(mine(F.lit(1))).alias("n_contributors"),
+        F.sum(mine(F.col("__n_urls"))).alias("n_urls"),
         *[F.sum(f"__n_{lg}").alias(f"n_{lg}") for lg in LANGS],
         F.array(*[F.sum(f"__d{d}") for d in range(1, 8)]).alias("activity_hist"),
+        *([F.sum("__k").alias("n_boundaries")] if boundary_col else []),
     )
 
 

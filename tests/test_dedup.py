@@ -312,7 +312,12 @@ def test_containment_catches_inclusions_jaccard_misses(spark, sf_dir):
         JACCARD_THRESH,
     )
 
+    jsc = spark.sparkContext._jsc
+    cached = set(jsc.getPersistentRDDs().keys())
     got = DEDUP["dedup_containment"].fn(spark, sf_dir).collect()
+    # the operator leaves no cached data behind (earlier tests' leftovers
+    # may be released meanwhile by the context cleaner)
+    assert not set(jsc.getPersistentRDDs().keys()) - cached
     quote_pairs = [
         r for r in got if r["da"] >= _QUOTE_OFF and r["db"] < 10_000
     ]

@@ -193,14 +193,12 @@ def test_tile_ladder_conserves_counts(spark, sf_dir):
 
 
 def test_parallelism_invariance(spark, sf_dir):
-    """L4: output identical across partitioning (local shuffle=2 vs 8)."""
+    """L4: output identical across partitioning, activity_hist included."""
     from osm_data_classification_spark.io import table_checksum
     from osm_data_classification_spark.jobs_api import flagship
 
-    df = flagship(spark, sf_dir)
-    h1 = table_checksum(df.drop("activity_hist"))
-    df2 = flagship(spark, sf_dir).repartition(3)
-    h2 = table_checksum(df2.drop("activity_hist"))
+    h1 = table_checksum(flagship(spark, sf_dir))
+    h2 = table_checksum(flagship(spark, sf_dir).repartition(3))
     assert h1 == h2
 
 

@@ -120,20 +120,20 @@ def test_snapshot_time_travel_and_rollback(spark, sf_dir, tmp_path):
     assert a == b
 
 
-def test_engine_zip_matches_tree():
+def test_engine_zip_matches_tree(tmp_path):
     """r4 VERDICT "What's wrong" #2: engine.zip was built two commits
     before the final tree, so a --py-files deploy would have missed the
-    last two operators. Gate: every .py under the package tree must be
-    byte-identical inside engine.zip (and the zip must contain no
-    orphans), so forgetting the rebuild fails CI instead of shipping a
-    stale artifact. Rebuild with `python tools/package.py`."""
+    last two operators. Gate: the zip that `tools/package.build` makes
+    (the jobs build theirs the same way at submit time) holds every .py
+    under the package tree byte-identically and no orphans."""
     import os
     import zipfile
 
-    root = "/root/repo"
+    from tools.package import build
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pkg = "osm_data_classification_spark"
-    zpath = os.path.join(root, "engine.zip")
-    assert os.path.exists(zpath), "engine.zip missing — run tools/package.py"
+    zpath = build(str(tmp_path / "engine.zip"))
 
     tree = {}
     for dirpath, _dirs, files in os.walk(os.path.join(root, pkg)):

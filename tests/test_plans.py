@@ -3,6 +3,9 @@ codegen, shuffle counts — asserted, not hoped for."""
 
 from __future__ import annotations
 
+import os
+import re
+
 from pyspark.sql import functions as F
 
 from osm_data_classification_spark.catalog import full_catalog
@@ -117,14 +120,31 @@ def test_interval_join_is_equi_not_nested_loop(spark, sf_dir):
 
 
 def test_flagship_has_no_expand_on_cell_key(spark, sf_dir):
-    """The per-tile boundary count is a two-phase distinct; a
-    single-phase countDistinct would plan an Expand that funnels every
-    mega-cell row into one reduce group (skew)."""
+    """The per-tile boundary count rides the three-phase tile cascade
+    as a second key kind fed by one Generate; a single-phase
+    countDistinct would plan an Expand that funnels every mega-cell row
+    into one reduce group (skew)."""
     from osm_data_classification_spark.jobs_api import flagship
 
     df = flagship(spark, sf_dir)
     nodes = audit.plan_nodes(df)
     assert not any("Expand" in n for n in nodes), nodes
+
+
+def test_flagship_reads_matched_pages_once(spark, sf_dir):
+    """The flagship is one pass over the matched pages: the boundary
+    count shares the tile cascade instead of a second branch joined
+    back on cell, so the plan has one scan of ``documents``, one Arrow
+    refine and no join besides the broadcast coarse PIP join."""
+    from osm_data_classification_spark.jobs_api import flagship
+
+    df = flagship(spark, sf_dir)
+    nodes = audit.plan_nodes(df)
+    python = [n for n in nodes if n in ("ArrowEvalPython", "BatchEvalPython")]
+    assert len(python) == 1, nodes
+    scanned = re.findall(r"^Location: \w+ \[(.*)\]$", audit.formatted_plan(df), re.M)
+    assert [os.path.basename(p) for p in scanned] == ["documents.parquet"], scanned
+    assert audit.join_kinds(df) == ["BroadcastHashJoin"], audit.join_kinds(df)
 
 
 def test_pip_cover_switches_to_shuffle_join(spark, sf_dir, monkeypatch):

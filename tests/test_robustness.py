@@ -4,6 +4,7 @@ operators."""
 
 from __future__ import annotations
 
+import os
 import time
 
 import numpy as np
@@ -18,6 +19,10 @@ from osm_data_classification_spark.operators import dedup, text
 from osm_data_classification_spark.operators.geo_ops import pip_join
 from osm_data_classification_spark.sources.boundaries import packed_boundaries
 from osm_data_classification_spark.sources.pages import geocoded_pages
+
+GEN_PRIORITY = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools", "gen_priority.py"
+)
 
 
 def test_haversine_jvm_matches_numpy(spark):
@@ -283,7 +288,7 @@ def test_priority_window_matches_generator():
     import sys as _sys
 
     proc = subprocess.run(
-        [_sys.executable, "/root/repo/tools/gen_priority.py", "--check"],
+        [_sys.executable, GEN_PRIORITY, "--check"],
         capture_output=True,
         text=True,
     )
@@ -303,11 +308,8 @@ def test_priority_check_survives_future_driver_grade(tmp_path):
     generation DOES see the new round."""
     import importlib.util
     import json as _json
-    import os
 
-    spec = importlib.util.spec_from_file_location(
-        "gen_priority", "/root/repo/tools/gen_priority.py"
-    )
+    spec = importlib.util.spec_from_file_location("gen_priority", GEN_PRIORITY)
     gp = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(gp)
 

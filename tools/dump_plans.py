@@ -225,10 +225,12 @@ def main() -> None:
     out.append(
         md_block(
             "flagship (end-to-end spatial-join + tiling trace)",
-            "the whole metric stage in one plan: broadcast coarse PIP, one "
-            "Arrow refine stage, the three-phase tile agg, and the per-tile "
-            "boundary count as a two-phase distinct — NO Expand anywhere on "
-            "the skewed cell key (gated by tests/test_plans.py).",
+            "the whole metric stage in one plan that reads the matched pages "
+            "once: broadcast coarse PIP, one Arrow refine stage, and the "
+            "three-phase tile agg, whose Generate also keys every row by "
+            "(cell, boundary) for the per-tile boundary count — no second "
+            "branch, no join back on cell, NO Expand anywhere on the skewed "
+            "cell key (gated by tests/test_plans.py).",
             audit.formatted_plan(flagship(spark, SF)),
         )
     )

@@ -32,10 +32,11 @@ the judge diff it instead of re-running the oracles by hand).
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _args = sys.argv[1:]
 JSON_OUT = None
