@@ -147,6 +147,63 @@ def test_knn_join_tiny_grid_wrap(spark):
         assert np.allclose(got["dist_sq"].to_numpy(), odf["dist_sq"].to_numpy())
 
 
+@pytest.mark.parametrize(
+    "points, k, res",
+    [
+        ("pages", 5, 6),
+        ("uniform10", 12, 2),
+        ("polar-cluster", 8, 3),
+        ("uniform4", 5, 2),
+    ],
+    ids=[
+        "pages-res6",
+        "dense-full-cover-annulus",
+        "dense-full-cover-block",
+        "sparse-cartesian",
+    ],
+)
+def test_knn_residue_widening_exact(spark, pages_pd, monkeypatch, points, k, res):
+    """The residue widening loop ≡ brute-force oracle. With the
+    cartesian budget at 0, every probe ring 1 leaves uncertified takes
+    the widening passes instead of the one-shot cartesian scan:
+    annulus+seed widenings (the distinct sf0.001 urls at res 6),
+    the dense full-cover annulus pass (10 points, k above the candidate
+    count, res 2), the dense full-cover full-block pass after a ring
+    that wrapped the grid (a polar cluster whose one outlier sits 180°
+    away, res 3) and the sparse full-cover cartesian (4 points)."""
+    from osm_data_classification_spark.operators import geo_ops
+
+    monkeypatch.setattr(geo_ops, "_CARTESIAN_BUDGET", 0)
+    if points == "pages":
+        uniq = pages_pd.drop_duplicates("url")
+        lon, lat = uniq["lon"].to_numpy(), uniq["lat"].to_numpy()
+    elif points == "polar-cluster":
+        rng = np.random.default_rng(11)
+        lon = np.append(rng.uniform(-10, 10, 39), 179.0)
+        lat = np.append(rng.uniform(-85, -70, 39), -80.0)
+    else:
+        m = int(points.removeprefix("uniform"))
+        rng = np.random.default_rng(11)
+        lon, lat = rng.uniform(-179, 179, m), rng.uniform(-85, 85, m)
+    qid = np.arange(len(lon), dtype=np.int64)
+    pts = spark.createDataFrame(pd.DataFrame({"qid": qid, "lon": lon, "lat": lat}))
+    got = (
+        knn_join(pts, pts.withColumnRenamed("qid", "cid"), k=k, res=res)
+        .toPandas()
+        .sort_values(["qid", "rank"])
+        .reset_index(drop=True)
+    )
+    odf = (
+        pd.DataFrame(knn_bruteforce(lon, lat, qid, lon, lat, qid, k=k))
+        .sort_values(["qid", "rank"])
+        .reset_index(drop=True)
+    )
+    assert len(got) == len(odf)
+    assert np.array_equal(got["qid"].to_numpy(), odf["qid"].to_numpy())
+    assert np.array_equal(got["cid"].to_numpy(), odf["cid"].to_numpy())
+    assert np.allclose(got["dist_sq"].to_numpy(), odf["dist_sq"].to_numpy())
+
+
 def test_tile_assignments_bit_for_bit(spark, sf_dir, pages_pd):
     """Tile aggregation ≡ pandas oracle on every integer measure, and
     invariant across shuffle-partition settings."""
