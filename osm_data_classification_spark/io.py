@@ -69,6 +69,30 @@ def row_checksum(df: DataFrame) -> F.Column:
     return F.xxhash64(*[F.col(c) for c in df.columns])
 
 
+def _lineage_agg(
+    df: DataFrame, key: str, hashed: DataFrame, *extra: F.Column
+) -> DataFrame:
+    """``df`` grouped by ``key`` into ``output_rows``, the ``extra``
+    aggregates and an order-insensitive ``checksum`` (Σ row_checksum of
+    ``hashed``'s columns, mod 2^62) — the lineage a checkpoint stores
+    and a resume re-derives, so both must build it here."""
+    return (
+        df.withColumn("__h", row_checksum(hashed))
+        .groupBy(key)
+        .agg(
+            F.count(F.lit(1)).alias("output_rows"),
+            *extra,
+            # decimal accumulator: ANSI mode would overflow a long sum
+            F.pmod(
+                F.sum(F.col("__h").cast("decimal(38,0)")),
+                F.lit(2**62).cast("decimal(38,0)"),
+            )
+            .cast("long")
+            .alias("checksum"),
+        )
+    )
+
+
 def lineage_rows(
     df: DataFrame,
     cell_col: str | None = None,
@@ -82,19 +106,12 @@ def lineage_rows(
     """
     cell = F.col(cell_col) if cell_col else F.lit(None).cast("long")
     return (
-        df.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__h", row_checksum(df))
-        .groupBy("__pid")
-        .agg(
-            F.count(F.lit(1)).alias("output_rows"),
+        _lineage_agg(
+            df.withColumn("__pid", F.spark_partition_id()),
+            "__pid",
+            df,
             F.min(cell).alias("cell_min"),
             F.max(cell).alias("cell_max"),
-            # decimal accumulator: ANSI mode would overflow a long sum
-            F.pmod(
-                F.sum(F.col("__h").cast("decimal(38,0)")), F.lit(2**62).cast("decimal(38,0)")
-            )
-            .cast("long")
-            .alias("checksum"),
         )
         .select(
             F.col("__pid").alias("partition_id"),
@@ -410,19 +427,7 @@ def partitioned_checkpoint_write(df: DataFrame, path: str, part_col: str) -> Non
     )
     spark = df.sparkSession
     data = spark.read.parquet(os.path.join(path, "data")).select(*df.columns)
-    lin = (
-        data.withColumn("__h", row_checksum(data.drop(part_col)))
-        .groupBy(part_col)
-        .agg(
-            F.count(F.lit(1)).alias("output_rows"),
-            F.pmod(
-                F.sum(F.col("__h").cast("decimal(38,0)")),
-                F.lit(2**62).cast("decimal(38,0)"),
-            )
-            .cast("long")
-            .alias("checksum"),
-        )
-    )
+    lin = _lineage_agg(data, part_col, data.drop(part_col))
     lin.write.mode("overwrite").parquet(os.path.join(path, "_lineage"))
 
 
@@ -458,20 +463,7 @@ def resume_partitions(
     else:
         actual = {
             r[part_col]: (r["output_rows"], r["checksum"])
-            for r in (
-                data.withColumn("__h", row_checksum(data.drop(part_col)))
-                .groupBy(part_col)
-                .agg(
-                    F.count(F.lit(1)).alias("output_rows"),
-                    F.pmod(
-                        F.sum(F.col("__h").cast("decimal(38,0)")),
-                        F.lit(2**62).cast("decimal(38,0)"),
-                    )
-                    .cast("long")
-                    .alias("checksum"),
-                )
-                .collect()
-            )
+            for r in _lineage_agg(data, part_col, data.drop(part_col)).collect()
         }
     # an on-disk partition the lineage never wrote is foreign data —
     # including it in the healed frame would silently launder it into

@@ -21,17 +21,9 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from .dedup import CORPUS_SQL, _minhash_sql, corpus, dedup_minhash_lsh
-from .relational import QuerySpec
+from .relational import QuerySpec, register
 
 CATALOG: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, sql=None):
-    def deco(fn):
-        CATALOG[name] = QuerySpec(fn, sql)
-        return fn
-
-    return deco
 
 
 def connected_components(
@@ -140,7 +132,7 @@ def _clusters_sql() -> str:
     """
 
 
-@_register("dedup_clusters", _clusters_sql())
+@register("dedup_clusters", _clusters_sql())
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs (MinHash+LSH) → duplicate clusters → per-cluster
     canonical (min doc_id) and size. Docs with no duplicate partner
@@ -203,7 +195,7 @@ def host_link_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
 
 
-@_register("pagerank_hosts")  # rows-only: iterative float fixpoint
+@register("pagerank_hosts")  # rows-only: iterative float fixpoint
 def pagerank_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the synthesized host link graph — the classic
     iterative graph workload (host authority scores feed crawl
@@ -327,7 +319,7 @@ def _prx_sql() -> str:
     """
 
 
-@_register("pagerank_hosts_exact", _prx_sql())
+@register("pagerank_hosts_exact", _prx_sql())
 def pagerank_hosts_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The iterative-algorithm driver gate pagerank_hosts cannot have:
     the SAME recurrence carried in floor-scaled BIGINTs (rank × 1e12;
@@ -433,7 +425,7 @@ def _hits_sql() -> str:
     """
 
 
-@_register("webgraph_hits_exact", _hits_sql())
+@register("webgraph_hits_exact", _hits_sql())
 def webgraph_hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs & authorities over the host link graph — the second
     classic iterative web-graph algorithm next to PageRank (hub scores
@@ -546,7 +538,7 @@ def _tri_sql() -> str:
     """
 
 
-@_register("webgraph_triangle_count", _tri_sql())
+@register("webgraph_triangle_count", _tri_sql())
 def webgraph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-host triangle counts over the undirected host link graph —
     the clustering-coefficient numerator a link-spam / community

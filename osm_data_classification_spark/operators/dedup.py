@@ -27,17 +27,9 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from .portable import PHASH, PMIX, perm_params, phash_col, pmix_col
-from .relational import QuerySpec
+from .relational import QuerySpec, register
 
 CATALOG: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, sql=None):
-    def deco(fn):
-        CATALOG[name] = QuerySpec(fn, sql)
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -82,7 +74,7 @@ def corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_register(
+@register(
     "dedup_exact",
     f"""
     WITH corpus AS ({CORPUS_SQL})
@@ -232,7 +224,7 @@ def _jaccard_pairs(sh: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
 JACCARD_THRESH = 500
 
 
-@_register(
+@register(
     "dedup_ngram_jaccard",
     f"""
     WITH corpus AS ({CORPUS_SQL}),
@@ -293,7 +285,7 @@ def _minhash_sql() -> str:
     """
 
 
-@_register("dedup_minhash_lsh", _minhash_sql())
+@register("dedup_minhash_lsh", _minhash_sql())
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup detection — the 10^12-row design:
     shingle→minhash signature (one shuffle keyed by doc), band→bucket
@@ -386,7 +378,7 @@ def _simhash_sql() -> str:
     """
 
 
-@_register("dedup_simhash", _simhash_sql())
+@register("dedup_simhash", _simhash_sql())
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash signatures (32-bit, TF-weighted bit votes over token
     hashes). One groupBy; near-dup pairing is hamming distance on the
@@ -428,7 +420,7 @@ EMB_CORPUS_SQL = f"""
 """
 
 
-@_register(
+@register(
     "dedup_embedding_cosine",
     f"""
     WITH corpus AS ({EMB_CORPUS_SQL}),
@@ -494,7 +486,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SNAP_SPLIT = 350  # doc_id < 350 = the "existing" corpus
 
 
-@_register(
+@register(
     "dedup_cross_snapshot",
     f"""
     WITH corpus AS ({CORPUS_SQL}),
@@ -577,7 +569,7 @@ def _bloom_sql() -> str:
     """
 
 
-@_register("dedup_bloom_prefilter", _bloom_sql())
+@register("dedup_bloom_prefilter", _bloom_sql())
 def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The bloom-filter prefilter dedup_cross_snapshot's docstring
     promises: before probing the (huge, stored) old-snapshot
@@ -662,7 +654,7 @@ _CONT_CORPUS_SQL = f"""
 """
 
 
-@_register(
+@register(
     "dedup_containment",
     f"""
     WITH {_CONT_CORPUS_SQL},
@@ -761,7 +753,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 SPAN_TOKENS = 10  # duplicated-span unit: 10 consecutive tokens
 
 
-@_register(
+@register(
     "dedup_exact_substring_spans",
     f"""
     WITH corpus AS ({CORPUS_SQL}),

@@ -16,12 +16,13 @@ Scale notes (the 1000-executor story):
   rows) and the three tile-agg groupBys, which also carry the
   per-tile boundary count.
 - The kNN join shuffles both sides once, keyed by cell; border
-  correctness comes from an in-plan certification bound. The
-  scheduled ring passes are a static plan; only the RESIDUE (the
-  uncertified remainder, typically ~0) takes a driver-side widening
-  loop — O(log n) passes, each a blocking count over the persisted,
-  shrinking residue, each pass re-scanning only the annulus of new
-  cells and merging the previous pass's per-probe top-k.
+  correctness comes from an in-plan certification bound. The ring-1
+  pass is a static plan; only the RESIDUE (the uncertified remainder,
+  typically ~0) takes a driver-side widening loop — O(log n) passes
+  of the same ring-pass kernel, each a blocking count over the
+  persisted, shrinking residue, each pass re-scanning only the
+  annulus of new cells and merging the previous pass's per-probe
+  top-k.
 - Mega-cell skew: distinct-count aggregation is two-phase keyed on
   (cell, contributor) first — the hot cell's rows spread over the
   whole cluster in phase 1 — and AQE skew-join splitting is on in the
@@ -29,6 +30,8 @@ Scale notes (the 1000-executor story):
 """
 
 from __future__ import annotations
+
+import math
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -241,11 +244,8 @@ def knn_join(
     candidates: DataFrame,
     k: int = 5,
     res: int = 7,
-    ring: int = 1,
     id_col: str = "qid",
     cand_id_col: str = "cid",
-    persist: bool = True,
-    rings: "tuple[int, ...] | None" = None,
     n_candidates: "int | None" = None,
     n_probes: "int | None" = None,
 ) -> DataFrame:
@@ -263,36 +263,33 @@ def knn_join(
     on candidate id — a unique, bit-for-bit-comparable result set.
 
     Staged plan:
-      1..N. ring passes over the ``rings`` schedule — probe cells
-         exploded to the (2r+1)² block, equi-joined to candidates on
-         cell, per-probe top-k window; a probe is CERTIFIED iff it
-         found ≥k candidates and its kth distance is within the
-         block-boundary bound. Certification is a second window over
-         the SAME partition key (id_col), so Catalyst reuses the
-         top-k exchange. Probes certified at stage i never re-join.
+      1. ring-1 pass — probe cells exploded to the 3×3 block,
+         equi-joined to candidates on cell, per-probe top-k window; a
+         probe is CERTIFIED iff it found ≥k candidates and its kth
+         distance is within the block-boundary bound. Certification is
+         a second window over the SAME partition key (id_col), so
+         Catalyst reuses the top-k exchange. Certified probes never
+         re-join.
       residue. density-guided widening: one global candidate count
          picks the ring expected to certify (~4k candidates per
-         block); doubling covers skew; the terminal pass is either a
-         partitioned cartesian (sparse grids) or the full-cover cell
-         join (dense grids) — in no case is the candidate set
-         broadcast, and every pass's cost scales with the residue,
-         never the candidate count.
+         block); doubling covers skew; each widening is the same
+         certifying pass over the annulus of new cells. The terminal
+         pass is either a partitioned cartesian (sparse grids) or the
+         full-cover cell join (dense grids) — in no case is the
+         candidate set broadcast, and every pass's cost scales with
+         the residue, never the candidate count.
 
-    ``persist`` caches each stage's k·|probes|-row top-k intermediate
-    (consumed by three branches) and the shrinking probe remainder —
-    the tables you would checkpoint on a real cluster. Pick ``res`` so
-    that a ring block holds ≳k candidates (see :func:`knn_auto_res`).
+    Pick ``res`` so that a ring block holds ≳k candidates (see
+    :func:`knn_auto_res`).
     """
     qlon, qlat = "lon", "lat"
+    n = 1 << res
     cx, cy = xy_cols(F.col("__clon"), F.col("__clat"), res)
     cand = candidates.select(
         F.col(cand_id_col),
         F.col("lon").alias("__clon"),
         F.col("lat").alias("__clat"),
     ).withColumn("__cell", _grid_key(cx, cy))
-
-    if rings is None:
-        rings = (ring,)
 
     def pair_rows(joined: DataFrame) -> DataFrame:
         dx = F.col(qlon) - F.col("__clon")
@@ -311,7 +308,7 @@ def knn_join(
 
     out_cols = [id_col, cand_id_col, "dist_sq", "rank"]
     topk_cols = [id_col, qlon, qlat, cand_id_col, "dist_sq"]
-    remaining = probes_p = probes.select(id_col, qlon, qlat)
+    wp = Window.partitionBy(id_col)
     parts: list[DataFrame] = []
     # previous pass's per-probe top-k (persisted) + its ring: a later,
     # wider pass re-scans only the ANNULUS of new cells and merges this
@@ -320,32 +317,33 @@ def knn_join(
     # seeded ones (round-2 VERDICT #5 / NOTES_r2 round-3 candidate)
     prev_topk: DataFrame | None = None
     prev_ring = 0
-    n = 1 << res
-    wp = Window.partitionBy(id_col)
-    for r in rings:
-        if prev_topk is not None and r > prev_ring and 2 * prev_ring + 1 <= n:
-            # annulus + seed merge on SCHEDULED passes too (r3 VERDICT
-            # #5 — previously only the residue loop seeded): the new
-            # cells of the wider block join candidates; the inner
-            # block contributes the k persisted seed rows per
-            # still-uncertified probe. Exact for the same reason as
-            # the residue merge — any dropped inner candidate is
-            # dominated by k seeded ones.
+
+    def block_topk(remaining: DataFrame, r: int) -> DataFrame:
+        """Per-probe top-k over the ring-``r`` block: annulus + seed
+        merge when the previous block was un-capped (the inner block
+        contributes the k persisted seed rows per still-uncertified
+        probe), else the full block."""
+        if prev_topk is not None and 2 * prev_ring + 1 <= n:
             annulus = _explode_kring(
                 remaining, qlon, qlat, res, r, inner=prev_ring
             )
-            seed = prev_topk.join(
-                remaining.select(id_col), id_col, "leftsemi"
-            )
-            stage = topk_rows(
+            seed = prev_topk.join(remaining.select(id_col), id_col, "leftsemi")
+            return topk_rows(
                 pair_rows(annulus.join(cand, "__cell")).unionByName(seed)
             )
-        else:
-            ringed = _explode_kring(remaining, qlon, qlat, res, r)
-            stage = topk(ringed.join(cand, "__cell"))
-        stage = stage.withColumn("__cert_sq", _cert_bound_sq(qlon, qlat, res, r))
-        if persist:
-            stage = stage.persist()
+        ringed = _explode_kring(remaining, qlon, qlat, res, r)
+        return topk(ringed.join(cand, "__cell"))
+
+    def ring_pass(remaining: DataFrame, r: int) -> DataFrame:
+        """Certifying pass at ring ``r``: appends the certified probes'
+        top-k to ``parts`` and returns the persisted uncertified rest.
+        The k·|remaining|-row top-k is persisted (three branches read
+        it, and it seeds the next pass), as is the shrinking remainder
+        — the tables you would checkpoint on a real cluster."""
+        nonlocal prev_topk, prev_ring
+        stage = block_topk(remaining, r).withColumn(
+            "__cert_sq", _cert_bound_sq(qlon, qlat, res, r)
+        ).persist()
         prev_topk, prev_ring = stage.select(*topk_cols), r
         stage = stage.withColumn("__n", F.count(F.lit(1)).over(wp)).withColumn(
             "__kth", F.max("dist_sq").over(wp)
@@ -363,20 +361,20 @@ def knn_join(
         # local bench). Hint only under the known-small gate.
         if n_probes is not None and n_probes <= _CERT_BROADCAST_MAX:
             cert_ids = F.broadcast(cert_ids)
-        remaining = remaining.join(cert_ids, id_col, "left_anti")
-        if persist:
-            remaining = remaining.persist()
+        return remaining.join(cert_ids, id_col, "left_anti").persist()
+
+    remaining = ring_pass(probes.select(id_col, qlon, qlat), 1)
 
     # --- residue: density-guided ring widening to certification ----------
     # Round-1's terminal fallback broadcast the FULL candidate set
     # (broadcast OOM at 10^9 candidates regardless of residue size).
-    # Replaced: if any probes remain uncertified after the scheduled
-    # rings, measure the global candidate density ONCE and jump
-    # straight to the ring whose block is expected to hold ~4k
-    # candidates (instead of doubling up from ring 1 — a pass per
-    # doubling is real wall time), then double on skew misses. Each
-    # pass is a cell equi-join whose cost scales with the residue,
-    # never the candidate count, and certification is exact. Terminal
+    # Replaced: if any probes remain uncertified after ring 1, measure
+    # the global candidate density ONCE and jump straight to the ring
+    # whose block is expected to hold ~4k candidates (instead of
+    # doubling up from ring 1 — a pass per doubling is real wall
+    # time), then double on skew misses. Each pass is a cell
+    # equi-join whose cost scales with the residue, never the
+    # candidate count, and certification is exact. Terminal
     # exactness (also covers k > |candidates| and extreme skew):
     #   * sparse grid (|cand| < n²/2): residue × candidates as a
     #     PARTITIONED cartesian — |residue|·|cand| streamed work
@@ -384,16 +382,13 @@ def knn_join(
     #   * dense grid: full-cover k-ring — the cell equi-join IS the
     #     exact scan, partitioned on cell on both sides.
     # Runtime counts run over the persisted, shrinking residue.
-    n = 1 << res
     n_rem = remaining.count()
     if n_rem:
-        import math
-
         n_cand = n_candidates if n_candidates is not None else cand.count()
         # block side that yields ~4k expected candidates under uniform
         # density; skew beyond it is caught by doubling
         side = math.isqrt((4 * k * n * n) // max(1, n_cand)) + 1
-        r = max(2 * rings[-1], (side - 1) // 2 + 1)
+        r = max(2, (side - 1) // 2 + 1)
         while True:
             # work-budget terminal: when |residue|·|cand| is small, a
             # single PARTITIONED cartesian pass (never a broadcast of
@@ -414,43 +409,10 @@ def knn_join(
                 scan = remaining.coalesce(1).crossJoin(cand.drop("__cell"))
                 parts.append(topk(scan).select(*out_cols))
                 break
-            if prev_topk is not None and r > prev_ring and 2 * prev_ring + 1 <= n:
-                # annulus + seed merge: only the new cells join against
-                # candidates; the inner block's contribution is the k
-                # persisted seed rows per probe (semi-joined down to the
-                # current residue)
-                annulus = _explode_kring(
-                    remaining, qlon, qlat, res, r, inner=prev_ring
-                )
-                seed = prev_topk.join(
-                    remaining.select(id_col), id_col, "leftsemi"
-                )
-                stage = topk_rows(
-                    pair_rows(annulus.join(cand, "__cell")).unionByName(seed)
-                )
-            else:
-                ringed = _explode_kring(remaining, qlon, qlat, res, r)
-                stage = topk(ringed.join(cand, "__cell"))
             if full_cover:
-                parts.append(stage.select(*out_cols))
+                parts.append(block_topk(remaining, r).select(*out_cols))
                 break
-            stage = stage.withColumn(
-                "__cert_sq", _cert_bound_sq(qlon, qlat, res, r)
-            )
-            if persist:
-                stage = stage.persist()
-            prev_topk, prev_ring = stage.select(*topk_cols), r
-            stage = stage.withColumn("__n", F.count(F.lit(1)).over(wp)).withColumn(
-                "__kth", F.max("dist_sq").over(wp)
-            )
-            ok = (F.col("__n") >= k) & (F.col("__kth") < F.col("__cert_sq"))
-            parts.append(stage.filter(ok).select(*out_cols))
-            cert_ids = stage.filter(ok).select(id_col).distinct()
-            if n_probes is not None and n_probes <= _CERT_BROADCAST_MAX:
-                cert_ids = F.broadcast(cert_ids)
-            remaining = remaining.join(cert_ids, id_col, "left_anti")
-            if persist:
-                remaining = remaining.persist()
+            remaining = ring_pass(remaining, r)
             n_rem = remaining.count()
             if n_rem == 0:
                 break
@@ -462,18 +424,15 @@ def knn_join(
     return out
 
 
-def knn_auto_res(n_candidates: int, k: int, ring: int = 1) -> int:
+def knn_auto_res(n_candidates: int, k: int) -> int:
     """Coarsest-that-still-partitions grid resolution for a kNN join:
-    the res where one ring block is expected to hold ~4k candidates
+    the res where one ring-1 block is expected to hold ~4k candidates
     under a uniform spread — enough to certify most probes while
     keeping per-cell work bounded. Density skew beyond that is handled
     by the certification/fallback machinery, not the res choice."""
-    import math
-
-    block = (2 * ring + 1) ** 2
     for res in range(12, 0, -1):
         cells = (1 << res) ** 2
-        if n_candidates * block / cells >= 4 * k:
+        if n_candidates * 9 / cells >= 4 * k:
             return res
     return 1
 

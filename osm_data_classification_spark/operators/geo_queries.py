@@ -33,7 +33,7 @@ from ..operators.geo_ops import (
     tile_aggregate,
     tile_ladder,
 )
-from ..operators.relational import QuerySpec
+from ..operators.relational import QuerySpec, register
 from ..sources.boundaries import packed_boundaries
 from ..sources.pages import geocoded_pages
 
@@ -48,14 +48,6 @@ def _flatten_hist(df: DataFrame, col: str = "activity_hist") -> DataFrame:
     Internal consumers (tile_ladder, lineage, streaming) keep the
     typed array."""
     return df.withColumn(col, F.array_join(F.col(col).cast("array<string>"), "|"))
-
-
-def _register(name: str, sql=None):
-    def deco(fn):
-        CATALOG[name] = QuerySpec(fn, sql)
-        return fn
-
-    return deco
 
 
 def _cell_encode_sql() -> str:
@@ -80,7 +72,7 @@ def _cell_encode_sql() -> str:
     """
 
 
-@_register("geo_cell_encode", _cell_encode_sql())
+@register("geo_cell_encode", _cell_encode_sql())
 def geo_cell_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.8 geo scalars: batched cell encoding at res 5–12 over the
     geocoded pages — one JVM-side expression per resolution, single
@@ -94,7 +86,7 @@ def geo_cell_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pages.select("url", "warc_ts", *cols)
 
 
-@_register("geo_pip_join")
+@register("geo_pip_join")
 def geo_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5: ray-cast PIP join, (url, boundary_id) assignment pairs over
     the seeded-numpy boundary fixture (rows-only for the driver; the
@@ -111,7 +103,7 @@ def _pip_exact_sql() -> str:
     return pip_exact_sql(PAGES_SQL)
 
 
-@_register("geo_pip_join_exact", _pip_exact_sql())
+@register("geo_pip_join_exact", _pip_exact_sql())
 def geo_pip_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5 with a FULL value oracle: polygons defined by literal
     integer/dyadic vertices shared verbatim with the SQL (VALUES
@@ -128,7 +120,7 @@ def geo_pip_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pip_join(pages, packed, res=7).select("url", "warc_ts", "boundary_id")
 
 
-@_register("geo_pip_join_shuffle", _pip_exact_sql())
+@register("geo_pip_join_shuffle", _pip_exact_sql())
 def geo_pip_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5's SHUFFLE-COVER regime under the full value oracle (round-2
     VERDICT #7): same literal polygon set and DuckDB oracle as
@@ -153,7 +145,7 @@ def geo_pip_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("url", "warc_ts", "boundary_id")
 
 
-@_register(
+@register(
     "geo_knn_join_exact",
     f"""
     WITH {PAGES_SQL},
@@ -194,7 +186,7 @@ def geo_knn_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("geo_knn_join")
+@register("geo_knn_join")
 def geo_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6: grid-partitioned kNN join — every page's 5 nearest distinct
     documents' locations (probe = candidate set here; self-match at
@@ -242,7 +234,7 @@ _TILE7_SQL = f"""
 """
 
 
-@_register("geo_tile_agg", _TILE7_SQL)
+@register("geo_tile_agg", _TILE7_SQL)
 def geo_tile_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7: per-tile contributor/edit-count feature vectors at res 7.
     Full oracle: DuckDB aggregates the independently re-synthesized,
@@ -293,7 +285,7 @@ def _ladder_sql(top: int = _LADDER_TOP, bottom: int = _LADDER_BOTTOM) -> str:
     return base + "\n        UNION ALL\n        ".join(levels)
 
 
-@_register("rollup_res_ladder", _ladder_sql())
+@register("rollup_res_ladder", _ladder_sql())
 def rollup_res_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8: resolution ladder 12→5 (the encoder's full range) by pure
     parent-cell arithmetic. Full oracle: DuckDB rolls the same ladder
@@ -306,7 +298,7 @@ def rollup_res_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _flatten_hist(tile_ladder(tiles, _LADDER_TOP, _LADDER_BOTTOM))
 
 
-@_register("stream_tile_ladder", _ladder_sql(top=9, bottom=5))
+@register("stream_tile_ladder", _ladder_sql(top=9, bottom=5))
 def stream_tile_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.9 promoted to the driver surface (round-2 VERDICT #8): the
     foreachBatch incremental rollup END-TO-END — pages written as 4
@@ -397,7 +389,7 @@ def _lineage_checksum_sql() -> str:
     """
 
 
-@_register("lineage_checksum_portable", _lineage_checksum_sql())
+@register("lineage_checksum_portable", _lineage_checksum_sql())
 def lineage_checksum_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5 with a FULL value oracle: an order-insensitive portable
     checksum (md5-based 60-bit row hash, decimal-summed mod 2^62) of
@@ -421,7 +413,7 @@ def lineage_checksum_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("lineage_metrics")
+@register("lineage_metrics")
 def lineage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5: per-partition lineage rows (partition_id, input_rows,
     output_rows, cell_range, checksum) of the tile table
@@ -433,7 +425,7 @@ def lineage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lineage_rows(tiles, cell_col="cell")
 
 
-@_register("geo_travel_distance")  # rows-only: haversine trig isn't
+@register("geo_travel_distance")  # rows-only: haversine trig isn't
 def geo_travel_distance(spark: SparkSession, sf_dir: str) -> DataFrame:  # oracle-safe
     """Geo + window combo: per contributor (site), the total great-
     circle distance walked along its pages in crawl order — the
@@ -510,7 +502,7 @@ def _qk_col(x, y, res: int):
     )
 
 
-@_register("geo_quadkey_encode", _quadkey_sql())
+@register("geo_quadkey_encode", _quadkey_sql())
 def geo_quadkey_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.8 geo scalars: Bing-style quadkey strings — the string twin
     of the Morton int64 cell id (geo/cells.py), used where tile ids
@@ -567,7 +559,7 @@ def _polygon_area_sql() -> str:
     """
 
 
-@_register("geo_polygon_area", _polygon_area_sql())
+@register("geo_polygon_area", _polygon_area_sql())
 def geo_polygon_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector-side geometry audit of the PIP boundary set: per-ring
     signed shoelace area and winding order — the planar area measure
@@ -657,7 +649,7 @@ def _neighbors_sql() -> str:
     """
 
 
-@_register("geo_cell_neighbors", _neighbors_sql())
+@register("geo_cell_neighbors", _neighbors_sql())
 def geo_cell_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.8 geo scalars: the 8-neighbor ring of each page's res-7 cell
     — the O(1) adjacency arithmetic the kNN candidate ring
@@ -741,7 +733,7 @@ def _dense_clusters_sql() -> str:
     """
 
 
-@_register("geo_cluster_dense_cells", _dense_clusters_sql())
+@register("geo_cluster_dense_cells", _dense_clusters_sql())
 def geo_cluster_dense_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hotspot clustering (DBSCAN-lite over the raster): res-4 cells
     holding >= 3 pages are "dense"; 8-adjacent dense cells (x wraps at
@@ -853,7 +845,7 @@ def _tile_vectorize_sql() -> str:
     """
 
 
-@_register("geo_tile_vectorize", _tile_vectorize_sql())
+@register("geo_tile_vectorize", _tile_vectorize_sql())
 def geo_tile_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raster→vector (BASELINE.json:6 'raster-to-vector tile
     aggregation'): every occupied res-7 tile becomes a closed CCW WKT
@@ -923,7 +915,7 @@ def _bbox_query_sql() -> str:
     """
 
 
-@_register("geo_bbox_cells_query", _bbox_query_sql())
+@register("geo_bbox_cells_query", _bbox_query_sql())
 def geo_bbox_cells_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spatial window query via Z-order range decomposition: the
     literal bbox compiles (driver-side, geo/cells.py
@@ -1020,7 +1012,7 @@ def _cover_compact_sql() -> str:
     return "WITH " + ",\n".join(ctes) + "\n" + " UNION ALL ".join(parts)
 
 
-@_register("geo_cover_compact", _cover_compact_sql())
+@register("geo_cover_compact", _cover_compact_sql())
 def geo_cover_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2-style CellUnion normalization: any complete sibling quad in
     the cover is replaced by its parent, bottom-up from res 7 to res
@@ -1104,7 +1096,7 @@ def _tile_heat_sql() -> str:
     """
 
 
-@_register("geo_tile_heat_decay", _tile_heat_sql())
+@register("geo_tile_heat_decay", _tile_heat_sql())
 def geo_tile_heat_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recency-weighted tile heat: each crawl contributes
     2^max(30 − age_in_half_lives, 0) — an exponential 7-day-half-life
@@ -1194,7 +1186,7 @@ def _polyfill_sql() -> str:
     """
 
 
-@_register("geo_polyfill", _polyfill_sql())
+@register("geo_polyfill", _polyfill_sql())
 def geo_polyfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H3-style polyfill: every res-8 cell whose CENTER lies inside
     the concave L-shaped literal polygon (center-in semantics, the
@@ -1263,7 +1255,7 @@ def _radius_join_sql() -> str:
     """
 
 
-@_register("geo_radius_join", _radius_join_sql())
+@register("geo_radius_join", _radius_join_sql())
 def geo_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6's sibling: fixed-radius neighbor join (range search) — every
     pair of distinct pages within 2° planar distance. Grid-partitioned:
@@ -1340,7 +1332,7 @@ def _tile_incremental_sql() -> str:
     """
 
 
-@_register("tile_incremental_merge", _tile_incremental_sql())
+@register("tile_incremental_merge", _tile_incremental_sql())
 def tile_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental view maintenance for the tile table: the corpus is
     split at crawl day 60 into an "existing" batch and a "new" batch,
@@ -1404,7 +1396,7 @@ def _focal_sql() -> str:
     """
 
 
-@_register("geo_focal_sum", _focal_sql())
+@register("geo_focal_sum", _focal_sql())
 def geo_focal_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Focal (3×3 neighborhood) raster aggregation — the smoothing
     convolution heatmap renderers and density estimators run over the
@@ -1481,7 +1473,7 @@ def _bc_pages_sql() -> str:
     return f"WITH {PAGES_SQL} SELECT url, warc_ts, lon, lat FROM pages"
 
 
-@_register("geo_boundary_centroid", _boundary_centroid_sql())
+@register("geo_boundary_centroid", _boundary_centroid_sql())
 def geo_boundary_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite chain: ray-cast PIP assignment → per-boundary page
     centroid numerators (floored x1e6 integer sums, the drift-centroid
@@ -1531,7 +1523,7 @@ def _quant_error_sql() -> str:
     return f"WITH {PAGES_SQL}\n" + " UNION ALL ".join(parts)
 
 
-@_register("geo_quant_error_audit", _quant_error_sql())
+@register("geo_quant_error_audit", _quant_error_sql())
 def geo_quant_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Numeric audit of the cell quantizer at res 5/8/12: the maximum
     |point − cell-center| displacement per axis, floored to x1e6
@@ -1633,7 +1625,7 @@ def _geohash_sql() -> str:
     """
 
 
-@_register("geo_geohash_encode", _geohash_sql())
+@register("geo_geohash_encode", _geohash_sql())
 def geo_geohash_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.8 geo scalars, third tile-key family: base32 geohash — the
     key format used by redis/elasticsearch geo indexes and many crawl
@@ -1704,7 +1696,7 @@ def _smooth_sql() -> str:
     """
 
 
-@_register("geo_tile_smooth", _smooth_sql())
+@register("geo_tile_smooth", _smooth_sql())
 def geo_tile_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raster kernel convolution on the tile grid — the raster half of
     the raster↔vector surface: each res-7 cell's edit count is
@@ -1773,7 +1765,7 @@ def geo_tile_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STAY_MIN = 3  # consecutive same-cell pages that constitute a stay
 
 
-@_register(
+@register(
     "geo_contributor_stays",
     f"""
     WITH {PAGES_SQL},

@@ -16,17 +16,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from .relational import QuerySpec
+from .relational import QuerySpec, register
 
 CATALOG: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, sql=None):
-    def deco(fn):
-        CATALOG[name] = QuerySpec(fn, sql)
-        return fn
-
-    return deco
 
 
 def grouped_quantiles(
@@ -53,7 +45,7 @@ def grouped_quantiles(
     return df.select(key, value).groupBy(key).applyInPandas(per_group, schema)
 
 
-@_register(
+@register(
     "grouped_quantiles_apply",
     """
     SELECT user_id,
@@ -72,7 +64,7 @@ def grouped_quantiles_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return grouped_quantiles(ev, "user_id", "value")
 
 
-@_register(
+@register(
     "grouped_zscore_apply",
     """
     WITH stats AS (
@@ -136,7 +128,7 @@ _UDTF_SQL = """
 """
 
 
-@_register("udtf_term_counts", _UDTF_SQL)
+@register("udtf_term_counts", _UDTF_SQL)
 def udtf_term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.10's table-function row made REAL: a Python UDTF (Spark 4
     `@udtf`, Arrow-optimized) fans each document out to its repeated
@@ -174,7 +166,7 @@ def udtf_term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CUSUM_K = 5  # drift when the accumulated excess reaches K x med2
 
 
-@_register(
+@register(
     "grouped_cusum_apply",
     f"""
     WITH RECURSIVE daily AS (

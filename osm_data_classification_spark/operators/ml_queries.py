@@ -14,20 +14,12 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..ml import kmeans_assign_df, kmeans_fit, pca_fit, pca_project_df
-from .relational import QuerySpec
+from .relational import QuerySpec, register
 
 CATALOG: dict[str, QuerySpec] = {}
 
 
-def _register(name: str, sql=None):
-    def deco(fn):
-        CATALOG[name] = QuerySpec(fn, sql)
-        return fn
-
-    return deco
-
-
-@_register("pca_project")  # rows-only (eigendecomposition)
+@register("pca_project")  # rows-only (eigendecomposition)
 def pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10: PCA over the embeddings table — distributed sufficient
     statistics, driver eigh, broadcast projection to 2 components."""
@@ -41,7 +33,7 @@ def pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("kmeans_assign")  # rows-only (iterative)
+@register("kmeans_assign")  # rows-only (iterative)
 def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A11: KMeans (k=5, deterministic first-k init) over embeddings;
     returns per-vector cluster labels."""
@@ -52,7 +44,7 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("kmeans_elbow")  # rows-only (iterative)
+@register("kmeans_elbow")  # rows-only (iterative)
 def kmeans_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A11's k-selection input: inertia per k (the reference picks k at
     the elbow `[U: upstream analysis KMeans]`)."""
@@ -101,7 +93,7 @@ def _kmeans_fixed_sql() -> str:
     """
 
 
-@_register("kmeans_assign_fixed", _kmeans_fixed_sql())
+@register("kmeans_assign_fixed", _kmeans_fixed_sql())
 def kmeans_assign_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A11's assignment step with FIXED centers (the embeddings of
     vec_id 0..k-1 — exactly the deterministic first-k init): argmin
@@ -162,7 +154,7 @@ def _pca_fixed_sql() -> str:
     """
 
 
-@_register("pca_project_fixed", _pca_fixed_sql())
+@register("pca_project_fixed", _pca_fixed_sql())
 def pca_project_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10's projection step with FIXED integer components (the same
     portable-hash-derived planes the LSH signatures use): exact-decimal

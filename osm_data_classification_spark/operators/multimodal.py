@@ -26,17 +26,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import load_table
-from .relational import QuerySpec
+from .relational import QuerySpec, register
 
 CATALOG: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, sql=None):
-    def deco(fn):
-        CATALOG[name] = QuerySpec(fn, sql)
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -44,7 +36,7 @@ def _register(name: str, sql=None):
 # ---------------------------------------------------------------------------
 
 
-@_register(
+@register(
     "mm_binary_meta",
     """
     SELECT doc_id,
@@ -159,7 +151,7 @@ _DECODE_SQL = f"""
 """
 
 
-@_register("mm_decode_features", _DECODE_SQL)
+@register("mm_decode_features", _DECODE_SQL)
 def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
@@ -239,7 +231,7 @@ _FRAMES_SQL = f"""
 """
 
 
-@_register("mm_frame_sample", _FRAMES_SQL)
+@register("mm_frame_sample", _FRAMES_SQL)
 def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL oracle: the frame schedule (evenly-spaced indices) and the
     per-frame md5 are pure byte arithmetic, so DuckDB reproduces them
@@ -281,7 +273,7 @@ _SCENE_SQL = f"""
 """
 
 
-@_register("mm_scene_cut", _SCENE_SQL)
+@register("mm_scene_cut", _SCENE_SQL)
 def mm_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scene-cut detection — the video-pipeline step after frame
     sampling: adjacent sampled frames are compared by a per-frame

@@ -24,17 +24,9 @@ from pyspark.sql.window import Window
 
 from .. import features as feats
 from ..io import load_table
-from .relational import QuerySpec
+from .relational import QuerySpec, register
 
 CATALOG: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, sql=None):
-    def deco(fn):
-        CATALOG[name] = QuerySpec(fn, sql)
-        return fn
-
-    return deco
 
 
 EDITOR_MAP = {
@@ -101,7 +93,7 @@ def history_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EPOCH = "CAST(floor(epoch({c})) AS BIGINT)"
 
 
-@_register(
+@register(
     "ref_element_metadata",
     f"""
     WITH {HISTORY_SQL},
@@ -137,7 +129,7 @@ def ref_element_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.element_metadata(history_from_events(spark, sf_dir))
 
 
-@_register(
+@register(
     "ref_changeset_metadata",
     f"""
     WITH {HISTORY_SQL},
@@ -166,7 +158,7 @@ def ref_changeset_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.changeset_metadata(feats.enrich_history(hist))
 
 
-@_register(
+@register(
     "ref_user_features",
     f"""
     WITH {HISTORY_SQL},
@@ -232,7 +224,7 @@ def ref_user_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.user_metadata(feats.enrich_history(hist))
 
 
-@_register(
+@register(
     "ref_editor_topk",
     f"""
     WITH {HISTORY_SQL},

@@ -25,6 +25,7 @@ results regardless of partitioning. See :func:`dsum` / :data:`DSUM`.
 
 from __future__ import annotations
 
+import sys
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -44,9 +45,13 @@ class QuerySpec:
 CATALOG: dict[str, QuerySpec] = {}
 
 
-def register(name: str, sql: Optional[str]):
+def register(name: str, sql: Optional[str] = None):
+    """Decorator: file ``fn`` as catalog entry ``name`` in the CATALOG
+    of the module that defines it — every operator module keeps its own
+    CATALOG, which :mod:`..catalog` merges in declaration order."""
+
     def deco(fn):
-        CATALOG[name] = QuerySpec(fn, sql)
+        sys.modules[fn.__module__].CATALOG[name] = QuerySpec(fn, sql)
         return fn
 
     return deco

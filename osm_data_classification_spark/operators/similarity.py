@@ -22,17 +22,9 @@ from pyspark.sql.window import Window
 
 from ..io import load_table
 from .portable import DEC_SUM_PROD, dec_dot_col
-from .relational import QuerySpec
+from .relational import QuerySpec, register
 
 CATALOG: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, sql=None):
-    def deco(fn):
-        CATALOG[name] = QuerySpec(fn, sql)
-        return fn
-
-    return deco
 
 
 N_QUERIES = 10  # probe set: vec_id < 10
@@ -118,7 +110,7 @@ _RANK_SQL = f"""
 # ---------------------------------------------------------------------------
 
 
-@_register(
+@register(
     "ann_cosine_topk",
     f"""
     WITH pairs AS (
@@ -232,7 +224,7 @@ def _signatures(spark: SparkSession, emb: DataFrame) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "ann_lsh_bucketed",
     f"""
     WITH {_SIG_SQL},
@@ -275,7 +267,7 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_register(
+@register(
     "ann_ivf_topk",
     f"""
     WITH cent AS (
@@ -405,7 +397,7 @@ FROM c
 """
 
 
-@_register("embed_quantize_int8", _QUANT_DUCK)
+@register("embed_quantize_int8", _QUANT_DUCK)
 def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric per-vector int8 quantization of the embedding column
     — the compression step between dense float32 vectors and a
@@ -485,7 +477,7 @@ def _codes_list_sql(alias: str) -> str:
     )
 
 
-@_register(
+@register(
     "ann_int8_topk",
     f"""
     WITH raw AS ({_CODES_SQL}),
@@ -573,7 +565,7 @@ def _drift_sql() -> str:
     """
 
 
-@_register("embed_drift_centroid", _drift_sql())
+@register("embed_drift_centroid", _drift_sql())
 def embed_drift_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-drift monitor: per-label centroid numerators over the
     first 4 dimensions, each component floored to x1e6 integer units
@@ -672,7 +664,7 @@ def _dec_l2sq(x, y):
     )
 
 
-@_register("ann_pq_topk", _pq_sql())
+@register("ann_pq_topk", _pq_sql())
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization top-k — the last rung of the ANN ladder
     (exact → LSH → IVF → int8 → PQ): vectors are split into M=8
@@ -795,7 +787,7 @@ def _mrl_sql() -> str:
     """
 
 
-@_register("embed_matryoshka_topk", _mrl_sql())
+@register("embed_matryoshka_topk", _mrl_sql())
 def embed_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka-truncation retrieval audit — the measurement behind
     the "can we serve the 16-dim prefix instead of the full vector?"
@@ -1008,7 +1000,7 @@ def pq_train_codebook(subs: DataFrame, iters: int = _PQT_ITERS) -> DataFrame:
     return cent
 
 
-@_register("ann_pq_trained", _pqt_sql())
+@register("ann_pq_trained", _pqt_sql())
 def ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained-codebook PQ top-k (r4 VERDICT #6): ann_pq_topk's
     data-defined codebook sidesteps k-means nondeterminism, but a real

@@ -16,21 +16,13 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..sources.pages import synth_pages
-from .relational import QuerySpec
+from .relational import QuerySpec, register
 from .skew import salted_join
 
 CATALOG: dict[str, QuerySpec] = {}
 
 
-def _register(name: str, sql=None):
-    def deco(fn):
-        CATALOG[name] = QuerySpec(fn, sql)
-        return fn
-
-    return deco
-
-
-@_register(
+@register(
     "skew_salted_join",
     """
     WITH dim AS (
@@ -94,7 +86,7 @@ def _extract_sql() -> str:
     """
 
 
-@_register("pages_text_extract", _extract_sql())
+@register("pages_text_extract", _extract_sql())
 def pages_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 + the per-row invariant: extract text from every crawl of
     every url and assert byte-identity per url (BASELINE.json:6). The
@@ -134,7 +126,7 @@ def _host_agg_sql() -> str:
     """
 
 
-@_register("host_agg", _host_agg_sql())
+@register("host_agg", _host_agg_sql())
 def host_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-host crawl rollup — the domain-level view every crawl
     pipeline maintains (politeness budgets, per-domain quality priors,
@@ -192,7 +184,7 @@ def _host_cap_sql() -> str:
     """
 
 
-@_register("sample_host_cap", _host_cap_sql())
+@register("sample_host_cap", _host_cap_sql())
 def sample_host_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-host document cap — the anti-domination step C4/RefinedWeb-
     style corpora apply so no single domain floods the training mix:
@@ -256,7 +248,7 @@ def _snapshot_coverage_sql() -> str:
     """
 
 
-@_register("crawl_snapshot_coverage", _snapshot_coverage_sql())
+@register("crawl_snapshot_coverage", _snapshot_coverage_sql())
 def crawl_snapshot_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl-freshness delta report — the coverage dashboard an
     incremental crawl runs after every snapshot: per host, how many
@@ -322,7 +314,7 @@ def _budget_sql() -> str:
     """
 
 
-@_register("crawl_budget_allocate", _budget_sql())
+@register("crawl_budget_allocate", _budget_sql())
 def crawl_budget_allocate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-host crawl BYTE budget — the prefix-sum companion to
     sample_host_cap's count cap: each host fetches documents in

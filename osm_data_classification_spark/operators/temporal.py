@@ -11,17 +11,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import load_table
-from .relational import QuerySpec
+from .relational import QuerySpec, register
 
 CATALOG: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, sql=None):
-    def deco(fn):
-        CATALOG[name] = QuerySpec(fn, sql)
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -75,7 +67,7 @@ def asof_join(
     return out.select(*sel)
 
 
-@_register(
+@register(
     "asof_join_purchase_view",
     """
     SELECT p.event_id,
@@ -109,7 +101,7 @@ def asof_join_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_register(
+@register(
     "cube_user_type",
     """
     SELECT user_id, event_type, count(*) AS n
@@ -128,7 +120,7 @@ def cube_user_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_register(
+@register(
     "window_rank_family",
     """
     SELECT event_id,
@@ -172,7 +164,7 @@ def window_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
 WINDOW_H = 4
 
 
-@_register(
+@register(
     "interval_join_bucketed",
     f"""
     WITH incidents AS (
@@ -232,7 +224,7 @@ def interval_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_register(
+@register(
     "dedup_keep_latest",
     """
     SELECT event_id, user_id, ts, value FROM (
@@ -256,7 +248,7 @@ def dedup_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "null_handling_fill",
     """
     WITH sparse AS (
@@ -307,7 +299,7 @@ def null_handling_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RANGE_SECONDS = 3600  # trailing 1h, inclusive frame bounds
 
 
-@_register(
+@register(
     "window_range_trailing_sum",
     f"""
     SELECT event_id, user_id, ts,
@@ -356,7 +348,7 @@ def window_range_trailing_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SESSION_GAP_S = 1800  # 30 min
 
 
-@_register(
+@register(
     "sessionize_events",
     f"""
     WITH marked AS (
@@ -431,7 +423,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_register(
+@register(
     "funnel_conversion",
     """
     WITH stages AS (
@@ -502,7 +494,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_register(
+@register(
     "cohort_retention",
     """
     WITH weekly AS (
@@ -555,7 +547,7 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_register(
+@register(
     "events_markov_transitions",
     """
     WITH seq AS (
@@ -594,7 +586,7 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_register(
+@register(
     "events_active_users",
     """
     WITH days AS (
@@ -657,7 +649,7 @@ def events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_register(
+@register(
     "events_anomaly_mad",
     """
     WITH daily AS (

@@ -22,17 +22,9 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from .portable import PHASH, phash_col
-from .relational import QuerySpec
+from .relational import QuerySpec, register
 
 CATALOG: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, sql=None):
-    def deco(fn):
-        CATALOG[name] = QuerySpec(fn, sql)
-        return fn
-
-    return deco
 
 
 def tokens_col(text):
@@ -55,7 +47,7 @@ STOPWORDS = ("the", "a", "of", "and")  # tiny fixed list, shared with SQL
 # ---------------------------------------------------------------------------
 
 
-@_register(
+@register(
     "text_token_count",
     f"""
     SELECT doc_id,
@@ -91,7 +83,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STOP_IN = ", ".join(f"'{w}'" for w in STOPWORDS)
 
 
-@_register(
+@register(
     "text_quality_score",
     f"""
     WITH tok AS (
@@ -192,7 +184,7 @@ def _lang_sql() -> str:
     """
 
 
-@_register("text_lang_id", _lang_sql())
+@register("text_lang_id", _lang_sql())
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language ID by marker-token (stopword-profile) scoring with a
     fixed argmax tie-break — the n-gram-heuristic shape of fastText-style
@@ -221,7 +213,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CANON_SQL = "lower(regexp_replace(text, '\\s+', ' ', 'g'))"
 
 
-@_register(
+@register(
     "text_fingerprint",
     f"""
     SELECT doc_id,
@@ -280,7 +272,7 @@ def _embed_sql() -> str:
     """
 
 
-@_register("text_hash_embedding", _embed_sql())
+@register("text_hash_embedding", _embed_sql())
 def text_hash_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-hashing vectorizer: tokens hashed into HASH_DIM buckets,
     counts l2-normalized — text → embedding entirely in the engine, so
@@ -328,7 +320,7 @@ def _split_sql() -> str:
     """
 
 
-@_register("sample_hash_split", _split_sql())
+@register("sample_hash_split", _split_sql())
 def sample_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic train/val/test split (90/5/5) by portable hash of
     the document id — the reproducible-split primitive every training
@@ -375,7 +367,7 @@ def _global_shuffle_sql() -> str:
     """
 
 
-@_register("sample_global_shuffle", _global_shuffle_sql())
+@register("sample_global_shuffle", _global_shuffle_sql())
 def sample_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic global shuffle for training export: each document
     gets a permuted portable hash (pmix of phash — no rand(), so the
@@ -417,7 +409,7 @@ def sample_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_register(
+@register(
     "text_length_outliers",
     """
     WITH med AS (

@@ -40,17 +40,9 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from .portable import PHASH, phash_col
-from .relational import QuerySpec
+from .relational import QuerySpec, register
 
 CATALOG: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, sql=None):
-    def deco(fn):
-        CATALOG[name] = QuerySpec(fn, sql)
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -81,7 +73,7 @@ FROM ids
 """
 
 
-@_register("text_chunk_tokens", _CHUNK_DUCK)
+@register("text_chunk_tokens", _CHUNK_DUCK)
 def text_chunk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-stride overlapping token chunking: chunk i of a document
     covers tokens [i*STRIDE, i*STRIDE+CHUNK) — a 32-token window every
@@ -141,7 +133,7 @@ FROM counted
 """
 
 
-@_register("sample_pack_sequences", _PACK_DUCK)
+@register("sample_pack_sequences", _PACK_DUCK)
 def sample_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concat-and-split sequence packing: documents are concatenated
     in doc_id order into one logical token stream cut into CTX-token
@@ -234,7 +226,7 @@ FROM s
 """
 
 
-@_register("sample_mix_weights", _MIX_DUCK)
+@register("sample_mix_weights", _MIX_DUCK)
 def sample_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-based language mixing weights (alpha = 0.5): per
     language, the corpus share a pretraining dataloader should draw —
@@ -322,7 +314,7 @@ FROM kept GROUP BY lang
 """
 
 
-@_register("curate_mix_apply", _MIX_APPLY_DUCK)
+@register("curate_mix_apply", _MIX_APPLY_DUCK)
 def curate_mix_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sample_mix_weights applied end-to-end: per-language keep rates
     derived from the measured corpus (downsample head languages toward
@@ -382,7 +374,7 @@ _BPE_PAIRS_SQL = """
 """
 
 
-@_register("bpe_pair_counts", _BPE_PAIRS_SQL)
+@register("bpe_pair_counts", _BPE_PAIRS_SQL)
 def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The inner loop of BPE tokenizer training, distributed:
     frequency of every adjacent character pair across all corpus
@@ -437,7 +429,7 @@ _BPE_MERGE_SQL = f"""
 """
 
 
-@_register("bpe_apply_merge", _BPE_MERGE_SQL)
+@register("bpe_apply_merge", _BPE_MERGE_SQL)
 def bpe_apply_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One BPE merge step applied corpus-wide: take the argmax pair
     from bpe_pair_counts (deterministic tie-break: count desc, then

@@ -18,20 +18,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table, snapshot_read, snapshot_write, upsert
-from .relational import QuerySpec
+from .relational import QuerySpec, register
 
 CATALOG: dict[str, QuerySpec] = {}
 
 
-def _register(name: str, sql=None):
-    def deco(fn):
-        CATALOG[name] = QuerySpec(fn, sql)
-        return fn
-
-    return deco
-
-
-@_register(
+@register(
     "table_snapshot_merge",
     """
     SELECT doc_id,
@@ -112,7 +104,7 @@ def table_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(base, ignore_errors=True)
 
 
-@_register(
+@register(
     "table_schema_evolution",
     """
     SELECT doc_id, lang,

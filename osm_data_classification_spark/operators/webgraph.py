@@ -22,17 +22,9 @@ from pyspark.sql import functions as F
 
 from ..geo.cells_sql import PAGES_SQL
 from ..sources.pages import N_HOSTS, synth_pages
-from .relational import QuerySpec
+from .relational import QuerySpec, register
 
 CATALOG: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, sql=None):
-    def deco(fn):
-        CATALOG[name] = QuerySpec(fn, sql)
-        return fn
-
-    return deco
 
 
 _HREF_RE = r'href="([^"]+)"'
@@ -63,7 +55,7 @@ def _outlinks_sql() -> str:
     """
 
 
-@_register("webgraph_outlinks", _outlinks_sql())
+@register("webgraph_outlinks", _outlinks_sql())
 def webgraph_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Outlink extraction: decode the binary html, pull every
     ``href="…"`` with one JVM regexp_extract_all, posexplode to
@@ -106,7 +98,7 @@ def _host_degree_sql() -> str:
     """
 
 
-@_register("webgraph_host_degree", _host_degree_sql())
+@register("webgraph_host_degree", _host_degree_sql())
 def webgraph_host_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Host-level weighted edge list: parse outlinks, dedupe re-crawls
     (a url's links are identical across crawls, so DISTINCT url first
@@ -160,7 +152,7 @@ def _frontier_sql() -> str:
     """
 
 
-@_register("crawl_frontier_schedule", _frontier_sql())
+@register("crawl_frontier_schedule", _frontier_sql())
 def crawl_frontier_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Politeness-scheduled crawl frontier: the distinct url set is
     ordered within each host by a portable hash (fair, deterministic,
@@ -220,7 +212,7 @@ def _recrawl_sql() -> str:
     """
 
 
-@_register("crawl_recrawl_priority", _recrawl_sql())
+@register("crawl_recrawl_priority", _recrawl_sql())
 def crawl_recrawl_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recrawl prioritization: staleness (whole days between the
     url's last crawl and the fixed scheduling epoch) weighted by
@@ -275,7 +267,7 @@ def _warc_sql() -> str:
     """
 
 
-@_register("warc_roundtrip_parse", _warc_sql())
+@register("warc_roundtrip_parse", _warc_sql())
 def warc_roundtrip_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC framing round-trip (sources/warc.py): serialize every
     crawl into a framed header+payload record, then PARSE the record
@@ -338,7 +330,7 @@ def _gini_sql() -> str:
     """
 
 
-@_register("crawl_host_gini", _gini_sql())
+@register("crawl_host_gini", _gini_sql())
 def crawl_host_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl-balance audit: the Gini coefficient of pages-per-host in
     parts-per-million — 0 = perfectly even crawl, →1e6 = one mega
@@ -399,7 +391,7 @@ def _robots_sql() -> str:
     """
 
 
-@_register("crawl_robots_filter", _robots_sql())
+@register("crawl_robots_filter", _robots_sql())
 def crawl_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """robots.txt enforcement over the frontier: a per-host rules
     table (synthesized — every 5th host disallows one /p/<digit>
@@ -487,7 +479,7 @@ def _coupling_sql() -> str:
     """
 
 
-@_register("webgraph_host_coupling", _coupling_sql())
+@register("webgraph_host_coupling", _coupling_sql())
 def webgraph_host_coupling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bibliographic coupling over the host graph: two hosts are
     similar when their OUT-link sets overlap (Jaccard ≥ 20%) — the

@@ -45,17 +45,9 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from .portable import PHASH, phash_col
-from .relational import QuerySpec
+from .relational import QuerySpec, register
 
 CATALOG: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, sql=None):
-    def deco(fn):
-        CATALOG[name] = QuerySpec(fn, sql)
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -191,7 +183,7 @@ SELECT doc_id, url_raw, host, url_canon FROM norm
 """
 
 
-@_register("url_canonicalize", _CANON_DUCK)
+@register("url_canonicalize", _CANON_DUCK)
 def url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL canonicalization over deterministically-synthesized messy
     variants (case noise, `www.`, default ports, `utm_*` params,
@@ -234,7 +226,7 @@ FROM cnt GROUP BY doc_id
 """
 
 
-@_register("text_repetition_metrics", _REP_DUCK)
+@register("text_repetition_metrics", _REP_DUCK)
 def text_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition signals per document: duplicate-bigram
     fraction (occurrences beyond each bigram's first) and the share of
@@ -311,7 +303,7 @@ def _para_duck() -> str:
     """
 
 
-@_register("dedup_paragraph_global", _para_duck())
+@register("dedup_paragraph_global", _para_duck())
 def dedup_paragraph_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style global paragraph dedup: documents are segmented
     into fixed 8-token chunks (the paragraph stand-in — documents.text
@@ -383,7 +375,7 @@ FROM norm GROUP BY url_canon
 """
 
 
-@_register("dedup_url_canonical", _DEDUP_URL_DUCK)
+@register("dedup_url_canonical", _DEDUP_URL_DUCK)
 def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL-level dedup keyed on the CANONICAL url — the crawl-frontier
     collapse step: four noisy raw variants per page (base id = doc_id
@@ -446,7 +438,7 @@ FROM dirty
 """
 
 
-@_register("text_pii_scrub", _PII_DUCK)
+@register("text_pii_scrub", _PII_DUCK)
 def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction — the compliance pass every web corpus runs
     before training: emails, phone-shaped tokens, and internal IPs
@@ -500,7 +492,7 @@ def _strata_sql() -> str:
     """
 
 
-@_register("sample_stratified", _strata_sql())
+@register("sample_stratified", _strata_sql())
 def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified sampling with per-language keep rates — the
     language-balancing pass of corpus assembly. Deterministic: a doc
@@ -730,7 +722,7 @@ def curate_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     }
 
 
-@_register("curate_corpus_funnel", _funnel_duck())
+@register("curate_corpus_funnel", _funnel_duck())
 def curate_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The END-TO-END curation funnel — the pipeline a training-data
     team actually runs, composed from this module's operators in
@@ -836,7 +828,7 @@ def curate_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("dedup_decontaminate", _decon_duck())
+@register("dedup_decontaminate", _decon_duck())
 def dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination — the pass that keeps eval data out
     of the training corpus: flag every corpus document sharing at
@@ -938,7 +930,7 @@ def _host_boilerplate_sql() -> str:
     """
 
 
-@_register("webtext_host_boilerplate", _host_boilerplate_sql())
+@register("webtext_host_boilerplate", _host_boilerplate_sql())
 def webtext_host_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HOST-SCOPED boilerplate line removal — the CCNet/trafilatura
     step dedup_paragraph_global (global, count>1) cannot express: a

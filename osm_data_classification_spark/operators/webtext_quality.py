@@ -48,18 +48,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from .relational import QuerySpec
+from .relational import QuerySpec, register
 from .text import STOPWORDS as _GOPHER_STOPWORDS
 
 CATALOG: dict[str, QuerySpec] = {}
-
-
-def _register(name: str, sql=None):
-    def deco(fn):
-        CATALOG[name] = QuerySpec(fn, sql)
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -116,7 +108,7 @@ FROM kept
 """
 
 
-@_register("text_line_filter", _LINE_DUCK)
+@register("text_line_filter", _LINE_DUCK)
 def text_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style line filtering: pages are split into lines
     (synthesized deterministically from doc_id — boilerplate lines,
@@ -206,7 +198,7 @@ def _nfc_udf():
     return F.pandas_udf(_nfc, "string")
 
 
-@_register("text_normalize_unicode", _NFC_DUCK)
+@register("text_normalize_unicode", _NFC_DUCK)
 def text_normalize_unicode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unicode NFC normalization — the canonicalization pass run
     before any hashing/dedup so that composed and decomposed accent
@@ -273,7 +265,7 @@ FROM ranked WHERE rank <= {TOPK_TERMS}
 """
 
 
-@_register("text_tfidf_topterms", _TFIDF_DUCK)
+@register("text_tfidf_topterms", _TFIDF_DUCK)
 def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document TF-IDF keyword extraction: top-3 terms per doc
     ranked by term frequency, with global document frequency as the
@@ -367,7 +359,7 @@ def rarity_dirty_text(doc_id, text):
     )
 
 
-@_register("text_rarity_score", _RARITY_DUCK)
+@register("text_rarity_score", _RARITY_DUCK)
 def text_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level token rarity per document — the integer-exact
     proxy for CCNet's LM-perplexity bucket: documents dominated by
@@ -498,7 +490,7 @@ FROM m
 """
 
 
-@_register("gopher_quality_filter", _GOPHER_DUCK)
+@register("gopher_quality_filter", _GOPHER_DUCK)
 def gopher_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-rules composite document filter: word-count bounds,
     mean word length in [3,10] (x100 integer), symbol-to-word ratio

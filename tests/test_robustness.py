@@ -295,7 +295,7 @@ def test_priority_window_matches_generator():
     assert proc.returncode == 0, proc.stdout + proc.stderr
 
 
-def test_priority_check_survives_future_driver_grade(tmp_path):
+def test_priority_check_survives_future_driver_grade(tmp_path, monkeypatch):
     """r4 VERDICT "What's wrong" #1: the unstamped --check regenerated
     from ALL grade files on disk, so the driver depositing
     CORRECTNESS_r{N}.json AFTER the builder's final commit reddened CI
@@ -306,12 +306,20 @@ def test_priority_check_survives_future_driver_grade(tmp_path):
     fabricated future-round grade file, and assert the stamped
     regeneration is UNCHANGED while the stampless (next-window)
     generation DOES see the new round."""
+    import glob
     import importlib.util
     import json as _json
+    import shutil
 
     spec = importlib.util.spec_from_file_location("gen_priority", GEN_PRIORITY)
     gp = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(gp)
+
+    for path in glob.glob(os.path.join(gp.ROOT, "CORRECTNESS_r*.json")):
+        shutil.copy(path, tmp_path)
+    catalog_py = shutil.copy(gp.CATALOG_PY, tmp_path)
+    monkeypatch.setattr(gp, "ROOT", str(tmp_path))
+    monkeypatch.setattr(gp, "CATALOG_PY", catalog_py)
 
     stamped = gp.stamped_rounds()
     before, _ = gp.generate(stamped)
@@ -320,18 +328,15 @@ def test_priority_check_survives_future_driver_grade(tmp_path):
     # deposit a fabricated future grade file in ROOT, regenerate both ways
     fake = os.path.join(gp.ROOT, "CORRECTNESS_r98.json")
     assert not os.path.exists(fake)
-    try:
-        with open(fake, "w") as f:
-            _json.dump({before[-1]: {"rows_match": True}}, f)
-        # stamped replay: identical — the driver deposit cannot redden CI
-        replay, _ = gp.generate(stamped)
-        assert replay == before
-        # stampless (next-window) generation DOES incorporate the new
-        # round: before[-1] is a refill regrade, now freshly r98-graded,
-        # so it must yield its slot to a staler entry
-        nxt, _ = gp.generate(None)
-        assert 98 in gp.available_rounds()
-        assert nxt != before
-        assert before[-1] not in nxt
-    finally:
-        os.remove(fake)
+    with open(fake, "w") as f:
+        _json.dump({before[-1]: {"rows_match": True}}, f)
+    # stamped replay: identical — the driver deposit cannot redden CI
+    replay, _ = gp.generate(stamped)
+    assert replay == before
+    # stampless (next-window) generation DOES incorporate the new
+    # round: before[-1] is a refill regrade, now freshly r98-graded,
+    # so it must yield its slot to a staler entry
+    nxt, _ = gp.generate(None)
+    assert 98 in gp.available_rounds()
+    assert nxt != before
+    assert before[-1] not in nxt
