@@ -330,7 +330,7 @@ def test_priority_check_survives_future_driver_grade(tmp_path, monkeypatch):
     assert not os.path.exists(fake)
     with open(fake, "w") as f:
         _json.dump({before[-1]: {"rows_match": True}}, f)
-    # stamped replay: identical — the driver deposit cannot redden CI
+    # stamped replay: identical — a later grade file cannot redden CI
     replay, _ = gp.generate(stamped)
     assert replay == before
     # stampless (next-window) generation DOES incorporate the new
