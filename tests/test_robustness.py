@@ -248,6 +248,27 @@ def test_catalog_queries_survive_empty_input(spark, tmp_path_factory):
         assert df.count() == 0, f"{name} produced rows from empty input"
 
 
+def test_staging_entries_leave_no_temp_files(spark, sf_dir, tmp_path, monkeypatch):
+    """The catalog entries that stage parquet files for a real stream
+    or a warehouse table must delete every temp dir they make, and
+    their result must not read from one: it is still counted after the
+    entry has returned."""
+    import tempfile
+
+    from osm_data_classification_spark.catalog import full_catalog
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    cat = full_catalog()
+    for name in (
+        "stream_dedup_recrawl", "stream_watermark_late_drop",
+        "stream_session_dwell", "stream_stream_join",
+        "stream_stream_left_join", "stream_tile_ladder",
+        "table_snapshot_merge", "table_schema_evolution",
+    ):
+        cat[name].fn(spark, sf_dir).count()
+    assert os.listdir(tmp_path) == []
+
+
 def test_ungeocodable_pages_dropped_not_null_tiled(spark):
     """A page with no place token must geocode to NULL and be dropped
     at the source — never become a NULL-cell tile group."""
