@@ -1,8 +1,8 @@
 """Benchmark harness (driver contract).
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line::
+/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default: every
+core, ``os.cpu_count()``) and prints ONE JSON line::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -22,7 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
 # fan-out factor for the synthesized pages table (sf0.1 documents ~5k
 # rows -> 7.5M pages at 1000x incl. crawl chains); large enough that
 # flagship throughput is measured in the compute-bound regime, not the

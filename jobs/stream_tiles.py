@@ -27,7 +27,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from osm_data_classification_spark.session import get_spark  # noqa: E402
 from osm_data_classification_spark.streaming.pipeline import (  # noqa: E402
-    merge_tile_partials,
     partials_batch_writer,
 )
 
@@ -63,13 +62,17 @@ def main() -> None:
     )
     q.awaitTermination()
 
-    from osm_data_classification_spark.operators.geo_ops import tile_ladder
+    from osm_data_classification_spark.operators.geo_ops import (
+        tile_ladder,
+        tile_rollup,
+    )
 
     # batch_id is a partition column: replayed epochs were already
     # REPLACED at write time (dynamic partition overwrite in
     # partials_batch_writer), so the compaction just drops it.
     partials = spark.read.parquet(args.partials).drop("batch_id")
-    ladder = tile_ladder(merge_tile_partials(partials), args.res, args.bottom)
+    merged = tile_rollup(partials, args.res, args.res)
+    ladder = tile_ladder(merged, args.res, args.bottom)
     ladder.write.mode("overwrite").partitionBy("res").parquet(args.out)
     n = spark.read.parquet(args.out).count()
     print(f"wrote {n} ladder rows (res {args.res}..{args.bottom}) to {args.out}")

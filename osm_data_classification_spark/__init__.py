@@ -14,7 +14,7 @@ DataFrame engine, lifted to web scale per BASELINE.json:6:
 - ray-casting point-in-polygon joins against broadcast packed
   boundary indexes (:mod:`.geo.pip`, :mod:`.operators.geo_ops`),
 - grid-partitioned kNN with cross-cell border expansion
-  (:mod:`.geo.knn`, :mod:`.operators.geo_ops`),
+  (:mod:`.operators.geo_ops`),
 - raster↔vector tile aggregation + resolution-ladder rollups
   (:mod:`.operators.geo_ops`),
 - the reference's analytics chain: version-chain enrichment,

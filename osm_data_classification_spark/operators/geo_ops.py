@@ -532,7 +532,9 @@ def tile_rollup(tiles: DataFrame, child_res: int, parent_res: int) -> DataFrame:
     arithmetic (no re-scan of the fact table). Distinct-count columns
     (n_contributors, n_urls) are NOT additive and are dropped —
     recompute them from pages via :func:`tile_aggregate` at the parent
-    res when exact values are needed (or carry an HLL sketch at scale)."""
+    res when exact values are needed (or carry an HLL sketch at scale).
+    With ``parent_res == child_res`` it merges partial tiles of the
+    same cells, e.g. the per-batch partials of the streaming rollup."""
     parent = cell_parent_col(F.col("cell"), child_res, parent_res).alias("cell")
     add_cols = [
         c

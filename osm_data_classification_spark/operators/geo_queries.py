@@ -32,6 +32,7 @@ from ..operators.geo_ops import (
     pip_join,
     tile_aggregate,
     tile_ladder,
+    tile_rollup,
 )
 from ..operators.relational import QuerySpec, register
 from ..sources.boundaries import packed_boundaries
@@ -304,23 +305,20 @@ def stream_tile_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch incremental rollup END-TO-END — pages written as 4
     parquet files, streamed with maxFilesPerTrigger=1 under
     trigger(availableNow) through the partials writer (dynamic
-    partition overwrite per epoch), then compacted (merge partials)
-    and rolled down the 9→5 resolution ladder. FULL oracle: DuckDB
-    re-synthesizes the pages and rolls the same ladder in one batch
-    pass — equality is the associativity contract that makes
-    incremental tiling correct, now driver-value-hashed every round
-    rather than only pinned by tests/test_streaming.py."""
+    partition overwrite per epoch), then compacted (a same-res
+    tile_rollup merges the per-batch partials) and rolled down the
+    9→5 resolution ladder. FULL oracle: DuckDB re-synthesizes the
+    pages and rolls the same ladder in one batch pass — equality is
+    the associativity contract that makes incremental tiling correct,
+    now driver-value-hashed every round rather than only pinned by
+    tests/test_streaming.py."""
     import shutil
     import tempfile
 
     from pyspark.errors import AnalysisException
 
     from ..sources.pages import synth_pages
-    from ..streaming.pipeline import (
-        merge_tile_partials,
-        partials_batch_writer,
-        tile_partials,
-    )
+    from ..streaming.pipeline import partials_batch_writer, tile_partials
 
     src = tempfile.mkdtemp(prefix="cat_stream_src_")
     ckpt = tempfile.mkdtemp(prefix="cat_stream_ckpt_")
@@ -366,7 +364,8 @@ def stream_tile_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(partials_parent, ignore_errors=True)
-    return _flatten_hist(tile_ladder(merge_tile_partials(partials), 9, 5))
+    merged = tile_rollup(partials, 9, 9)
+    return _flatten_hist(tile_ladder(merged, 9, 5))
 
 
 _TILE_COLS = (

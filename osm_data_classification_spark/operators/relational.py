@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import load_table
+from ..streaming.pipeline import replay, stream_dedup
 
 
 @dataclass(frozen=True)
@@ -960,7 +961,8 @@ def array_l2_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_tumbling_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.9 tumbling event-time window. Uses window() so the identical
-    plan runs under readStream + withWatermark (streaming/jobs.py)."""
+    plan runs under readStream + withWatermark
+    (streaming/pipeline.py:tumbling_daily)."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 day").alias("w"))
@@ -1057,9 +1059,9 @@ def stream_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_dedup_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.9 stateful streaming dedup END-TO-END under a real
     multi-batch stream (the url-re-crawl dedup analog): the events
-    table plus EXACT duplicate copies of every third event is written
-    as 4 files, streamed one file per micro-batch under
-    trigger(availableNow), deduped across batches with
+    table arrives in one micro-batch and EXACT duplicate copies of
+    every third event in the next (trigger(availableNow), one file per
+    micro-batch), deduped across batches with
     dropDuplicatesWithinWatermark(event_id) (watermark far past the
     data horizon, so no state eviction can race the replayed copies),
     and the surviving rows are aggregated per event type. The
@@ -1069,62 +1071,33 @@ def stream_dedup_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL oracle: DuckDB aggregates the ORIGINAL events directly; the
     stream passes only if the dedup removed exactly the injected
     copies, across whichever micro-batches they landed in."""
-    import shutil
-    import tempfile
-
-    from pyspark.errors import AnalysisException
-
-    from ..streaming.pipeline import EVENTS_SCHEMA, stream_dedup
-
     ev = load_table(spark, sf_dir, "events")
-    dup = ev.unionAll(ev.where(F.col("event_id") % 3 == 0))
-
-    src = tempfile.mkdtemp(prefix="cat_sdedup_src_")
-    ckpt = tempfile.mkdtemp(prefix="cat_sdedup_ckpt_")
-    sink_parent = tempfile.mkdtemp(prefix="cat_sdedup_sink_")
-    sink = sink_parent + "/out"
-    try:
-        dup.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream_dedup(stream, watermark="3650 days")
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        try:
-            survived = spark.read.parquet(sink)
-        except AnalysisException:
-            # zero input files -> no batch fires and the sink is never
-            # created; keep the 0-row contract with a detached empty
-            # frame (the stream_tile_ladder lesson)
-            survived = spark.createDataFrame([], ev.schema)
-        agg = survived.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("event_id").cast("long").alias("sum_event_id"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-        # the aggregate is |event_type| rows — localCheckpoint
-        # materializes it so the parquet sink dir can be deleted in
-        # the same finally instead of leaking per invocation (r3
-        # ADVICE); truncateExistingAncestorLineage-style laziness
-        # would keep a dangling read on the removed path
-        return agg.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink_parent, ignore_errors=True)
+    survived = replay(
+        spark,
+        {"events": [ev, ev.where(F.col("event_id") % 3 == 0)]},
+        lambda events: stream_dedup(events, watermark="3650 days"),
+    )
+    return survived.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum("event_id").cast("long").alias("sum_event_id"),
+        F.countDistinct("user_id").alias("n_users"),
+    )
 
 
 _WM_T1 = "2024-01-11 00:00:00"  # A/B arrival split (events span Jan 1-30)
 _WM_T2 = "2024-01-21 00:00:00"  # B/C split; C = late replays + fresh tail
+
+
+def _day_split(df: DataFrame) -> list[DataFrame]:
+    """The three arrival batches of the streaming entries: days 1–10,
+    11–20 and 21–30 of ``ts``, split at T1 and T2."""
+    t1 = F.lit(_WM_T1).cast("timestamp")
+    t2 = F.lit(_WM_T2).cast("timestamp")
+    return [
+        df.where(F.col("ts") < t1),
+        df.where((F.col("ts") >= t1) & (F.col("ts") < t2)),
+        df.where(F.col("ts") >= t2),
+    ]
 
 
 @register(
@@ -1180,88 +1153,31 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     (open windows × event types), never by input rows; the late filter
     is applied before state update, so replay storms cost a scan, not
     state growth."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.errors import AnalysisException
-
-    from ..streaming.pipeline import EVENTS_SCHEMA
-
     ev = load_table(spark, sf_dir, "events")
-    t1, t2 = F.lit(_WM_T1).cast("timestamp"), F.lit(_WM_T2).cast("timestamp")
-    arrivals = [
-        ev.where(F.col("ts") < t1),
-        ev.where((F.col("ts") >= t1) & (F.col("ts") < t2)),
-        ev.where(
-            (F.col("ts") < F.date_sub(t1, 1).cast("timestamp"))
-            & (F.col("event_id") % 7 == 0)
-        ).unionAll(ev.where(F.col("ts") >= t2)),
-    ]
-    src = tempfile.mkdtemp(prefix="cat_swm_src_")
-    ckpt = tempfile.mkdtemp(prefix="cat_swm_ckpt_")
-    sink_parent = tempfile.mkdtemp(prefix="cat_swm_sink_")
-    sink = sink_parent + "/out"
-    try:
-        # one parquet FILE per arrival batch; FileStreamSource takes
-        # files oldest-mtime-first, so explicit utimes pin the order
-        for i, batch in enumerate(arrivals):
-            stage = os.path.join(src, f"_stage{i}")
-            batch.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = next(
-                (f for f in os.listdir(stage) if f.endswith(".parquet")), None
-            )
-            if part is None:  # empty input at degenerate SFs
-                shutil.rmtree(stage)
-                continue
-            dst = os.path.join(src, f"batch{i}.parquet")
-            shutil.move(os.path.join(stage, part), dst)
-            shutil.rmtree(stage)
-            os.utime(dst, (1_700_000_000 + 100 * i, 1_700_000_000 + 100 * i))
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        agg = (
-            stream.withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum("event_id").cast("long").alias("sum_event_id"),
-                dsum(F.col("value")).alias("sum_value"),
-            )
-        )
-        q = (
-            agg.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        try:
-            emitted = spark.read.parquet(sink)
-        except AnalysisException:
-            # zero input files -> no batch fires, sink never created
-            emitted = spark.createDataFrame(
-                [],
-                "w struct<start:timestamp,end:timestamp>, event_type string,"
-                " n_events long, sum_event_id long, sum_value double",
-            )
-        out = emitted.select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd").alias("day"),
-            "event_type",
-            "n_events",
-            "sum_event_id",
-            "sum_value",
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink_parent, ignore_errors=True)
+    a, b, tail = _day_split(ev)
+    t1 = F.lit(_WM_T1).cast("timestamp")
+    late = ev.where(
+        (F.col("ts") < F.date_sub(t1, 1).cast("timestamp"))
+        & (F.col("event_id") % 7 == 0)
+    )
+    emitted = replay(
+        spark,
+        {"events": [a, b, late.unionAll(tail)]},
+        lambda events: events.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("event_id").cast("long").alias("sum_event_id"),
+            dsum(F.col("value")).alias("sum_value"),
+        ),
+    )
+    return emitted.select(
+        F.date_format(F.col("w.start"), "yyyy-MM-dd").alias("day"),
+        "event_type",
+        "n_events",
+        "sum_event_id",
+        "sum_value",
+    )
 
 
 _SESS_GAP = "2 days"      # session gap (events are sparse per user)
@@ -1326,84 +1242,62 @@ def stream_session_dwell(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: state is bounded by OPEN sessions (≤ active users),
     never input rows; the input is one pass, no pre-shuffle beyond
     the session-window aggregation's own exchange."""
-    import os
-    import shutil
-    import tempfile
+    emitted = replay(
+        spark,
+        {"events": _day_split(load_table(spark, sf_dir, "events"))},
+        lambda events: events.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", _SESS_GAP).alias("w"), "user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("event_id").cast("long").alias("sum_event_id"),
+        ),
+    )
+    return emitted.select(
+        "user_id",
+        ts_str(F.col("w.start")).alias("session_start"),
+        ts_str(F.col("w.end")).alias("session_end"),
+        "n_events",
+        "sum_event_id",
+    )
 
-    from pyspark.errors import AnalysisException
 
-    from ..streaming.pipeline import EVENTS_SCHEMA
+def _fetch_robots_join(
+    spark: SparkSession,
+    fetch: list[DataFrame],
+    robots: list[DataFrame],
+    how: str,
+) -> DataFrame:
+    """Replay the fetch and robots arrival batches as two 1h-watermarked
+    streams and interval-join them per host on ``robots_ts ∈
+    [fetch_ts − 2 days, fetch_ts]`` (the stream-stream join entries)."""
+    def side(s: DataFrame, prefix: str) -> DataFrame:
+        return s.select(
+            F.col("user_id"),
+            F.col("event_id").alias(f"{prefix}_id"),
+            F.col("ts").alias(f"{prefix}_ts"),
+        ).withWatermark(f"{prefix}_ts", "1 hour")
 
-    ev = load_table(spark, sf_dir, "events")
-    t1 = F.lit(_WM_T1).cast("timestamp")
-    t2 = F.lit(_WM_T2).cast("timestamp")
-    arrivals = [
-        ev.where(F.col("ts") < t1),
-        ev.where((F.col("ts") >= t1) & (F.col("ts") < t2)),
-        ev.where(F.col("ts") >= t2),
-    ]
-    src = tempfile.mkdtemp(prefix="cat_sess_src_")
-    ckpt = tempfile.mkdtemp(prefix="cat_sess_ckpt_")
-    sink_parent = tempfile.mkdtemp(prefix="cat_sess_sink_")
-    sink = sink_parent + "/out"
-    try:
-        for i, batch in enumerate(arrivals):
-            stage = os.path.join(src, f"_stage{i}")
-            batch.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = next(
-                (f for f in os.listdir(stage) if f.endswith(".parquet")), None
+    def join(fetch: DataFrame, robots: DataFrame) -> DataFrame:
+        r = side(robots, "robots").withColumnRenamed("user_id", "r_user_id")
+        return side(fetch, "fetch").join(
+            r,
+            (F.col("user_id") == F.col("r_user_id"))
+            & (
+                F.col("robots_ts")
+                >= F.col("fetch_ts") - F.expr("INTERVAL 2 DAYS")
             )
-            if part is None:
-                shutil.rmtree(stage)
-                continue
-            dst = os.path.join(src, f"batch{i}.parquet")
-            shutil.move(os.path.join(stage, part), dst)
-            shutil.rmtree(stage)
-            os.utime(dst, (1_700_000_000 + 100 * i, 1_700_000_000 + 100 * i))
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+            & (F.col("robots_ts") <= F.col("fetch_ts")),
+            how,
         )
-        agg = (
-            stream.withWatermark("ts", "1 hour")
-            .groupBy(
-                F.session_window("ts", _SESS_GAP).alias("w"), "user_id"
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum("event_id").cast("long").alias("sum_event_id"),
-            )
-        )
-        q = (
-            agg.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        try:
-            emitted = spark.read.parquet(sink)
-        except AnalysisException:
-            emitted = spark.createDataFrame(
-                [],
-                "w struct<start:timestamp,end:timestamp>, user_id long,"
-                " n_events long, sum_event_id long",
-            )
-        out = emitted.select(
-            "user_id",
-            ts_str(F.col("w.start")).alias("session_start"),
-            ts_str(F.col("w.end")).alias("session_end"),
-            "n_events",
-            "sum_event_id",
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink_parent, ignore_errors=True)
+
+    emitted = replay(spark, {"fetch": fetch, "robots": robots}, join)
+    return emitted.select(
+        "user_id",
+        "fetch_id",
+        "robots_id",
+        ts_str(F.col("fetch_ts")).alias("fetch_ts"),
+        ts_str(F.col("robots_ts")).alias("robots_ts"),
+    )
 
 
 @register(
@@ -1458,114 +1352,17 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     never by stream length); matches emit in the batch they are found,
     and the equi-key (user_id/host) partitions the state — the same
     plan a 100-TB recrawl pipeline runs continuously."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.errors import AnalysisException
-
-    from ..streaming.pipeline import EVENTS_SCHEMA
-
     ev = load_table(spark, sf_dir, "events")
-    t1 = F.lit(_WM_T1).cast("timestamp")
-    t2 = F.lit(_WM_T2).cast("timestamp")
     fetches = ev.where(F.col("event_id") % 2 == 0)
-    robots = ev.where(F.col("event_id") % 2 == 1)
+    t1 = F.lit(_WM_T1).cast("timestamp")
     late_replays = fetches.where(
         (F.col("ts") < F.date_sub(t1, 3).cast("timestamp"))
         & (F.col("event_id") % 14 == 0)
     )
-    sides = {
-        "fetch": [
-            fetches.where(F.col("ts") < t1),
-            fetches.where((F.col("ts") >= t1) & (F.col("ts") < t2)),
-            fetches.where(F.col("ts") >= t2).unionAll(late_replays),
-        ],
-        "robots": [
-            robots.where(F.col("ts") < t1),
-            robots.where((F.col("ts") >= t1) & (F.col("ts") < t2)),
-            robots.where(F.col("ts") >= t2),
-        ],
-    }
-    srcs = {k: tempfile.mkdtemp(prefix=f"cat_ssj_{k}_") for k in sides}
-    ckpt = tempfile.mkdtemp(prefix="cat_ssj_ckpt_")
-    sink_parent = tempfile.mkdtemp(prefix="cat_ssj_sink_")
-    sink = sink_parent + "/out"
-    try:
-        for k, batches in sides.items():
-            for i, batch in enumerate(batches):
-                stage = os.path.join(srcs[k], f"_stage{i}")
-                batch.coalesce(1).write.mode("overwrite").parquet(stage)
-                part = next(
-                    (f for f in os.listdir(stage) if f.endswith(".parquet")),
-                    None,
-                )
-                if part is None:
-                    shutil.rmtree(stage)
-                    continue
-                dst = os.path.join(srcs[k], f"batch{i}.parquet")
-                shutil.move(os.path.join(stage, part), dst)
-                shutil.rmtree(stage)
-                os.utime(
-                    dst, (1_700_000_000 + 100 * i, 1_700_000_000 + 100 * i)
-                )
-
-        def side_stream(key, prefix):
-            s = (
-                spark.readStream.schema(EVENTS_SCHEMA)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(srcs[key])
-            )
-            return s.select(
-                F.col("user_id"),
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
-            ).withWatermark(f"{prefix}_ts", "1 hour")
-
-        f_s = side_stream("fetch", "fetch")
-        r_s = side_stream("robots", "robots").withColumnRenamed(
-            "user_id", "r_user_id"
-        )
-        joined = f_s.join(
-            r_s,
-            (F.col("user_id") == F.col("r_user_id"))
-            & (
-                F.col("robots_ts")
-                >= F.col("fetch_ts") - F.expr("INTERVAL 2 DAYS")
-            )
-            & (F.col("robots_ts") <= F.col("fetch_ts")),
-            "inner",
-        )
-        q = (
-            joined.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        try:
-            emitted = spark.read.parquet(sink)
-        except AnalysisException:
-            emitted = spark.createDataFrame(
-                [],
-                "user_id long, fetch_id long, fetch_ts timestamp,"
-                " r_user_id long, robots_id long, robots_ts timestamp",
-            )
-        out = emitted.select(
-            "user_id",
-            "fetch_id",
-            "robots_id",
-            ts_str(F.col("fetch_ts")).alias("fetch_ts"),
-            ts_str(F.col("robots_ts")).alias("robots_ts"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        for d in srcs.values():
-            shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink_parent, ignore_errors=True)
+    fetch = _day_split(fetches)
+    fetch[2] = fetch[2].unionAll(late_replays)
+    robots = _day_split(ev.where(F.col("event_id") % 2 == 1))
+    return _fetch_robots_join(spark, fetch, robots, "inner")
 
 
 @register(
@@ -1635,110 +1432,10 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to the inner entry — per-side state bounded
     by arrival rate × the 2-day horizon, hash-partitioned on the host
     key; the outer rows add no state, only an emit-on-expiry path."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.errors import AnalysisException
-
-    from ..streaming.pipeline import EVENTS_SCHEMA
-
     ev = load_table(spark, sf_dir, "events")
-    t1 = F.lit(_WM_T1).cast("timestamp")
-    t2 = F.lit(_WM_T2).cast("timestamp")
-    fetches = ev.where(F.col("event_id") % 2 == 0)
-    robots = ev.where(F.col("event_id") % 2 == 1)
-    sides = {
-        "fetch": [
-            fetches.where(F.col("ts") < t1),
-            fetches.where((F.col("ts") >= t1) & (F.col("ts") < t2)),
-            fetches.where(F.col("ts") >= t2),
-        ],
-        "robots": [
-            robots.where(F.col("ts") < t1),
-            robots.where((F.col("ts") >= t1) & (F.col("ts") < t2)),
-            robots.where(F.col("ts") >= t2),
-        ],
-    }
-    srcs = {k: tempfile.mkdtemp(prefix=f"cat_sslj_{k}_") for k in sides}
-    ckpt = tempfile.mkdtemp(prefix="cat_sslj_ckpt_")
-    sink_parent = tempfile.mkdtemp(prefix="cat_sslj_sink_")
-    sink = sink_parent + "/out"
-    try:
-        for k, batches in sides.items():
-            for i, batch in enumerate(batches):
-                stage = os.path.join(srcs[k], f"_stage{i}")
-                batch.coalesce(1).write.mode("overwrite").parquet(stage)
-                part = next(
-                    (f for f in os.listdir(stage) if f.endswith(".parquet")),
-                    None,
-                )
-                if part is None:
-                    shutil.rmtree(stage)
-                    continue
-                dst = os.path.join(srcs[k], f"batch{i}.parquet")
-                shutil.move(os.path.join(stage, part), dst)
-                shutil.rmtree(stage)
-                os.utime(
-                    dst, (1_700_000_000 + 100 * i, 1_700_000_000 + 100 * i)
-                )
-
-        def side_stream(key, prefix):
-            s = (
-                spark.readStream.schema(EVENTS_SCHEMA)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(srcs[key])
-            )
-            return s.select(
-                F.col("user_id"),
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
-            ).withWatermark(f"{prefix}_ts", "1 hour")
-
-        f_s = side_stream("fetch", "fetch")
-        r_s = side_stream("robots", "robots").withColumnRenamed(
-            "user_id", "r_user_id"
-        )
-        joined = f_s.join(
-            r_s,
-            (F.col("user_id") == F.col("r_user_id"))
-            & (
-                F.col("robots_ts")
-                >= F.col("fetch_ts") - F.expr("INTERVAL 2 DAYS")
-            )
-            & (F.col("robots_ts") <= F.col("fetch_ts")),
-            "leftOuter",
-        )
-        q = (
-            joined.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        try:
-            emitted = spark.read.parquet(sink)
-        except AnalysisException:
-            emitted = spark.createDataFrame(
-                [],
-                "user_id long, fetch_id long, fetch_ts timestamp,"
-                " r_user_id long, robots_id long, robots_ts timestamp",
-            )
-        out = emitted.select(
-            "user_id",
-            "fetch_id",
-            "robots_id",
-            ts_str(F.col("fetch_ts")).alias("fetch_ts"),
-            ts_str(F.col("robots_ts")).alias("robots_ts"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        for d in srcs.values():
-            shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(sink_parent, ignore_errors=True)
+    fetch = _day_split(ev.where(F.col("event_id") % 2 == 0))
+    robots = _day_split(ev.where(F.col("event_id") % 2 == 1))
+    return _fetch_robots_join(spark, fetch, robots, "leftOuter")
 
 
 # ---------------------------------------------------------------------------

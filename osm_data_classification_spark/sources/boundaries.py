@@ -10,14 +10,8 @@ unwrapped longitudes per geo/pip.py policy), one degenerate sliver.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
 
 from ..geo.pip import PackedPolygons
-
-BOUNDARY_SCHEMA = (
-    "boundary_id long, part int, ring int, xs array<double>, ys array<double>"
-)
-
 
 def _ngon(cx: float, cy: float, r: float, n: int, rng, jitter: float = 0.25):
     ang = np.linspace(0.0, 2 * np.pi, n, endpoint=False)
@@ -83,6 +77,3 @@ def synthetic_boundary_rows(n: int = 50, seed: int = 42) -> list[tuple]:
 def packed_boundaries(n: int = 50, seed: int = 42) -> PackedPolygons:
     return PackedPolygons.from_rows(synthetic_boundary_rows(n, seed))
 
-
-def boundaries_df(spark: SparkSession, n: int = 50, seed: int = 42) -> DataFrame:
-    return spark.createDataFrame(synthetic_boundary_rows(n, seed), BOUNDARY_SCHEMA)

@@ -1,7 +1,6 @@
 from .pipeline import (
     running_user_totals,
     session_agg,
-    sliding_counts,
     stream_dedup,
     stream_events,
     tumbling_daily,
@@ -10,7 +9,6 @@ from .pipeline import (
 __all__ = [
     "running_user_totals",
     "session_agg",
-    "sliding_counts",
     "stream_dedup",
     "stream_events",
     "tumbling_daily",

@@ -9,6 +9,13 @@ catalog queries (operators/relational.py stream_* keys) and under a
 real `readStream` + `trigger(availableNow)` in
 tests/test_streaming.py.
 
+:func:`replay` is the harness the streaming catalog entries share: it
+stages each source's arrival batches as mtime-ordered parquet files,
+reads them back through :func:`stream_events` one file per
+micro-batch, runs the caller's streaming frame to a parquet append
+sink under ``trigger(availableNow=True)`` and returns the sink's rows
+detached from disk, so every temp file is gone when it returns.
+
 Watermarks bound state: an aggregation over a 10^12-row unbounded
 crawl stream only works if late data has a horizon; `withWatermark`
 plus append output is what lets the state store evict closed windows.
@@ -16,6 +23,12 @@ plus append output is what lets the state store evict closed windows.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+from typing import Callable
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,6 +49,64 @@ def stream_events(spark: SparkSession, src_dir: str, max_files: int = 1) -> Data
     )
 
 
+def replay(
+    spark: SparkSession,
+    sources: dict[str, list[DataFrame]],
+    query: Callable[..., DataFrame],
+) -> DataFrame:
+    """Run ``query`` as a real multi-batch stream and return its output.
+
+    ``sources`` maps a source name to its arrival batches. Each batch
+    is written as one parquet file whose mtime follows its position
+    (FileStreamSource takes files oldest-mtime-first, so batch i is
+    micro-batch i of that source); empty batches write no file.
+    ``query`` is called with one :func:`stream_events` stream per
+    source, by name, and its frame runs to a parquet sink in append
+    mode under ``trigger(availableNow=True)``, which also fires the
+    trailing no-data batches that move the watermark to its final
+    value. When no batch fires the sink is never created, and an empty
+    frame of the query's columns (all nullable, as the sink's are)
+    keeps the 0-row contract. The result is ``localCheckpoint``-ed, so
+    the staging dir can be deleted before returning."""
+    base = tempfile.mkdtemp(prefix="stream_replay_")
+    try:
+        streams = {}
+        for name, batches in sources.items():
+            src = os.path.join(base, name)
+            for i, batch in enumerate(batches):
+                stage = os.path.join(src, f"_stage{i}")
+                batch.coalesce(1).write.mode("overwrite").parquet(stage)
+                part = next(
+                    (f for f in os.listdir(stage) if f.endswith(".parquet")),
+                    None,
+                )
+                if part is not None:  # empty input at degenerate SFs
+                    dst = os.path.join(src, f"batch{i}.parquet")
+                    shutil.move(os.path.join(stage, part), dst)
+                    t = 1_700_000_000 + 100 * i
+                    os.utime(dst, (t, t))
+                shutil.rmtree(stage)
+            streams[name] = stream_events(spark, src)
+        out = query(**streams)
+        sink = os.path.join(base, "sink")
+        q = (
+            out.writeStream.format("parquet")
+            .outputMode("append")
+            .option("path", sink)
+            .option("checkpointLocation", os.path.join(base, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        try:
+            emitted = spark.read.parquet(sink)
+        except AnalysisException:
+            emitted = spark.createDataFrame([], out.schema.simpleString())
+        return emitted.localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def tumbling_daily(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Per-day tumbling counts with late-data watermark (A5's streaming
     twin). Append-mode-compatible: emits a window only once closed."""
@@ -44,18 +115,6 @@ def tumbling_daily(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
         .groupBy(F.window("ts", "1 day").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("day"), "user_id", "n_events")
-    )
-
-
-def sliding_counts(
-    events: DataFrame, size: str = "1 hour", slide: str = "15 minutes"
-) -> DataFrame:
-    """Sliding-window activity smoothing."""
-    return (
-        events.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", size, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("win_start"), "n_events")
     )
 
 
@@ -186,22 +245,6 @@ def tile_partials(pages: DataFrame, res: int = 9) -> DataFrame:
                 F.sum(F.when(F.col("__dow") == d, 1).otherwise(0))
                 for d in range(1, 8)
             ]
-        ).alias("activity_hist"),
-    )
-
-
-def merge_tile_partials(partials: DataFrame) -> DataFrame:
-    """Merge per-batch partial tiles back to one row per cell (sum the
-    counts, element-wise-sum the histogram) — the compaction half of
-    the foreachBatch rollup. On a real cluster this is the MERGE INTO
-    a tile table; here it is the same additive aggregation."""
-    add_cols = [
-        c for c in partials.columns if c.startswith("n_")
-    ]
-    return partials.groupBy("cell").agg(
-        *[F.sum(c).alias(c) for c in add_cols],
-        F.array(
-            *[F.sum(F.element_at("activity_hist", i + 1)) for i in range(7)]
         ).alias("activity_hist"),
     )
 

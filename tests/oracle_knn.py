@@ -1,12 +1,11 @@
-"""Exact kNN kernels — the single-threaded oracle and the per-batch
-refine used inside the grid-partitioned kNN join (SURVEY.md §2 J6).
+"""Single-threaded numpy kNN oracle for the grid-partitioned kNN join
+(SURVEY.md §2 J6).
 
-Distance metric: squared Euclidean in (lon, lat) degree space. The
-fixture data is synthetic grid-placed points (FIXTURES.md §2.1), so a
-planar metric is exact, deterministic, and — critically for the
-bit-for-bit gates — free of transcendental functions whose last ulp
-differs across libm builds. A haversine variant is provided for real
-spherical data but is not on any oracle-compared path.
+Distance metric: squared Euclidean in (lon, lat) degree space, the
+join's own metric. The fixture data is synthetic grid-placed points
+(FIXTURES.md §2.1), so a planar metric is exact, deterministic, and —
+critically for the bit-for-bit gates — free of transcendental
+functions whose last ulp differs across libm builds.
 """
 
 from __future__ import annotations
@@ -20,16 +19,6 @@ def sq_dist(
     dx = ax - bx
     dy = ay - by
     return dx * dx + dy * dy
-
-
-def haversine_km(ax, ay, bx, by) -> np.ndarray:
-    r = 6371.0088
-    ax, ay, bx, by = (np.radians(np.asarray(v, dtype=np.float64)) for v in (ax, ay, bx, by))
-    h = (
-        np.sin((by - ay) / 2) ** 2
-        + np.cos(ay) * np.cos(by) * np.sin((bx - ax) / 2) ** 2
-    )
-    return 2 * r * np.arcsin(np.sqrt(h))
 
 
 def knn_bruteforce(

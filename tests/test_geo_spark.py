@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm_data_classification_spark.geo import cells
-from osm_data_classification_spark.geo.knn import knn_bruteforce
 from osm_data_classification_spark.operators.geo_ops import (
     knn_join,
     pip_join,
@@ -21,6 +20,7 @@ from osm_data_classification_spark.sources.pages import (
     geocoded_pages,
     synth_pages,
 )
+from tests.oracle_knn import knn_bruteforce
 
 
 @pytest.fixture(scope="module")

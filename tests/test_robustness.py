@@ -361,3 +361,40 @@ def test_priority_check_survives_future_driver_grade(tmp_path, monkeypatch):
     assert 98 in gp.available_rounds()
     assert nxt != before
     assert before[-1] not in nxt
+
+
+def test_priority_tool_reads_unpadded_rounds_and_fails_loudly(tmp_path, monkeypatch):
+    """ADVICE r5 gen_priority.py:92: a grade file named without zero
+    padding (CORRECTNESS_r7.json) must count for its round, not be
+    skipped, and a catalog.py that lost its stamp or its markers must
+    stop the tool with SystemExit, which `python -O` keeps (it strips
+    asserts). Works on copies in a scratch ROOT."""
+    import glob
+    import importlib.util
+    import json as _json
+    import shutil
+
+    spec = importlib.util.spec_from_file_location("gen_priority", GEN_PRIORITY)
+    gp = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gp)
+
+    for path in glob.glob(os.path.join(gp.ROOT, "CORRECTNESS_r*.json")):
+        shutil.copy(path, tmp_path)
+    catalog_py = shutil.copy(gp.CATALOG_PY, tmp_path)
+    monkeypatch.setattr(gp, "ROOT", str(tmp_path))
+    monkeypatch.setattr(gp, "CATALOG_PY", catalog_py)
+
+    with open(os.path.join(gp.ROOT, "CORRECTNESS_r7.json"), "w") as f:
+        _json.dump({"geo_tile_agg": {"rows_match": True}}, f)
+    assert gp.available_rounds()[-1] == 7
+    assert gp.grade_history()["geo_tile_agg"] == 7
+    assert gp.grade_history([7]) == {"geo_tile_agg": 7}
+
+    with open(catalog_py) as f:
+        src = f.read()
+    with open(catalog_py, "w") as f:
+        f.write(src.replace("generated-from-rounds:", "").replace(gp.BEGIN, ""))
+    with pytest.raises(SystemExit):
+        gp.stamped_rounds()
+    with pytest.raises(SystemExit):
+        gp.apply("")

@@ -236,10 +236,12 @@ def test_streaming_tile_ladder_equals_batch(spark, sf_dir):
     tiles appended to a store; compaction (merge) + ladder over the
     partials must equal the single-pass batch ladder — the
     associativity contract that makes incremental tiling correct."""
-    from osm_data_classification_spark.operators.geo_ops import tile_ladder
+    from osm_data_classification_spark.operators.geo_ops import (
+        tile_ladder,
+        tile_rollup,
+    )
     from osm_data_classification_spark.sources.pages import synth_pages
     from osm_data_classification_spark.streaming.pipeline import (
-        merge_tile_partials,
         partials_batch_writer,
         tile_partials,
     )
@@ -269,7 +271,7 @@ def test_streaming_tile_ladder_equals_batch(spark, sf_dir):
         # really incremental: more partial rows than distinct cells
         assert partials.count() > partials.select("cell").distinct().count()
         streamed = tile_ladder(
-            merge_tile_partials(partials.drop("batch_id")), 9, 5
+            tile_rollup(partials.drop("batch_id"), 9, 9), 9, 5
         ).toPandas()
         batch = tile_ladder(
             tile_partials(spark.read.parquet(src), res=9), 9, 5
@@ -293,9 +295,9 @@ def test_replayed_epoch_not_double_counted(spark, sf_dir):
     checkpoint commit. The partials writer must make the replay
     REPLACE its epoch (dynamic partition overwrite), so the compacted
     tiles equal the no-failure run (round-2 ADVICE, medium)."""
+    from osm_data_classification_spark.operators.geo_ops import tile_rollup
     from osm_data_classification_spark.sources.pages import synth_pages
     from osm_data_classification_spark.streaming.pipeline import (
-        merge_tile_partials,
         partials_batch_writer,
         tile_partials,
     )
@@ -309,8 +311,8 @@ def test_replayed_epoch_not_double_counted(spark, sf_dir):
         write(b0, 0)
         write(b1, 1)
         write(b0, 0)  # replayed epoch 0 — must replace, not append
-        merged = merge_tile_partials(
-            spark.read.parquet(pdir).drop("batch_id")
+        merged = tile_rollup(
+            spark.read.parquet(pdir).drop("batch_id"), 7, 7
         ).toPandas()
         expected = tile_partials(b0.unionByName(b1), res=7).toPandas()
 

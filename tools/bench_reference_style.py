@@ -6,8 +6,8 @@ single-node throughput at the same data scale. This harness implements
 the flagship trace (synth pages → geocode → cell encode → PIP join →
 tile aggregation) the reference's way — one thread, eager pandas/numpy,
 no Spark — using the very same numpy kernels the test oracles use, then
-runs the Spark engine on the identical input and appends the comparison
-to BENCH/BASELINE.md.
+runs the Spark engine on the identical input and writes the comparison
+as the last section of BENCH/BASELINE.md, replacing the previous one.
 
 Usage: python tools/bench_reference_style.py [--multiplier 40]
 """
@@ -141,7 +141,8 @@ def main() -> None:
     from osm_data_classification_spark.jobs_api import flagship
     from osm_data_classification_spark.session import get_spark
 
-    spark = get_spark("ref-compare", master="local[32]")
+    cpus = os.cpu_count()
+    spark = get_spark("ref-compare", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
     flagship(spark, args.sf_dir, multiplier=1).count()  # warm
     best = None
@@ -166,9 +167,8 @@ def main() -> None:
     }
     print(json.dumps(result))
 
-    md = f"""
-
-## Single-node reference-style comparison
+    marker = "\n## Single-node reference-style comparison"
+    md = f"""{marker}
 
 The reference engine is eager single-threaded pandas (SURVEY.md §3.1).
 The identical flagship trace implemented that way (same numpy kernels,
@@ -177,15 +177,21 @@ one thread) vs this engine on the same {n_pages:,}-page input:
 | engine | wall sec | pages/sec |
 |---|---|---|
 | reference-style pandas (1 thread) | {pandas_s:.2f} | {pandas_rate:,.0f} |
-| this engine (local[32]) | {best:.2f} | {spark_rate:,.0f} |
+| this engine (local[{cpus}]) | {best:.2f} | {spark_rate:,.0f} |
 
 → **{ratio:.1f}× the reference-style single-node throughput** at the
 same data scale (north-star: "matches-or-beats"). Regenerate:
 `python tools/bench_reference_style.py --multiplier {args.multiplier}`.
 """
-    with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "a") as f:
-        f.write(md)
-    print("appended to BENCH/BASELINE.md")
+    # the section runs to the end of the file (tools/bench_scaling.py
+    # keeps it there), so a rerun replaces it instead of repeating it
+    path = os.path.join(ROOT, "BENCH", "BASELINE.md")
+    old = open(path).read() if os.path.exists(path) else ""
+    if marker in old:
+        old = old[: old.index(marker)]
+    with open(path, "w") as f:
+        f.write(old.rstrip("\n") + "\n" + md)
+    print("wrote BENCH/BASELINE.md")
 
 
 if __name__ == "__main__":

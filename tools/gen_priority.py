@@ -71,14 +71,19 @@ BEGIN = "# --- BEGIN GENERATED WINDOW (tools/gen_priority.py) ---"
 END = "# --- END GENERATED WINDOW ---"
 
 
-def available_rounds() -> list[int]:
-    """Rounds with a CORRECTNESS_r{N}.json on disk, ascending."""
-    rounds = []
+def round_files() -> dict[int, str]:
+    """Round number -> its CORRECTNESS_r{N}.json on disk, padded or not."""
+    files = {}
     for path in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         if m:
-            rounds.append(int(m.group(1)))
-    return sorted(rounds)
+            files[int(m.group(1))] = path
+    return files
+
+
+def available_rounds() -> list[int]:
+    """Rounds with a CORRECTNESS_r{N}.json on disk, ascending."""
+    return sorted(round_files())
 
 
 def grade_history(rounds: list[int] | None = None) -> dict[str, int]:
@@ -87,16 +92,16 @@ def grade_history(rounds: list[int] | None = None) -> dict[str, int]:
     ``rounds`` restricts the snapshot (the --check replay passes the
     stamped list so later driver deposits cannot change the answer).
     """
+    files = round_files()
     if rounds is None:
-        rounds = available_rounds()
+        rounds = sorted(files)
     latest: dict[str, int] = {}
     for rnd in rounds:
-        path = os.path.join(ROOT, f"CORRECTNESS_r{rnd:02d}.json")
-        if not os.path.exists(path):
+        if rnd not in files:
             # stamped round file was removed — treat as empty, loudly
-            print(f"warning: stamped {path} missing", file=sys.stderr)
+            print(f"warning: stamped round {rnd} has no file", file=sys.stderr)
             continue
-        for name in json.load(open(path)):
+        for name in json.load(open(files[rnd])):
             latest[name] = max(latest.get(name, 0), rnd)
     return latest
 
@@ -181,10 +186,11 @@ def stamped_rounds() -> list[int]:
     """Parse the generated block's snapshot stamp out of catalog.py."""
     src = open(CATALOG_PY).read()
     m = re.search(r"# generated-from-rounds: ([0-9,]+|none)", src)
-    assert m, (
-        "no '# generated-from-rounds:' stamp inside the generated block "
-        f"of {CATALOG_PY} — re-run --apply to stamp it"
-    )
+    if not m:
+        raise SystemExit(
+            "no '# generated-from-rounds:' stamp inside the generated block "
+            f"of {CATALOG_PY} — re-run --apply to stamp it"
+        )
     if m.group(1) == "none":
         return []
     return [int(x) for x in m.group(1).split(",")]
@@ -195,7 +201,8 @@ def apply(block: str) -> None:
     pat = re.compile(
         re.escape(BEGIN) + r".*?" + re.escape(END), flags=re.DOTALL
     )
-    assert pat.search(src), f"markers not found in {CATALOG_PY}"
+    if not pat.search(src):
+        raise SystemExit(f"markers not found in {CATALOG_PY}")
     new = pat.sub(block.replace("\\", "\\\\"), src, count=1)
     open(CATALOG_PY, "w").write(new)
 

@@ -73,7 +73,7 @@ def main() -> None:
 
     spark = get_spark(
         "measure-shuffles",
-        master="local[32]",
+        master=f"local[{os.cpu_count()}]",
         extra_conf={"spark.ui.enabled": "true"},
     )
     spark.sparkContext.setLogLevel("ERROR")
