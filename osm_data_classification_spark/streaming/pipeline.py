@@ -72,7 +72,7 @@ def replay(
     try:
         streams = {}
         for name, batches in sources.items():
-            src = os.path.join(base, name)
+            src = os.path.join(base, "src", name)
             for i, batch in enumerate(batches):
                 stage = os.path.join(src, f"_stage{i}")
                 batch.coalesce(1).write.mode("overwrite").parquet(stage)
