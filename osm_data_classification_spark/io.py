@@ -156,19 +156,30 @@ def checkpoint_write(
 
 
 def checkpoint_exists(spark: SparkSession, path: str) -> bool:
-    """A checkpoint is valid iff data + lineage agree on row counts —
-    the exact-resume gate: a partially-written stage (data present,
-    lineage missing or mismatched) is treated as absent and recomputed."""
+    """A checkpoint is valid iff data + lineage agree on the row count
+    AND the checksum — the exact-resume gate: a partially-written
+    stage (data present, lineage missing or mismatched) or data whose
+    values changed under an intact row count is treated as absent and
+    recomputed. Both sides are sums mod 2^62 (Σ of the per-partition
+    lineage checksums vs :func:`_lineage_agg` over all the data read
+    back), so the partition layout does not matter."""
     data_p = os.path.join(path, "data")
     lin_p = os.path.join(path, "_lineage")
     if not (os.path.isdir(data_p) and os.path.isdir(lin_p)):
         return False
     try:
-        n_data = spark.read.parquet(data_p).count()
-        n_lin = (
-            spark.read.parquet(lin_p).agg(F.sum("output_rows").alias("n")).collect()[0]["n"]
-        )
-        return n_data == (n_lin or 0)
+        data = spark.read.parquet(data_p)
+        actual = _lineage_agg(data.withColumn("__all", F.lit(0)), "__all", data).collect()
+        expected = spark.read.parquet(lin_p).agg(
+            F.sum("output_rows"),
+            F.pmod(
+                F.sum(F.col("checksum").cast("decimal(38,0)")),
+                F.lit(2**62).cast("decimal(38,0)"),
+            ).cast("long"),
+        ).first()
+        if not actual:  # an empty stage writes no lineage rows
+            return expected[0] is None
+        return (actual[0]["output_rows"], actual[0]["checksum"]) == tuple(expected)
     except Exception:
         return False
 

@@ -100,6 +100,25 @@ class TestCheckpointResume:
         run_stage(spark, tmp, build)
         assert calls["n"] == 1 and checkpoint_exists(spark, tmp)
 
+    def test_changed_checkpoint_values_recomputed(self, spark, sf_dir, tmp):
+        """Same row count, one value changed: the stage is invalid, so
+        a resume must not reuse the wrong rows."""
+        df = load_table(spark, sf_dir, "events").select("event_id", "user_id")
+        checkpoint_write(df, tmp)
+        assert checkpoint_exists(spark, tmp)
+        data = spark.read.parquet(f"{tmp}/data")
+        first = data.agg(F.min("event_id")).first()[0]
+        data.withColumn(
+            "user_id",
+            F.when(F.col("event_id") == first, F.col("user_id") + 1).otherwise(
+                F.col("user_id")
+            ),
+        ).write.parquet(f"{tmp}/changed")
+        shutil.rmtree(f"{tmp}/data")
+        shutil.move(f"{tmp}/changed", f"{tmp}/data")
+        assert spark.read.parquet(f"{tmp}/data").count() == df.count()
+        assert not checkpoint_exists(spark, tmp)
+
     def test_lineage_checksums_replay_identically(self, spark, sf_dir, tmp):
         """Re-writing the same stage yields the same per-partition
         lineage (partition layout is parquet-read-deterministic)."""
