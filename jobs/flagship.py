@@ -27,8 +27,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from osm_data_classification_spark.io import run_stage, table_checksum  # noqa: E402
 from osm_data_classification_spark.jobs_api import flagship  # noqa: E402
 from osm_data_classification_spark.operators.geo_ops import (  # noqa: E402
@@ -37,7 +35,10 @@ from osm_data_classification_spark.operators.geo_ops import (  # noqa: E402
 )
 from osm_data_classification_spark.session import get_spark  # noqa: E402
 from osm_data_classification_spark.sources.boundaries import packed_boundaries  # noqa: E402
-from osm_data_classification_spark.sources.pages import geocoded_pages  # noqa: E402
+from osm_data_classification_spark.sources.pages import (  # noqa: E402
+    geocoded_pages,
+    with_contributor,
+)
 
 
 def main() -> None:
@@ -63,10 +64,8 @@ def main() -> None:
     pages = run_stage(
         spark,
         os.path.join(args.out, "pages"),
-        lambda: geocoded_pages(
-            spark, args.sf_dir, multiplier=args.multiplier, res=args.res
-        ).withColumn(
-            "contributor", F.regexp_extract("url", r"site(\d+)", 1).try_cast("long")
+        lambda: with_contributor(
+            geocoded_pages(spark, args.sf_dir, multiplier=args.multiplier, res=args.res)
         ),
         cell_col="cell",
         force=not args.resume,

@@ -8,11 +8,12 @@ Run::
 
 The production shape for unbounded crawl feeds (SURVEY.md §2.9 +
 NOTES_r2.md): a file-source stream (swap for Kafka on a cluster) is
-reduced per micro-batch to finest-res PARTIAL tiles appended to the
-partials store (streaming/pipeline.py:partials_batch_writer — every
-measure is associative, so per-batch partials merged later equal a
-single pass); a compaction then merges the partials and rolls the
-resolution ladder, writing one parquet per level. Batch≡stream is
+reduced per micro-batch to finest-res PARTIAL tiles in the partials
+store, then the partials are merged and the resolution ladder rolled;
+the job writes it as one parquet partition per level. All of that is
+streaming/pipeline.py:stream_tiles, the harness the
+``stream_tile_ladder`` catalog entry runs too; this job adds the CLI
+and the writer. A source with no files writes 0 rows. Batch≡stream is
 pinned by tests/test_streaming.py::test_streaming_tile_ladder_equals_batch.
 """
 
@@ -26,9 +27,7 @@ import tempfile
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from osm_data_classification_spark.session import get_spark  # noqa: E402
-from osm_data_classification_spark.streaming.pipeline import (  # noqa: E402
-    partials_batch_writer,
-)
+from osm_data_classification_spark.streaming.pipeline import stream_tiles  # noqa: E402
 
 
 def main() -> None:
@@ -44,37 +43,13 @@ def main() -> None:
     spark = get_spark("stream-tiles")
     spark.sparkContext.setLogLevel("WARN")
 
-    stream = (
-        spark.readStream.schema(
-            "url string, warc_ts timestamp, text string, lang string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(args.src)
-    )
     ckpt = args.checkpoint or tempfile.mkdtemp(prefix="ckpt_stream_tiles_")
-    q = (
-        stream.writeStream.foreachBatch(
-            partials_batch_writer(args.partials, res=args.res)
-        )
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
+    ladder = stream_tiles(
+        spark, args.src, args.partials, ckpt, res=args.res, bottom=args.bottom
     )
-    q.awaitTermination()
-
-    from osm_data_classification_spark.operators.geo_ops import (
-        tile_ladder,
-        tile_rollup,
-    )
-
-    # batch_id is a partition column: replayed epochs were already
-    # REPLACED at write time (dynamic partition overwrite in
-    # partials_batch_writer), so the compaction just drops it.
-    partials = spark.read.parquet(args.partials).drop("batch_id")
-    merged = tile_rollup(partials, args.res, args.res)
-    ladder = tile_ladder(merged, args.res, args.bottom)
     ladder.write.mode("overwrite").partitionBy("res").parquet(args.out)
-    n = spark.read.parquet(args.out).count()
+    # with the ladder's schema: a 0-row ladder writes no parquet file
+    n = spark.read.schema(ladder.schema).parquet(args.out).count()
     print(f"wrote {n} ladder rows (res {args.res}..{args.bottom}) to {args.out}")
 
 

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from .operators.geo_ops import pip_join, tile_aggregate
 from .sources.boundaries import packed_boundaries
-from .sources.pages import geocoded_pages
+from .sources.pages import geocoded_pages, with_contributor
 
 FLAGSHIP_RES = 7
 
@@ -33,12 +33,11 @@ def flagship(
     broadcast join (coarse PIP), one Arrow refine stage, and four
     exchanges (the pre-fan-out repartition of the page source, then
     the three-phase tile agg, which also carries the per-tile
-    boundary count). The `contributor` is the page's site id — the
-    uid analog of the reference's element history `[U: osmparsing]`.
+    boundary count). The `contributor` is the page's site id
+    (``sources.pages.with_contributor``).
     """
-    pages = geocoded_pages(spark, sf_dir, multiplier=multiplier, res=res)
-    pages = pages.withColumn(
-        "contributor", F.regexp_extract("url", r"site(\d+)", 1).try_cast("long")
+    pages = with_contributor(
+        geocoded_pages(spark, sf_dir, multiplier=multiplier, res=res)
     )
     matched = pip_join(pages, packed_boundaries(n_boundaries), res=res)
     return tile_aggregate(

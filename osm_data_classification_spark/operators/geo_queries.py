@@ -12,6 +12,9 @@ rows-only here, gated bit-for-bit by the numpy-oracle pytest suites
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,16 +30,17 @@ from ..geo.cells_sql import (
 )
 from ..io import lineage_rows
 from ..operators.geo_ops import (
+    LANGS,
     knn_auto_res,
     knn_join,
     pip_join,
     tile_aggregate,
     tile_ladder,
-    tile_rollup,
 )
 from ..operators.relational import QuerySpec, register
 from ..sources.boundaries import packed_boundaries
-from ..sources.pages import geocoded_pages
+from ..sources.pages import geocoded_pages, synth_pages, with_contributor
+from ..streaming.pipeline import stream_tiles
 
 CATALOG: dict[str, QuerySpec] = {}
 
@@ -203,12 +207,11 @@ def geo_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LANGS = ("en", "es", "de", "fr", "zh")
 # CAST: DuckDB SUM(int) is HUGEINT -> float64 in the driver's pandas
 # canon while Spark emits int64 (round-1 hash-fail class)
 _LANG_SUMS = ",\n           ".join(
     f"CAST(sum(CASE WHEN lang = '{lg}' THEN 1 ELSE 0 END) AS BIGINT) AS n_{lg}"
-    for lg in _LANGS
+    for lg in LANGS
 )
 # activity_hist is flattened to a '|'-joined string: array-typed output
 # columns crash the driver's pandas canonicalization (round-1 ERROR)
@@ -241,9 +244,7 @@ def geo_tile_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Full oracle: DuckDB aggregates the independently re-synthesized,
     re-encoded pages — the 'tile-to-cell assignments bit-for-bit' gate
     (BASELINE.json:6) run by the driver every round."""
-    pages = geocoded_pages(spark, sf_dir, res=7).withColumn(
-        "contributor", F.regexp_extract("url", r"site(\d+)", 1).try_cast("long")
-    )
+    pages = with_contributor(geocoded_pages(spark, sf_dir, res=7))
     return _flatten_hist(tile_aggregate(pages, res=7, cell_col="cell"))
 
 
@@ -277,7 +278,7 @@ def _ladder_sql(top: int = _LADDER_TOP, bottom: int = _LADDER_BOTTOM) -> str:
         levels.append(
             f"""SELECT {parent} AS cell,
                CAST(sum(n_edits) AS BIGINT) AS n_edits,
-               {", ".join(f"CAST(sum(n_{lg}) AS BIGINT) AS n_{lg}" for lg in _LANGS)},
+               {", ".join(f"CAST(sum(n_{lg}) AS BIGINT) AS n_{lg}" for lg in LANGS)},
                array_to_string([{", ".join(f"sum(h{d})" for d in range(1, 8))}], '|')
                    AS activity_hist,
                {r} AS res
@@ -292,9 +293,7 @@ def rollup_res_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     parent-cell arithmetic. Full oracle: DuckDB rolls the same ladder
     up from its own finest-res tiles (additive sums are associative,
     so level-by-level == direct)."""
-    pages = geocoded_pages(spark, sf_dir, res=_LADDER_TOP).withColumn(
-        "contributor", F.regexp_extract("url", r"site(\d+)", 1).try_cast("long")
-    )
+    pages = with_contributor(geocoded_pages(spark, sf_dir, res=_LADDER_TOP))
     tiles = tile_aggregate(pages, res=_LADDER_TOP, cell_col="cell")
     return _flatten_hist(tile_ladder(tiles, _LADDER_TOP, _LADDER_BOTTOM))
 
@@ -312,65 +311,28 @@ def stream_tile_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     the associativity contract that makes incremental tiling correct,
     now driver-value-hashed every round rather than only pinned by
     tests/test_streaming.py."""
-    import shutil
-    import tempfile
-
-    from pyspark.errors import AnalysisException
-
-    from ..sources.pages import synth_pages
-    from ..streaming.pipeline import partials_batch_writer, tile_partials
-
     src = tempfile.mkdtemp(prefix="cat_stream_src_")
     ckpt = tempfile.mkdtemp(prefix="cat_stream_ckpt_")
     partials_parent = tempfile.mkdtemp(prefix="cat_stream_part_")
-    partials_dir = partials_parent + "/p"
     try:
         pages = synth_pages(spark, sf_dir).drop("html")
         pages.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(
-                "url string, warc_ts timestamp, text string, lang string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                partials_batch_writer(partials_dir, res=9)
-            )
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-        try:
-            partials = spark.read.parquet(partials_dir).drop("batch_id")
-        except AnalysisException:
-            # zero input files -> availableNow fires no batch and the
-            # partials store is never created (path-not-found /
-            # unable-to-infer-schema); an empty frame DETACHED from
-            # the about-to-be-deleted src dir keeps the 0-row
-            # contract. Any other failure propagates — a silent empty
-            # result would misread as an associativity bug.
-            schema = tile_partials(pages.limit(0), res=9).schema
-            partials = spark.createDataFrame([], schema)
-        # the partials store is tile-grid-bounded (res-9 cells ×
-        # batches, never data-sized) — localCheckpoint detaches the
-        # frame from the on-disk store so ALL three temp dirs can be
-        # removed in the same finally instead of leaking the partials
-        # parquet per invocation (r3 ADVICE, stream_dedup sibling)
-        partials = partials.localCheckpoint(eager=True)
+        # the ladder is tile-grid-bounded (res-9 cells and their
+        # parents, never data-sized): localCheckpoint detaches it from
+        # the partials store so all three temp dirs go in the finally
+        ladder = stream_tiles(
+            spark, src, partials_parent + "/p", ckpt, res=9, bottom=5
+        ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(partials_parent, ignore_errors=True)
-    merged = tile_rollup(partials, 9, 9)
-    return _flatten_hist(tile_ladder(merged, 9, 5))
+    return _flatten_hist(ladder)
 
 
 _TILE_COLS = (
     ["cell", "n_edits", "n_contributors", "n_urls"]
-    + [f"n_{lg}" for lg in _LANGS]
+    + [f"n_{lg}" for lg in LANGS]
     + ["activity_hist"]
 )
 
@@ -417,9 +379,7 @@ def lineage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5: per-partition lineage rows (partition_id, input_rows,
     output_rows, cell_range, checksum) of the tile table
     (BASELINE.json:6)."""
-    pages = geocoded_pages(spark, sf_dir, res=7).withColumn(
-        "contributor", F.regexp_extract("url", r"site(\d+)", 1).try_cast("long")
-    )
+    pages = with_contributor(geocoded_pages(spark, sf_dir, res=7))
     tiles = tile_aggregate(pages, res=7, cell_col="cell").drop("activity_hist")
     return lineage_rows(tiles, cell_col="cell")
 
@@ -433,9 +393,7 @@ def geo_travel_distance(spark: SparkSession, sf_dir: str) -> DataFrame:  # oracl
     the haversine numpy-parity test."""
     from ..geo.distance import haversine_km_col
 
-    pages = geocoded_pages(spark, sf_dir, res=7).withColumn(
-        "contributor", F.regexp_extract("url", r"site(\d+)", 1).try_cast("long")
-    )
+    pages = with_contributor(geocoded_pages(spark, sf_dir, res=7))
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("contributor").orderBy("warc_ts", "url")
@@ -1810,9 +1768,7 @@ def geo_contributor_stays(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-synthesizes pages and segments the same runs."""
     from pyspark.sql.window import Window
 
-    pages = geocoded_pages(spark, sf_dir, res=7).withColumn(
-        "contributor", F.regexp_extract("url", r"site(\d+)", 1).try_cast("long")
-    )
+    pages = with_contributor(geocoded_pages(spark, sf_dir, res=7))
     pc = pages.select("contributor", "url", "warc_ts", "cell")
     w = Window.partitionBy("contributor").orderBy("warc_ts", "url")
     flag = pc.withColumn(

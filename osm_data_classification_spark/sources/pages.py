@@ -169,17 +169,16 @@ def geocode_cols(text: Column) -> tuple[Column, Column]:
     return lon, lat
 
 
-def geocoded_pages(spark: SparkSession, sf_dir: str, multiplier: int = 1, res: int = 7) -> DataFrame:
-    """pages + (lon, lat, cell) — the standard front half of the
-    flagship trace (SURVEY.md §3.2): scan → geocode → encode.
+def geocode(pages: DataFrame, res: int) -> DataFrame:
+    """The geocode step of the pages → tiles path, on any pages frame,
+    batch or streaming: place token → ``lon``/``lat`` → drop the rows
+    that do not geocode → ``cell`` at ``res``.
 
     Pages whose text has no place token geocode to NULL and are
-    DROPPED here (explicitly, at the source): on a real crawl a junk
-    page would otherwise flow into the tile aggregation as a NULL-cell
-    group. The synthetic table always carries a token, so the filter
-    is a no-op on this data — it exists for the real-input contract
-    (asserted in tests/test_robustness.py)."""
-    pages = synth_pages(spark, sf_dir, multiplier)
+    DROPPED here, never NULL-tiled: on a real crawl a junk page would
+    otherwise flow into the tile aggregation as a NULL-cell group, and
+    batch and stream tiles would differ (asserted in
+    tests/test_robustness.py and tests/test_streaming.py)."""
     lon, lat = geocode_cols(F.col("text"))
     return (
         pages.select(
@@ -189,6 +188,25 @@ def geocoded_pages(spark: SparkSession, sf_dir: str, multiplier: int = 1, res: i
         )
         .filter(F.col("lon").isNotNull() & F.col("lat").isNotNull())
         .withColumn("cell", cell_encode_col(F.col("lon"), F.col("lat"), res))
+    )
+
+
+def geocoded_pages(spark: SparkSession, sf_dir: str, multiplier: int = 1, res: int = 7) -> DataFrame:
+    """:func:`geocode` applied to :func:`synth_pages`: pages + (lon,
+    lat, cell), the standard front half of the flagship trace
+    (SURVEY.md §3.2): scan → geocode → encode. The synthetic table
+    always carries a place token, so the drop is a no-op on this
+    data."""
+    return geocode(synth_pages(spark, sf_dir, multiplier), res)
+
+
+def with_contributor(pages: DataFrame) -> DataFrame:
+    """``pages`` plus ``contributor``: the site id of the url that
+    :func:`synth_pages` builds (``https://site<N>.example/...``), the
+    uid analog of the reference's element history `[U: osmparsing]`
+    and the key the tile vectors count distinct."""
+    return pages.withColumn(
+        "contributor", F.regexp_extract("url", r"site(\d+)", 1).try_cast("long")
     )
 
 

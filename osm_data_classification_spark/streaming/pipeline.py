@@ -16,6 +16,12 @@ micro-batch, runs the caller's streaming frame to a parquet append
 sink under ``trigger(availableNow=True)`` and returns the sink's rows
 detached from disk, so every temp file is gone when it returns.
 
+:func:`stream_tiles` is the tile-ladder harness the
+``stream_tile_ladder`` catalog entry and jobs/stream_tiles.py share: a
+pages stream reduced per micro-batch to finest-res partial tiles by
+the exactly-once :func:`partials_batch_writer`, merged, then rolled
+down the resolution ladder.
+
 Watermarks bound state: an aggregation over a 10^12-row unbounded
 crawl stream only works if late data has a horizon; `withWatermark`
 plus append output is what lets the state store evict closed windows.
@@ -31,6 +37,9 @@ from typing import Callable
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators.geo_ops import LANGS, tile_ladder, tile_rollup
+from ..sources.pages import geocode
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -211,28 +220,15 @@ def tile_partials(pages: DataFrame, res: int = 9) -> DataFrame:
     of the streaming rollup. Every measure (counts, per-lang counts,
     day-of-week histogram) is associative+commutative, so per-batch
     partials merged later equal a single pass over all data; that is
-    the whole contract of incremental tiling. Engine-agnostic: works
-    on a batch frame or inside foreachBatch."""
-    from ..geo.cells import cell_encode_col
-    from ..operators.geo_ops import LANGS
-    from ..sources.pages import geocode_cols
-
-    lon, lat = geocode_cols(F.col("text"))
-    enc = pages.select(
-        lon.alias("__lon"),
-        lat.alias("__lat"),
+    the whole contract of incremental tiling. The pages go through the
+    batch source's own ``sources.pages.geocode`` step, so
+    batch and stream drop the same ungeocodable rows and tile the rest
+    into the same cells. Engine-agnostic: works on a batch frame or
+    inside foreachBatch."""
+    enc = geocode(pages, res).select(
+        "cell",
         F.col("lang").alias("__lang"),
         F.dayofweek("warc_ts").alias("__dow"),
-    ).filter(
-        # Same contract as the batch source (sources/pages.py
-        # geocoded_pages): ungeocodable pages are DROPPED, never
-        # NULL-tiled — otherwise junk input emits a NULL-cell tile
-        # group and breaks batch≡stream equivalence (ADVICE r2).
-        F.col("__lon").isNotNull() & F.col("__lat").isNotNull()
-    ).select(
-        cell_encode_col(F.col("__lon"), F.col("__lat"), res).alias("cell"),
-        "__lang",
-        "__dow",
     )
     return enc.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n_edits"),
@@ -272,3 +268,43 @@ def partials_batch_writer(partials_dir: str, res: int = 9):
         )
 
     return write
+
+
+def stream_tiles(
+    spark: SparkSession,
+    src: str,
+    partials_dir: str,
+    checkpoint: str,
+    res: int,
+    bottom: int,
+) -> DataFrame:
+    """The streaming tile ladder end to end: the pages parquet under
+    ``src`` streams one file per micro-batch under
+    ``trigger(availableNow=True)`` through :func:`partials_batch_writer`
+    into ``partials_dir``; the partials are merged (a same-res
+    ``tile_rollup``, after dropping the ``batch_id`` partition column)
+    and rolled down the ``res``→``bottom`` ladder. When no batch fires
+    the store is never created, and an empty frame of the partials'
+    schema keeps the 0-row contract; any other read failure
+    propagates, as a silent empty result would misread as an
+    associativity bug. The result reads ``partials_dir``: detach it
+    before deleting that."""
+    stream = (
+        spark.readStream.schema(
+            "url string, warc_ts timestamp, text string, lang string"
+        )
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    q = (
+        stream.writeStream.foreachBatch(partials_batch_writer(partials_dir, res=res))
+        .trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+    q.awaitTermination()
+    try:
+        partials = spark.read.parquet(partials_dir).drop("batch_id")
+    except AnalysisException:
+        partials = spark.createDataFrame([], tile_partials(stream, res).schema)
+    return tile_ladder(tile_rollup(partials, res, res), res, bottom)

@@ -13,8 +13,6 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from osm_data_classification_spark.catalog import full_catalog  # noqa: E402
 from osm_data_classification_spark.operators.geo_ops import (  # noqa: E402
     pip_join,
@@ -23,7 +21,10 @@ from osm_data_classification_spark.operators.geo_ops import (  # noqa: E402
 from osm_data_classification_spark.plans import audit  # noqa: E402
 from osm_data_classification_spark.session import get_spark  # noqa: E402
 from osm_data_classification_spark.sources.boundaries import packed_boundaries  # noqa: E402
-from osm_data_classification_spark.sources.pages import geocoded_pages  # noqa: E402
+from osm_data_classification_spark.sources.pages import (  # noqa: E402
+    geocoded_pages,
+    with_contributor,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -195,9 +196,7 @@ def main() -> None:
         df = cat[name].fn(spark, SF)
         out.append(md_block(name, note, audit.formatted_plan(df)))
 
-    pages = geocoded_pages(spark, SF, res=7).withColumn(
-        "contributor", F.regexp_extract("url", r"site(\d+)", 1).cast("long")
-    )
+    pages = with_contributor(geocoded_pages(spark, SF, res=7))
     packed = packed_boundaries(50)
     refined = pip_join(pages, packed, res=7)
     out.append(
