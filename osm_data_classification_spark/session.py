@@ -4,9 +4,10 @@ The reference engine is single-node eager pandas (SURVEY.md §3.1); the
 new engine's execution model is Catalyst + AQE. These defaults are the
 ones that matter at 100 TB: AQE on (runtime coalesce + skew-join
 splitting), Arrow for every JVM<->Python hand-off, bounded Arrow batch
-sizes so ring-heavy geo kernels don't blow worker memory, and a
-shuffle-partition count sized to the local test harness (a real
-cluster overrides via spark-submit conf).
+sizes so ring-heavy geo kernels don't blow worker memory, a
+shuffle-partition count sized to the local test harness and a driver
+heap of half the host's RAM (a real cluster overrides both via
+spark-submit conf; ``extra_conf`` overrides them here).
 """
 
 from __future__ import annotations
@@ -42,6 +43,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
         )
 
+    ram_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -60,10 +62,11 @@ def get_spark(
         # --- misc -------------------------------------------------------
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        # single-JVM local mode: driver heap is ALL executor memory too;
-        # size it so 32 concurrent tasks' hash aggregations don't GC-thrash
-        # (the box has 128 GiB — SURVEY.md Appendix A)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # single-JVM local mode: driver heap is ALL executor memory too.
+        # Half the host's RAM leaves the other half to the Python
+        # workers and the OS; a bigger heap let one JVM grow past the
+        # RAM of a small host until the kernel killed it.
+        .config("spark.driver.memory", f"{max(2, ram_gib // 2)}g")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
