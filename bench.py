@@ -1,15 +1,20 @@
 """Benchmark harness (driver contract).
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default: every
-core, ``os.cpu_count()``) and prints ONE JSON line::
+/root/testdata/sf0.1) on the engine's default master (``local[*]``, or
+``local[$SPARK_GRAFT_CPUS]`` — see ``session.get_spark``) and prints
+ONE compact JSON line last, short enough for a reader that keeps only
+the tail of stdout::
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "cpus": ..., ...}
 
 The flagship query is the metric stage from BASELINE.json:2 — the
 spatial-join + tiling trace — so the line also carries its throughput
-in pages/sec. Scaling-efficiency evidence (same job at local[8] vs
-local[32]) is produced by ``tools/bench_scaling.py`` → BENCH/BASELINE.md.
+in pages/sec. The per-query plan fingerprints, the noise-probe samples
+and both parallelism-invariance checksums go to ``BENCH/profile.json``
+(committed, so a plan change shows as a diff of that file).
+Scaling-efficiency evidence (the same job at two parallelism levels)
+is produced by ``tools/bench_scaling.py`` → BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -22,7 +27,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
 # fan-out factor for the synthesized pages table (sf0.1 documents ~5k
 # rows -> 7.5M pages at 1000x incl. crawl chains); large enough that
 # flagship throughput is measured in the compute-bound regime, not the
@@ -72,55 +76,105 @@ def noise_probe() -> float:
     return time.perf_counter() - t0
 
 
+def headline_line(
+    timings: dict[str, float],
+    n_pages: int,
+    n_tiles: int,
+    flagship_s: float,
+    cpus: int,
+    heap_mib: int,
+    probes: list[float],
+    identical: bool,
+) -> str:
+    """The bench record's last stdout line: the headline numbers only,
+    kept compact (no fingerprints, no samples) so that it stays whole
+    in a 2,000-character tail of stdout."""
+    probes = sorted(probes)
+    return json.dumps(
+        {
+            "metric": "headline-suite wall time (flagship spatial-join+tiling + operator suite)",
+            "value": round(sum(timings.values()), 3),
+            "unit": "sec",
+            "queries": timings,
+            "sf": float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]),
+            "flagship_pages": n_pages,
+            "flagship_tiles": n_tiles,
+            "flagship_pages_per_sec": round(n_pages / flagship_s, 1),
+            "multiplier": MULTIPLIER,
+            "cpus": cpus,
+            "heap_mib": heap_mib,
+            # interleaved fixed-work CPU probes: a contaminated trial
+            # shows as an elevated median or max — check before reading
+            # anything into cross-run deltas (samples in the side file)
+            "noise_probe_s": {
+                "median": round(probes[len(probes) // 2], 4),
+                "max": round(probes[-1], 4),
+            },
+            "invariance_identical": identical,
+            "runs_per_query": 3,
+            "flagship_runs": 5,
+        },
+        separators=(",", ":"),
+    )
+
+
 def main() -> None:
-    os.environ.setdefault("SPARK_GRAFT_CPUS", CPUS)
     from osm_data_classification_spark.catalog import full_catalog
     from osm_data_classification_spark.jobs_api import flagship
     from osm_data_classification_spark.session import get_spark
 
-    spark = get_spark("bench", master=f"local[{CPUS}]")
+    spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
+    master = spark.sparkContext.master
+    cpus = spark.sparkContext.defaultParallelism
+    heap_mib = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory() // 2**20
     cat = full_catalog()
 
     from osm_data_classification_spark.plans.audit import plan_fingerprint
+
+    def best_of(n: int, build) -> tuple[float, int]:
+        """Fastest of ``n`` timed build+count runs, and the row count."""
+        best = None
+        for _ in range(n):
+            t0 = time.perf_counter()
+            rows = build().count()
+            dt = time.perf_counter() - t0
+            best = dt if best is None or dt < best else best
+        return best, rows
+
+    def fingerprint(build) -> str:
+        # fingerprint of the optimized logical plan (r4 VERDICT #4):
+        # "code unchanged => plan unchanged" becomes a mechanical diff
+        # of the side file instead of an ad-hoc noise argument. Built
+        # twice: a Catalyst rewrite that is nondeterministic per
+        # construction is recorded as "unstable", not as a plan change.
+        fp1, fp2 = plan_fingerprint(build()), plan_fingerprint(build())
+        return fp1 if fp1 == fp2 else "unstable"
 
     timings: dict[str, float] = {}
     fingerprints: dict[str, str] = {}
     probes: list[float] = [noise_probe()]
 
     # --- flagship: spatial-join + tiling (the BASELINE.json metric) ------
-    # warm-up once so JVM/Python-worker startup isn't attributed to it;
-    # best-of-3 because the Arrow refine stage's wall time is noisy
-    # under local[32] thread contention (and the host has phantom-steal
-    # events — see noise_probe)
+    # warm-up once so JVM/Python-worker startup isn't attributed to it
     flagship(spark, SF_DIR, multiplier=1).count()
-    flagship_s = None
-    n_tiles = 0
-    # best-of-5 for the flagship specifically: its 20s+ all-32-thread
-    # stages cannot fit BETWEEN the host's steal bursts the way the
-    # sub-2s suite queries can (BENCH/OBSERVED.md: in one run every
+    # best-of-5 for the flagship specifically: its multi-second
+    # all-core stages cannot fit BETWEEN the host's steal bursts the way
+    # the sub-2s suite queries can (BENCH/OBSERVED.md: in one run every
     # other query sat at its floor with clean probes while all three
     # flagship trials drew 40s+, and an isolated trial minutes later
     # ran 3.8s) — more trials raise the odds one lands in the fast mode
-    for _ in range(5):
-        t0 = time.perf_counter()
-        df = flagship(spark, SF_DIR, multiplier=MULTIPLIER)
-        n_tiles = df.count()
-        dt = time.perf_counter() - t0
-        flagship_s = dt if flagship_s is None or dt < flagship_s else flagship_s
+    def flagship_big():
+        return flagship(spark, SF_DIR, multiplier=MULTIPLIER)
+
+    flagship_s, n_tiles = best_of(5, flagship_big)
     probes.append(noise_probe())
     # pages processed = input rows of the trace (crawl fan-out included)
     from osm_data_classification_spark.sources.pages import synth_pages
 
     n_pages = synth_pages(spark, SF_DIR, multiplier=MULTIPLIER).count()
     timings["flagship_spatial_tiling"] = round(flagship_s, 3)
-    _ffp = [
-        plan_fingerprint(flagship(spark, SF_DIR, multiplier=MULTIPLIER))
-        for _ in range(2)
-    ]
-    fingerprints["flagship_spatial_tiling"] = (
-        _ffp[0] if _ffp[0] == _ffp[1] else "unstable"
-    )
+    fingerprints["flagship_spatial_tiling"] = fingerprint(flagship_big)
 
     warm_dir = SF_DIR.replace("sf0.1", "sf0.01")
     for name in HEADLINE:
@@ -136,101 +190,45 @@ def main() -> None:
         # Janino (the shapes are identical across SFs)
         if warm_dir != SF_DIR and os.path.isdir(warm_dir):
             spec.fn(spark, warm_dir).count()
-        best = None
-        for _ in range(3):  # best-of-3: GC/scheduler/steal noise is real
-            t0 = time.perf_counter()
-            spec.fn(spark, SF_DIR).count()
-            dt = time.perf_counter() - t0
-            best = dt if best is None or dt < best else best
-        timings[name] = round(best, 3)
-        # fingerprint of the optimized logical plan (r4 VERDICT #4):
-        # "code unchanged => plan unchanged" becomes a mechanical
-        # round-over-round diff instead of an ad-hoc noise argument.
-        # Built twice: a handful of Catalyst rewrites are internally
-        # nondeterministic (RewriteDistinctAggregates permutes gid
-        # labels per construction) — those are recorded as "unstable"
-        # rather than producing false round-over-round diffs.
-        fp1 = plan_fingerprint(spec.fn(spark, SF_DIR))
-        fp2 = plan_fingerprint(spec.fn(spark, SF_DIR))
-        fingerprints[name] = fp1 if fp1 == fp2 else "unstable"
+        # best-of-3: GC/scheduler/steal noise is real
+        timings[name] = round(best_of(3, lambda: spec.fn(spark, SF_DIR))[0], 3)
+        fingerprints[name] = fingerprint(lambda: spec.fn(spark, SF_DIR))
         probes.append(noise_probe())
 
-    # --- L4 parallelism invariance as a per-round artifact (r3 VERDICT
-    # #8): the same flagship tile table must checksum identically at
-    # local[32] and local[8] — shuffle/partitioning nondeterminism in
-    # any operator on the flagship path shows up HERE, in the file the
-    # driver reads, not only in the pytest suite.
+    # --- L4 parallelism invariance as a per-run artifact (r3 VERDICT
+    # #8): the same flagship tile table must checksum identically on
+    # the default master and at local[8] — shuffle/partitioning
+    # nondeterminism in any operator on the flagship path shows up
+    # HERE, in the record the driver reads, not only in the pytest suite.
     from osm_data_classification_spark.io import table_checksum
 
     inv_df = flagship(spark, SF_DIR, multiplier=1).drop("activity_hist")
-    sum32 = table_checksum(inv_df)
+    main_sum = table_checksum(inv_df)
     spark.stop()
     spark8 = get_spark("bench-inv8", master="local[8]")
     spark8.sparkContext.setLogLevel("ERROR")
     inv_df8 = flagship(spark8, SF_DIR, multiplier=1).drop("activity_hist")
     sum8 = table_checksum(inv_df8)
     spark8.stop()
-    invariance = {
-        "query": "flagship_tiles",
-        "local32_checksum": sum32,
-        "local8_checksum": sum8,
-        "identical": sum32 == sum8,
+
+    profile = {
+        "master": master,
+        "plan_fingerprints": fingerprints,
+        "noise_probe_s": [round(p, 4) for p in probes],
+        "invariance": {
+            "query": "flagship_tiles",
+            "main_checksum": main_sum,
+            "local8_checksum": sum8,
+        },
     }
-
-    # round-over-round fingerprint diff vs the newest recorded BENCH_r*
-    # that carries fingerprints (older rounds predate the field)
-    import glob
-
-    fp_diff: dict[str, object] = {"baseline": None, "changed": []}
-    _root = os.path.dirname(os.path.abspath(__file__))
-    for prior in sorted(
-        glob.glob(os.path.join(_root, "BENCH_r*.json")), reverse=True
-    ):
-        try:
-            prev = json.load(open(prior)).get("plan_fingerprints")
-        except (OSError, json.JSONDecodeError):
-            continue
-        if prev:
-            fp_diff["baseline"] = os.path.basename(prior)
-            fp_diff["changed"] = sorted(
-                q
-                for q in fingerprints
-                if q in prev
-                and "unstable" not in (prev[q], fingerprints[q])
-                and prev[q] != fingerprints[q]
-            )
-            break
-
-    total = round(sum(timings.values()), 3)
-    probes_r = [round(p, 4) for p in probes]
+    bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
+    with open(os.path.join(bench_dir, "profile.json"), "w") as f:
+        json.dump(profile, f, indent=1, sort_keys=True)
+        f.write("\n")
     print(
-        json.dumps(
-            {
-                "metric": "headline-suite wall time (flagship spatial-join+tiling + operator suite)",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]),
-                "flagship_pages": n_pages,
-                "flagship_tiles": n_tiles,
-                "flagship_pages_per_sec": round(n_pages / flagship_s, 1),
-                "cpus": int(CPUS),
-                "multiplier": MULTIPLIER,
-                # interleaved fixed-work CPU probes: a contaminated
-                # trial shows here as elevated/ragged samples — check
-                # before reading anything into cross-round deltas
-                "noise_probe_s": {
-                    "min": min(probes_r),
-                    "max": max(probes_r),
-                    "median": sorted(probes_r)[len(probes_r) // 2],
-                    "samples": probes_r,
-                },
-                "runs_per_query": 3,
-                "flagship_runs": 5,
-                "invariance": invariance,
-                "plan_fingerprints": fingerprints,
-                "plan_fingerprint_diff": fp_diff,
-            }
+        headline_line(
+            timings, n_pages, n_tiles, flagship_s, cpus, heap_mib, probes,
+            main_sum == sum8,
         )
     )
 
