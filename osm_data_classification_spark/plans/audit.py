@@ -93,8 +93,6 @@ def has_python_stage(df: DataFrame) -> bool:
 
 
 _FP_NORMALIZERS = (
-    # expression ids are assigned per-session: col#12345L -> col#
-    (re.compile(r"#\d+"), "#"),
     # higher-order-function lambda variables carry a session-global
     # counter: lambda x_4 / lambda x_10 are the same variable
     (re.compile(r"\blambda ([A-Za-z]+)_\d+"), r"lambda \1_"),
@@ -110,22 +108,29 @@ _FP_NORMALIZERS = (
 
 
 def canonical_plan(df: DataFrame) -> str:
-    """The OPTIMIZED logical plan with run-dependent tokens (expr ids,
-    paths, plan ids) normalized away — equal strings <=> Catalyst chose
-    the same plan. The logical plan (not the executed one) is used so
-    the fingerprint is stable across AQE's runtime re-planning and
-    doesn't require executing the query."""
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    """The OPTIMIZED logical plan in Catalyst's canonical form, with
+    run-dependent tokens (paths, plan ids) normalized away — equal
+    strings <=> Catalyst chose the same plan. The logical plan (not
+    the executed one) is used so the fingerprint is stable across
+    AQE's runtime re-planning and doesn't require executing the query.
+
+    ``canonicalized`` is Catalyst's own normalization: expression ids
+    become ordinals of the input and commutative operands are ordered,
+    while literals print as they are (Catalyst prints string literals
+    unquoted, so a regex over ``#<id>`` would also rewrite a literal
+    like ``a#12``). It also blanks attribute and alias names, so a
+    pure column rename does not change the fingerprint."""
+    plan = df._jdf.queryExecution().optimizedPlan().canonicalized().toString()
     for pat, repl in _FP_NORMALIZERS:
         plan = pat.sub(repl, plan)
     return plan
 
 
 def plan_fingerprint(df: DataFrame) -> str:
-    """16-hex-digit digest of canonical_plan — the per-round artifact
-    (r4 VERDICT #4): BENCH_r{N}.json carries one per headline query, so
-    'code unchanged => plan unchanged' is a mechanical diff instead of
-    an ad-hoc argument whenever bench wall times move."""
+    """16-hex-digit digest of canonical_plan — the per-query record
+    bench.py keeps in BENCH/profile.json, so 'code unchanged => plan
+    unchanged' is a mechanical diff of that file instead of an ad-hoc
+    argument whenever bench wall times move."""
     import hashlib
 
     return hashlib.sha256(canonical_plan(df).encode()).hexdigest()[:16]

@@ -394,3 +394,17 @@ def test_plan_fingerprint_stable_and_discriminating(spark, sf_dir):
     assert a1 == a2, "fingerprint not stable across constructions"
     b = plan_fingerprint(cat["sql_tpch_q5"].fn(spark, sf_dir))
     assert a1 != b, "fingerprint failed to discriminate distinct plans"
+
+
+def test_plan_fingerprint_sees_literal_change(spark):
+    """Catalyst prints string literals unquoted, so a literal that looks
+    like an expression id (``a#12``) must survive the normalization: a
+    change to the literal alone is a plan change."""
+    from osm_data_classification_spark.plans.audit import plan_fingerprint
+
+    def q(lit):
+        col = F.concat(F.lit("a#"), F.col("id").cast("string"))
+        return spark.range(20).filter(col == F.lit(lit))
+
+    assert plan_fingerprint(q("a#12")) == plan_fingerprint(q("a#12"))
+    assert plan_fingerprint(q("a#12")) != plan_fingerprint(q("a#13"))
