@@ -125,7 +125,6 @@ def main() -> None:
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    master = spark.sparkContext.master
     cpus = spark.sparkContext.defaultParallelism
     heap_mib = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory() // 2**20
     cat = full_catalog()
@@ -212,7 +211,8 @@ def main() -> None:
     spark8.stop()
 
     profile = {
-        "master": master,
+        # plans depend on the core count (pre-fan-out repartition)
+        "cpus": cpus,
         "plan_fingerprints": fingerprints,
         "noise_probe_s": [round(p, 4) for p in probes],
         "invariance": {

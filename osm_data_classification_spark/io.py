@@ -78,15 +78,17 @@ def _lineage_agg(
         .agg(
             F.count(F.lit(1)).alias("output_rows"),
             *extra,
-            # decimal accumulator: ANSI mode would overflow a long sum
-            F.pmod(
-                F.sum(F.col("__h").cast("decimal(38,0)")),
-                F.lit(2**62).cast("decimal(38,0)"),
-            )
-            .cast("long")
-            .alias("checksum"),
+            _sum_mod_2_62(F.col("__h")).alias("checksum"),
         )
     )
+
+
+def _sum_mod_2_62(col: F.Column) -> F.Column:
+    """Σ ``col`` mod 2^62 as a long — how a lineage checksum adds up.
+    The accumulator is decimal: ANSI mode would overflow a long sum."""
+    return F.pmod(
+        F.sum(col.cast("decimal(38,0)")), F.lit(2**62).cast("decimal(38,0)")
+    ).cast("long")
 
 
 def lineage_rows(
@@ -171,11 +173,7 @@ def checkpoint_exists(spark: SparkSession, path: str) -> bool:
         data = spark.read.parquet(data_p)
         actual = _lineage_agg(data.withColumn("__all", F.lit(0)), "__all", data).collect()
         expected = spark.read.parquet(lin_p).agg(
-            F.sum("output_rows"),
-            F.pmod(
-                F.sum(F.col("checksum").cast("decimal(38,0)")),
-                F.lit(2**62).cast("decimal(38,0)"),
-            ).cast("long"),
+            F.sum("output_rows"), _sum_mod_2_62(F.col("checksum"))
         ).first()
         if not actual:  # an empty stage writes no lineage rows
             return expected[0] is None

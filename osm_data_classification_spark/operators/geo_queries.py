@@ -306,11 +306,12 @@ def stream_tile_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigger(availableNow) through the partials writer (dynamic
     partition overwrite per epoch), then compacted (a same-res
     tile_rollup merges the per-batch partials) and rolled down the
-    9→5 resolution ladder. FULL oracle: DuckDB re-synthesizes the
-    pages and rolls the same ladder in one batch pass — equality is
-    the associativity contract that makes incremental tiling correct,
-    now driver-value-hashed every round rather than only pinned by
-    tests/test_streaming.py."""
+    9→5 resolution ladder, all by ``streaming.pipeline.stream_tiles``,
+    the harness jobs/stream_tiles.py runs too. FULL oracle: DuckDB
+    re-synthesizes the pages and rolls the same ladder in one batch
+    pass — equality is the associativity contract that makes
+    incremental tiling correct, now driver-value-hashed every round
+    rather than only pinned by tests/test_streaming.py."""
     src = tempfile.mkdtemp(prefix="cat_stream_src_")
     ckpt = tempfile.mkdtemp(prefix="cat_stream_ckpt_")
     partials_parent = tempfile.mkdtemp(prefix="cat_stream_part_")

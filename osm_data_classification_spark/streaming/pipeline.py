@@ -221,7 +221,7 @@ def tile_partials(pages: DataFrame, res: int = 9) -> DataFrame:
     day-of-week histogram) is associative+commutative, so per-batch
     partials merged later equal a single pass over all data; that is
     the whole contract of incremental tiling. The pages go through the
-    batch source's own ``sources.pages.geocode`` step, so
+    batch source's own geocode step (``sources.pages.geocode``), so
     batch and stream drop the same ungeocodable rows and tile the rest
     into the same cells. Engine-agnostic: works on a batch frame or
     inside foreachBatch."""

@@ -236,13 +236,10 @@ def test_streaming_tile_ladder_equals_batch(spark, sf_dir):
     tiles appended to a store; compaction (merge) + ladder over the
     partials must equal the single-pass batch ladder — the
     associativity contract that makes incremental tiling correct."""
-    from osm_data_classification_spark.operators.geo_ops import (
-        tile_ladder,
-        tile_rollup,
-    )
+    from osm_data_classification_spark.operators.geo_ops import tile_ladder
     from osm_data_classification_spark.sources.pages import synth_pages
     from osm_data_classification_spark.streaming.pipeline import (
-        partials_batch_writer,
+        stream_tiles,
         tile_partials,
     )
 
@@ -252,27 +249,13 @@ def test_streaming_tile_ladder_equals_batch(spark, sf_dir):
         pages = synth_pages(spark, sf_dir).drop("html")
         pages.repartition(4).write.mode("overwrite").parquet(src)
 
-        stream = (
-            spark.readStream.schema(
-                "url string, warc_ts timestamp, text string, lang string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(partials_batch_writer(partials_dir))
-            .trigger(availableNow=True)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_ladder_"))
-            .start()
-        )
-        q.awaitTermination(120)
+        ckpt = tempfile.mkdtemp(prefix="ckpt_ladder_")
+        streamed = stream_tiles(spark, src, partials_dir, ckpt, 9, 5).toPandas()
+        shutil.rmtree(ckpt, ignore_errors=True)
 
         partials = spark.read.parquet(partials_dir)
         # really incremental: more partial rows than distinct cells
         assert partials.count() > partials.select("cell").distinct().count()
-        streamed = tile_ladder(
-            tile_rollup(partials.drop("batch_id"), 9, 9), 9, 5
-        ).toPandas()
         batch = tile_ladder(
             tile_partials(spark.read.parquet(src), res=9), 9, 5
         ).toPandas()
@@ -288,6 +271,28 @@ def test_streaming_tile_ladder_equals_batch(spark, sf_dir):
     finally:
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(os.path.dirname(partials_dir), ignore_errors=True)
+
+
+def test_stream_tiles_empty_source_gives_empty_ladder(spark, tmp_path):
+    """A source with no files fires no micro-batch, so the partials
+    store is never created: the ladder is empty and keeps the columns
+    of the batch ladder."""
+    from osm_data_classification_spark.operators.geo_ops import tile_ladder
+    from osm_data_classification_spark.streaming.pipeline import (
+        stream_tiles,
+        tile_partials,
+    )
+
+    (tmp_path / "src").mkdir()
+    ladder = stream_tiles(
+        spark, str(tmp_path / "src"), str(tmp_path / "p"), str(tmp_path / "ckpt"), 9, 5
+    )
+    assert ladder.count() == 0
+    no_pages = spark.createDataFrame(
+        [], "url string, warc_ts timestamp, text string, lang string"
+    )
+    assert ladder.columns == tile_ladder(tile_partials(no_pages, res=9), 9, 5).columns
+
 
 def test_replayed_epoch_not_double_counted(spark, sf_dir):
     """foreachBatch is at-least-once: a micro-batch can be re-run with
