@@ -107,6 +107,60 @@ _FP_NORMALIZERS = (
 )
 
 
+def _swap_block(text: str, raw: str, canon: str) -> str:
+    """Replace every occurrence of the tree ``raw`` inside ``text`` (its
+    lines printed after a tree-drawing prefix) with ``canon``, indented
+    by the prefix of the block's first line."""
+    lines, old = text.split("\n"), raw.rstrip("\n").split("\n")
+    new = canon.rstrip("\n").split("\n")
+    j = 0
+    while j + len(old) <= len(lines):
+        if all(lines[j + i].endswith(old[i]) for i in range(len(old))):
+            pad = lines[j][: len(lines[j]) - len(old[0])]
+            lines[j : j + len(old)] = [pad + c for c in new]
+            j += len(new)
+        else:
+            j += 1
+    return "\n".join(lines)
+
+
+def _cached_text(cached) -> str:
+    """A cached physical plan as the fingerprint prints it: the plan
+    AQE started from (its final plan carries stage ids that depend on
+    execution), nested caches swapped in the same way, and expression
+    ids renumbered in order of first appearance (as ``#_0``, ``#_1``,
+    ... so an outer plan's renumbering leaves them alone). Catalyst's
+    ``canonicalized`` is not used here: it orders commutative operands
+    by ``hashCode``, which for an n-ary sum includes a JVM identity
+    hash, so the order would change from one JVM to the next."""
+    plan = cached.inputPlan() if cached.nodeName() == "AdaptiveSparkPlan" else cached
+    text = _swap_caches(plan.toString(), plan)
+    ids: dict[str, int] = {}
+    return re.sub(
+        r"#(\d+)", lambda m: f"#_{ids.setdefault(m.group(1), len(ids))}", text
+    )
+
+
+def _swap_caches(text: str, plan) -> str:
+    """``text`` (the tree string of ``plan``) with each cached plan it
+    prints replaced by :func:`_cached_text`. Longest blocks go first: a
+    cache read both directly and inside another cache's plan must not
+    be swapped out of the outer block before that block matches."""
+    swaps = {}
+    leaves = plan.collectLeaves()
+    for leaf in (leaves.apply(i) for i in range(leaves.size())):
+        name = leaf.nodeName()
+        if name == "InMemoryTableScan":
+            leaf = leaf.relation()
+        elif name != "InMemoryRelation":
+            continue
+        cached = leaf.cachedPlan()
+        swaps[cached.toString()] = _cached_text(cached)
+    for raw in sorted(swaps, key=len, reverse=True):
+        text = _swap_block(text, raw, swaps[raw])
+    return text
+
+
 def canonical_plan(df: DataFrame) -> str:
     """The OPTIMIZED logical plan in Catalyst's canonical form, with
     run-dependent tokens (paths, plan ids) normalized away — equal
@@ -119,8 +173,16 @@ def canonical_plan(df: DataFrame) -> str:
     while literals print as they are (Catalyst prints string literals
     unquoted, so a regex over ``#<id>`` would also rewrite a literal
     like ``a#12``). It also blanks attribute and alias names, so a
-    pure column rename does not change the fingerprint."""
-    plan = df._jdf.queryExecution().optimizedPlan().canonicalized().toString()
+    pure column rename does not change the fingerprint.
+
+    A persisted frame shows up as an ``InMemoryRelation`` that prints
+    its cached PHYSICAL plan raw, with the expression ids of whenever
+    it was built; each such block is swapped for a form without them
+    (:func:`_cached_text`), so the fingerprint does not depend on what
+    ran earlier in the session. Inside those blocks a literal that
+    looks like an expression id is renumbered too."""
+    canon = df._jdf.queryExecution().optimizedPlan().canonicalized()
+    plan = _swap_caches(canon.toString(), canon)
     for pat, repl in _FP_NORMALIZERS:
         plan = pat.sub(repl, plan)
     return plan

@@ -395,6 +395,19 @@ def test_plan_fingerprint_stable_and_discriminating(spark, sf_dir):
     b = plan_fingerprint(cat["sql_tpch_q5"].fn(spark, sf_dir))
     assert a1 != b, "fingerprint failed to discriminate distinct plans"
 
+    # a plan over a persisted frame prints the cached physical plan;
+    # its expression ids must not leak what ran earlier in the session
+    def cached_q():
+        cached = spark.range(100).withColumn("y", F.col("id") * 2).persist()
+        return cached.filter(F.col("y") > 10)
+
+    c1 = plan_fingerprint(cached_q())
+    spark.catalog.clearCache()
+    spark.range(50).groupBy((F.col("id") % 3).alias("k")).count().collect()
+    c2 = plan_fingerprint(cached_q())
+    spark.catalog.clearCache()
+    assert c1 == c2, "fingerprint of a cached plan depends on session history"
+
 
 def test_plan_fingerprint_sees_literal_change(spark):
     """Catalyst prints string literals unquoted, so a literal that looks
