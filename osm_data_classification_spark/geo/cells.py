@@ -36,7 +36,7 @@ each other):
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 RES_BITS_SHIFT = 56
@@ -214,6 +214,69 @@ def xy_cols(lon: Column, lat: Column, res: int) -> tuple[Column, Column]:
 def cell_from_xy_col(x: Column, y: Column, res: int) -> Column:
     morton = _spread_col(x).bitwiseOR(F.shiftleft(_spread_col(y), 1))
     return F.lit(res << RES_BITS_SHIFT).bitwiseOR(morton)
+
+
+def kring_explode(
+    df: DataFrame, x: Column, y: Column, res: int, ring: int,
+    inner: int | None = None,
+) -> tuple[DataFrame, Column, Column, Column, Column]:
+    """One row per k-ring neighbour of each row's grid cell (x, y) — the
+    Spark twin of :func:`kring_np`: x wraps at the anti-meridian, y rows
+    beyond the poles are dropped. Returns the exploded frame and, as
+    Column expressions over it, the neighbour's grid (x, y) and its
+    (dx, dy) offset. The frame keeps ``df``'s columns plus working
+    columns named ``__x``, ``__y``, ``__dx``, ``__dy`` and ``__ny``;
+    callers select what they need. The offsets are exploded as literal
+    sequences FIRST and the neighbour computed once per output row, so
+    the plan carries one small expression instead of (2r+1)² inlined
+    copies.
+
+    ``inner``: drop the cells of the ``inner``-ring block and emit the
+    ANNULUS only (``inner=0`` drops just the centre). Valid whenever
+    the inner block is un-capped (2*inner+1 <= 2^res): every inner
+    cell's offset in this enumeration has max(|dx|,|dy|) <= inner, so
+    the offset filter removes exactly the inner block."""
+    n = 1 << res
+    # x wraps, so when the ring spans the whole grid (2*ring+1 >= n)
+    # distinct dx offsets must be capped at exactly n, or pmod maps two
+    # offsets to the same cell and a row sees the same neighbour twice.
+    # y clamps, so its range only needs trimming to the grid height for
+    # plan size.
+    if 2 * ring + 1 <= n:
+        dx_lo, dx_hi = -ring, ring
+    else:
+        dx_lo, dx_hi = -(n // 2), n - n // 2 - 1
+    dy = min(ring, n - 1)
+    out = (
+        df.withColumn("__x", x)
+        .withColumn("__y", y)
+        .select(
+            "*", F.explode(F.sequence(F.lit(dx_lo), F.lit(dx_hi))).alias("__dx")
+        )
+        .select(
+            "*", F.explode(F.sequence(F.lit(-dy), F.lit(dy))).alias("__dy")
+        )
+        .withColumn("__ny", F.col("__y") + F.col("__dy"))
+        .filter((F.col("__ny") >= 0) & (F.col("__ny") < n))
+    )
+    if inner is not None:
+        assert 2 * inner + 1 <= n, "inner block must be un-capped"
+        out = out.filter(
+            F.greatest(F.abs(F.col("__dx")), F.abs(F.col("__dy"))) > inner
+        )
+    nx = F.pmod(F.col("__x") + F.col("__dx"), F.lit(n))
+    return out, nx, F.col("__ny"), F.col("__dx"), F.col("__dy")
+
+
+def grid_counts(pages: DataFrame, res: int) -> DataFrame:
+    """The page raster at ``res``: one row per occupied grid cell,
+    (x, y, n_pages), from the frame's lon/lat (:func:`xy_cols`)."""
+    x, y = xy_cols(F.col("lon"), F.col("lat"), res)
+    return (
+        pages.select(x.alias("x"), y.alias("y"))
+        .groupBy("x", "y")
+        .agg(F.count(F.lit(1)).alias("n_pages"))
+    )
 
 
 def cell_encode_col(lon: Column, lat: Column, res: int) -> Column:

@@ -15,7 +15,8 @@ Scale notes (the 1000-executor story):
   exchanges are the page source's pre-fan-out repartition (|documents|
   rows) and the three tile-agg groupBys, which also carry the
   per-tile boundary count.
-- The kNN join shuffles both sides once, keyed by cell; border
+- The kNN join shuffles both sides once, keyed by cell (probe cells
+  widen over the k-ring stencil ``geo.cells.kring_explode``); border
   correctness comes from an in-plan certification bound. The ring-1
   pass is a static plan; only the RESIDUE (the uncertified remainder,
   typically ~0) takes a driver-side widening loop — O(log n) passes
@@ -43,6 +44,7 @@ from ..geo.cells import (
     cell_encode_col,
     cell_parent_col,
     cell_size_deg,
+    kring_explode,
     xy_cols,
 )
 from ..geo.pip import PackedPolygons
@@ -137,62 +139,6 @@ def _grid_key(x: Column, y: Column) -> Column:
     whole-stage-codegen compile time dominate small stages. res≤15 ⇒
     x,y < 2^15, so ``x<<20 | y`` is collision-free and three codegen ops."""
     return F.shiftleft(x, 20).bitwiseOR(y)
-
-
-def _explode_kring(
-    df: DataFrame, lon_col: str, lat_col: str, res: int, ring: int,
-    inner: int | None = None,
-) -> DataFrame:
-    """Add one row per k-ring neighbor cell of each input row's cell,
-    keyed by :func:`_grid_key`. x wraps (anti-meridian), y clamps
-    (poles) — mirrors kring_np. The (dx,dy) offsets are exploded as a
-    literal array FIRST and the key computed once per output row, so
-    the plan carries one small key expression instead of (2r+1)²
-    inlined copies.
-
-    ``inner``: exclude the cells of the ``inner``-ring block (emit the
-    ANNULUS only). Valid whenever the inner block was enumerated
-    un-capped (2*inner+1 <= n, guaranteed for any ring that did not
-    trigger the full-cover terminal): every inner cell's offset
-    representative in this enumeration has max(|dx|,|dy|) <= inner, so
-    the offset filter removes exactly the inner block — the residue
-    widening loop re-scans only new cells and merges the previous
-    pass's per-probe top-k instead of re-joining the whole block."""
-    n = 1 << res
-    x, y = xy_cols(F.col(lon_col), F.col(lat_col), res)
-    # x wraps, so when the ring spans the whole grid (2*ring+1 >= n)
-    # distinct dx offsets must be capped at exactly n, or pmod maps two
-    # offsets to the same cell and the probe sees duplicate candidate
-    # rows (duplicate rows get distinct top-k ranks => wrong result,
-    # and the infinite cert bound would CERTIFY it). y clamps, so its
-    # range only needs trimming to the grid height for plan size.
-    if 2 * ring + 1 <= n:
-        dx_lo, dx_hi = -ring, ring
-    else:
-        dx_lo, dx_hi = -(n // 2), n - n // 2 - 1
-    dy = min(ring, n - 1)
-    out = (
-        df.withColumn("__x", x)
-        .withColumn("__y", y)
-        .select(
-            "*", F.explode(F.sequence(F.lit(dx_lo), F.lit(dx_hi))).alias("__dx")
-        )
-        .select(
-            "*", F.explode(F.sequence(F.lit(-dy), F.lit(dy))).alias("__dy")
-        )
-        .withColumn("__ny", F.col("__y") + F.col("__dy"))
-        .filter((F.col("__ny") >= 0) & (F.col("__ny") < n))
-    )
-    if inner is not None:
-        assert 2 * inner + 1 <= n, "inner block must be un-capped"
-        out = out.filter(
-            F.greatest(F.abs(F.col("__dx")), F.abs(F.col("__dy"))) > inner
-        )
-    out = out.withColumn(
-        "__cell",
-        _grid_key(F.pmod(F.col("__x") + F.col("__dx"), F.lit(n)), F.col("__ny")),
-    )
-    return out.drop("__x", "__y", "__dx", "__dy", "__ny")
 
 
 # residue terminal: max |residue|·|candidates| distance evaluations a
@@ -318,21 +264,25 @@ def knn_join(
     prev_topk: DataFrame | None = None
     prev_ring = 0
 
+    def ringed(remaining: DataFrame, r: int, inner: int | None = None) -> DataFrame:
+        """``remaining`` with one row per ring-``r`` cell of each probe
+        (the annulus beyond ``inner``), keyed ``__cell``."""
+        qx, qy = xy_cols(F.col(qlon), F.col(qlat), res)
+        out, nx, ny, _, _ = kring_explode(remaining, qx, qy, res, r, inner)
+        return out.select(*remaining.columns, _grid_key(nx, ny).alias("__cell"))
+
     def block_topk(remaining: DataFrame, r: int) -> DataFrame:
         """Per-probe top-k over the ring-``r`` block: annulus + seed
         merge when the previous block was un-capped (the inner block
         contributes the k persisted seed rows per still-uncertified
         probe), else the full block."""
         if prev_topk is not None and 2 * prev_ring + 1 <= n:
-            annulus = _explode_kring(
-                remaining, qlon, qlat, res, r, inner=prev_ring
-            )
+            annulus = ringed(remaining, r, inner=prev_ring)
             seed = prev_topk.join(remaining.select(id_col), id_col, "leftsemi")
             return topk_rows(
                 pair_rows(annulus.join(cand, "__cell")).unionByName(seed)
             )
-        ringed = _explode_kring(remaining, qlon, qlat, res, r)
-        return topk(ringed.join(cand, "__cell"))
+        return topk(ringed(remaining, r).join(cand, "__cell"))
 
     def ring_pass(remaining: DataFrame, r: int) -> DataFrame:
         """Certifying pass at ring ``r``: appends the certified probes'

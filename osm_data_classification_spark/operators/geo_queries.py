@@ -611,7 +611,7 @@ def _neighbors_sql() -> str:
 def geo_cell_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.8 geo scalars: the 8-neighbor ring of each page's res-7 cell
     — the O(1) adjacency arithmetic the kNN candidate ring
-    (geo_ops._explode_kring) widens over, driver-graded directly:
+    (geo.cells.kring_explode) widens over, driver-graded directly:
     x wraps across the anti-meridian (mod 2^r), y rows beyond the
     poles are dropped — the synthetic crawl reaches |lat| > 88.6, so
     pole rows (y = 0 or 2^r - 1) emit n_neighbors = 5 and BOTH
@@ -710,16 +710,13 @@ def geo_cluster_dense_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     the raster and closes the adjacency graph with a recursive CTE —
     min-reachable-label is exactly what label propagation converges
     to (same argument as dedup_clusters)."""
-    from ..geo.cells import cell_from_xy_col, xy_cols
+    from ..geo.cells import cell_from_xy_col, grid_counts, kring_explode
     from .components import connected_components
 
-    res, thr, n = DENSE_RES, DENSE_THR, 1 << DENSE_RES
+    res, thr = DENSE_RES, DENSE_THR
     pages = geocoded_pages(spark, sf_dir, res=res)
-    x, y = xy_cols(F.col("lon"), F.col("lat"), res)
     dense = (
-        pages.select(x.alias("x"), y.alias("y"))
-        .groupBy("x", "y")
-        .agg(F.count("*").alias("n_pages"))
+        grid_counts(pages, res)
         .filter(F.col("n_pages") >= thr)
         .select(
             "x", "y", "n_pages",
@@ -727,20 +724,13 @@ def geo_cluster_dense_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    # 8-neighbor edges among dense cells: explode each cell's ring and
-    # equi-join it back on (x, y) — no theta-join, one shuffle.
-    ring = F.array(
-        *[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in _NB_OFFSETS]
+    # 8-neighbor edges among dense cells: explode each cell's ring
+    # (centre excluded) and equi-join it back on (x, y) — no theta-join,
+    # one shuffle.
+    ringed, nx, ny, _, _ = kring_explode(
+        dense, F.col("x"), F.col("y"), res, 1, inner=0
     )
-    nbrs = (
-        dense.select("cell", "x", "y", F.explode(ring).alias("o"))
-        .select(
-            "cell",
-            F.pmod(F.col("x") + F.col("o.dx"), F.lit(n)).alias("nx"),
-            (F.col("y") + F.col("o.dy")).alias("ny"),
-        )
-        .filter((F.col("ny") >= 0) & (F.col("ny") < n))
-    )
+    nbrs = ringed.select("cell", nx.alias("nx"), ny.alias("ny"))
     edges = nbrs.join(
         dense.select(F.col("x").alias("nx"), F.col("y").alias("ny"), F.col("cell").alias("ncell")),
         ["nx", "ny"],
@@ -815,16 +805,10 @@ def geo_tile_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Map + one count groupBy (map-side combine), then pure JVM string
     concat per GROUP (4^res rows max, not per page). FULL oracle:
     DuckDB rebuilds bounds and WKT from the same integer arithmetic."""
-    from ..geo.cells import cell_from_xy_col, xy_cols
+    from ..geo.cells import cell_from_xy_col, grid_counts
 
     res = _VEC_RES
-    pages = geocoded_pages(spark, sf_dir, res=res)
-    x, y = xy_cols(F.col("lon"), F.col("lat"), res)
-    tiles = (
-        pages.select(x.alias("x"), y.alias("y"))
-        .groupBy("x", "y")
-        .agg(F.count("*").alias("n_pages"))
-    )
+    tiles = grid_counts(geocoded_pages(spark, sf_dir, res=res), res)
     lon0 = F.lit(-5760) + F.col("x") * _VEC_LON_STEP_X32
     lat0 = F.lit(-2880) + F.col("y") * _VEC_LAT_STEP_X32
     lon1 = lon0 + _VEC_LON_STEP_X32
@@ -1230,9 +1214,9 @@ def geo_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     One shuffle per side on the cell key; no cartesian anywhere. FULL
     oracle: DuckDB brute-forces all pairs with the same IEEE distance
     expression."""
-    from ..geo.cells import xy_cols
+    from ..geo.cells import kring_explode, xy_cols
 
-    res, n = _RADIUS_RES, 1 << _RADIUS_RES
+    res = _RADIUS_RES
     r2 = _RADIUS_DEG * _RADIUS_DEG
     pts = (
         geocoded_pages(spark, sf_dir, res=res)
@@ -1240,25 +1224,10 @@ def geo_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("url", "lon", "lat")
     )
     x, y = xy_cols(F.col("lon"), F.col("lat"), res)
-    left = pts.select(F.col("url").alias("qid"), F.col("lon").alias("qlon"), F.col("lat").alias("qlat"), x.alias("x"), y.alias("y"))
-    ring = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        ]
-    )
-    probes = (
-        left.select("qid", "qlon", "qlat", F.explode(ring).alias("o"), "x", "y")
-        .select(
-            "qid",
-            "qlon",
-            "qlat",
-            F.pmod(F.col("x") + F.col("o.dx"), F.lit(n)).alias("nx"),
-            (F.col("y") + F.col("o.dy")).alias("ny"),
-        )
-        .filter((F.col("ny") >= 0) & (F.col("ny") < n))
-    )
+    left = pts.select(F.col("url").alias("qid"), F.col("lon").alias("qlon"), F.col("lat").alias("qlat"))
+    qx, qy = xy_cols(F.col("qlon"), F.col("qlat"), res)
+    ringed, nx, ny, _, _ = kring_explode(left, qx, qy, res, 1)
+    probes = ringed.select("qid", "qlon", "qlat", nx.alias("nx"), ny.alias("ny"))
     right = pts.select(
         F.col("url").alias("cid"), F.col("lon").alias("clon"), F.col("lat").alias("clat"),
         x.alias("nx"), y.alias("ny"),
@@ -1366,34 +1335,14 @@ def geo_focal_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL oracle: DuckDB repeats the stencil with generate_series
     offsets."""
-    from ..geo.cells import cell_from_xy_col, xy_cols
+    from ..geo.cells import cell_from_xy_col, grid_counts, kring_explode
 
-    res, n = DENSE_RES, 1 << DENSE_RES
-    pages = geocoded_pages(spark, sf_dir, res=res)
-    x, y = xy_cols(F.col("lon"), F.col("lat"), res)
-    raster = (
-        pages.select(x.alias("x"), y.alias("y"))
-        .groupBy("x", "y")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    offsets = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        ]
-    )
-    spread = (
-        raster.select("c", "x", "y", F.explode(offsets).alias("o"))
-        .select(
-            "c",
-            F.pmod(F.col("x") + F.col("o.dx"), F.lit(n)).alias("cx"),
-            (F.col("y") + F.col("o.dy")).alias("cy"),
-        )
-        .filter((F.col("cy") >= 0) & (F.col("cy") < n))
-    )
+    res = DENSE_RES
+    raster = grid_counts(geocoded_pages(spark, sf_dir, res=res), res)
+    ringed, nx, ny, _, _ = kring_explode(raster, F.col("x"), F.col("y"), res, 1)
+    spread = ringed.select("n_pages", nx.alias("cx"), ny.alias("cy"))
     return spread.groupBy("cx", "cy").agg(
-        F.sum("c").alias("focal_pages"),
+        F.sum("n_pages").alias("focal_pages"),
         F.count(F.lit(1)).alias("n_contributing"),
     ).select(
         cell_from_xy_col(F.col("cx"), F.col("cy"), res).alias("cell"),
@@ -1671,39 +1620,21 @@ def geo_tile_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exchange carries O(non-empty cells), independent of page
     count. Integer weights keep both engines exact. FULL oracle:
     DuckDB re-synthesizes pages and convolves the same raster."""
-    from ..geo.cells import cell_from_xy_col, xy_cols
+    from ..geo.cells import cell_from_xy_col, grid_counts, kring_explode
 
-    pages = geocoded_pages(spark, sf_dir, res=_SM_RES)
-    x, y = xy_cols(F.col("lon"), F.col("lat"), _SM_RES)
-    base = (
-        pages.select(x.alias("x"), y.alias("y"))
-        .groupBy("x", "y")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    offs = F.explode(
-        F.array(*[
-            F.struct(
-                F.lit(dx).alias("dx"),
-                F.lit(dy).alias("dy"),
-                F.lit(
-                    4 if dx == 0 and dy == 0 else (2 if dx == 0 or dy == 0 else 1)
-                ).alias("kw"),
-            )
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        ])
-    )
-    contrib = base.select("x", "y", "n", offs.alias("o")).select(
-        F.pmod(F.col("x") + F.col("o.dx"), F.lit(_SM_N)).alias("nx"),
-        (F.col("y") + F.col("o.dy")).alias("ny"),
-        (F.col("o.kw") * F.col("n")).alias("w"),
-        F.when((F.col("o.dx") == 0) & (F.col("o.dy") == 0), F.col("n"))
-        .otherwise(F.lit(0))
-        .alias("direct"),
+    base = grid_counts(geocoded_pages(spark, sf_dir, res=_SM_RES), _SM_RES)
+    ringed, nx, ny, dx, dy = kring_explode(base, F.col("x"), F.col("y"), _SM_RES, 1)
+    n = F.col("n_pages")
+    # the separable [1 2 1] x [1 2 1] kernel: centre 4, edge 2, corner 1
+    kw = (F.lit(2) - F.abs(dx)) * (F.lit(2) - F.abs(dy))
+    contrib = ringed.select(
+        nx.alias("nx"),
+        ny.alias("ny"),
+        (kw * n).alias("w"),
+        F.when((dx == 0) & (dy == 0), n).otherwise(F.lit(0)).alias("direct"),
     )
     out = (
-        contrib.filter((F.col("ny") >= 0) & (F.col("ny") < _SM_N))
-        .groupBy("nx", "ny")
+        contrib.groupBy("nx", "ny")
         .agg(
             F.sum("w").cast("long").alias("smooth_weight"),
             F.sum("direct").cast("long").alias("n_direct"),

@@ -74,6 +74,42 @@ def test_kring_pole_clamps():
     assert len(ring) == 6  # top row clipped
 
 
+def test_kring_explode_equals_kring_np(spark):
+    """The Spark stencil emits, per row, exactly the cells of
+    kring_np(ring) minus kring_np(inner), each once — at the poles, at
+    the anti-meridian and inside the grid, for rings below, at and
+    above the grid width, and for the full block, the block without
+    its centre and an annulus."""
+    from pyspark.sql import functions as F
+
+    pts = [(-179.9, 0.0), (179.9, 0.0), (0.0, 89.9), (0.0, -89.9),
+           (179.9, 89.9), (-179.9, -89.9), (10.0, 20.0)]
+    df = spark.createDataFrame(
+        [(i, lon, lat) for i, (lon, lat) in enumerate(pts)],
+        "pid long, lon double, lat double",
+    )
+    for res, ring, inner in [
+        (3, 1, None), (3, 1, 0), (3, 3, 1),   # 2*ring+1 below n = 8
+        (3, 4, None), (3, 4, 0), (3, 4, 1),   # just above: dx capped
+        (3, 8, None), (3, 8, 1),              # ring = n
+        (3, 20, 0), (1, 1, 0), (1, 3, None),  # far above
+    ]:
+        x, y = cells.xy_cols(F.col("lon"), F.col("lat"), res)
+        out, nx, ny, _, _ = cells.kring_explode(df, x, y, res, ring, inner)
+        got: dict[int, list[int]] = {}
+        for r in out.select(
+            "pid", cells.cell_from_xy_col(nx, ny, res).alias("c")
+        ).collect():
+            got.setdefault(r.pid, []).append(r.c)
+        for pid, (lon, lat) in enumerate(pts):
+            c = cells.encode_np(np.array([lon]), np.array([lat]), res)[0]
+            want = set(cells.kring_np(c, ring).tolist())
+            if inner is not None:
+                want -= set(cells.kring_np(c, inner).tolist())
+            case = f"res={res} ring={ring} inner={inner} pt={pts[pid]}"
+            assert sorted(got.get(pid, [])) == sorted(want), case
+
+
 def test_cover_bbox_superset():
     cc = cells.cover_bbox_np(10.0, 40.0, 12.0, 42.0, 7)
     # every grid point inside the bbox must land in a covered cell

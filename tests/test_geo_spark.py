@@ -264,16 +264,18 @@ def test_explode_kring_no_duplicate_cells_any_ring(spark):
     probe — the wrap bug class: when 2*ring+1 > 2^res, un-deduped x
     offsets pmod onto the same cell (round-2 ADVICE). Checked across
     rings smaller than, equal to, and far wider than the grid."""
-    from osm_data_classification_spark.operators.geo_ops import _explode_kring
+    from osm_data_classification_spark.geo.cells import kring_explode, xy_cols
 
     pts = spark.createDataFrame(
         [(i, -170.0 + 37.0 * i, -80.0 + 16.0 * i) for i in range(10)],
         "pid long, lon double, lat double",
     )
     for res, ring in [(1, 1), (2, 1), (2, 3), (3, 2), (3, 8), (5, 1), (5, 40)]:
-        ex = _explode_kring(pts, "lon", "lat", res, ring)
+        x, y = xy_cols(F.col("lon"), F.col("lat"), res)
+        out, nx, ny, _, _ = kring_explode(pts, x, y, res, ring)
+        ex = out.select("pid", nx.alias("nx"), ny.alias("ny"))
         total = ex.count()
-        distinct = ex.select("pid", "__cell").distinct().count()
+        distinct = ex.distinct().count()
         assert total == distinct, f"res={res} ring={ring}: dup cells"
         n = 1 << res
         width = min(2 * ring + 1, n)
