@@ -459,3 +459,21 @@ def test_stream_stream_left_join_null_timing(spark, sf_dir):
         .collect()
     }
     assert nulls == want_null
+
+
+def test_stream_tiles_job_removes_its_own_checkpoint(spark, tmp_path, monkeypatch):
+    """jobs/stream_tiles.py without --checkpoint makes a randomly named
+    checkpoint dir no later run can resume from: the job removes it
+    when it ends."""
+    import sys
+
+    from jobs import stream_tiles as job
+
+    (tmp_path / "src").mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(sys, "argv", [
+        "stream_tiles.py", "--src", str(tmp_path / "src"),
+        "--partials", str(tmp_path / "p"), "--out", str(tmp_path / "out"),
+    ])
+    job.main()
+    assert not list(tmp_path.glob("ckpt_stream_tiles_*"))
