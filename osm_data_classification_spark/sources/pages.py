@@ -156,8 +156,7 @@ def geocode_cols(text: Column) -> tuple[Column, Column]:
     """lon/lat Column expressions from the embedded place token.
 
     Pure JVM (regexp + arithmetic) — the geocode of 10^12 rows never
-    crosses into Python. A pandas-UDF variant with identical semantics
-    lives in functions/geo_udfs.py for the API-parity surface."""
+    crosses into Python."""
     # try_cast, not cast: regexp_extract yields "" on no-match, and
     # under ANSI mode (Spark 4 default) CAST('' AS BIGINT) THROWS —
     # a junk page on a real crawl must geocode to NULL, not kill the
