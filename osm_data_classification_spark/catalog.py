@@ -30,7 +30,7 @@ from .operators.relational import QuerySpec
 # tests/test_reference_suites.py).
 PRIORITY: tuple[str, ...] = (
     # --- BEGIN GENERATED WINDOW (tools/gen_priority.py) ---
-    # generated-from-rounds: 1,2,3,4
+    # generated-from-rounds: 1,2,3,4,5
     # anchors (pinned, round-over-round continuity):
     "geo_pip_join_exact",
     "geo_knn_join_exact",
@@ -38,51 +38,51 @@ PRIORITY: tuple[str, ...] = (
     "rollup_res_ladder",
     "ref_user_features",
     # never-driver-graded full oracles, novelty-first (TPC-H tail last):
-    "stream_stream_join",
-    "stream_stream_left_join",
-    "dedup_containment",
-    "dedup_exact_substring_spans",
-    "ann_pq_trained",
-    "geo_tile_smooth",
-    "geo_contributor_stays",
-    "crawl_budget_allocate",
-    "grouped_cusum_apply",
-    "events_anomaly_mad",
-    "webtext_host_boilerplate",
-    "webgraph_host_coupling",
-    "bpe_apply_merge",
-    "table_snapshot_merge",
-    "table_schema_evolution",
-    "sql_tpch_q6",
-    "sql_tpch_q4",
-    "sql_tpch_q10",
-    "sql_tpch_q7",
-    "sql_tpch_q12",
-    "sql_tpch_q19",
-    "sql_tpch_q2",
-    "sql_tpch_q8",
-    "sql_tpch_q9",
-    "sql_tpch_q11",
-    "sql_tpch_q13",
-    "sql_tpch_q15",
-    "sql_tpch_q16",
-    "sql_tpch_q17",
-    "sql_tpch_q20",
-    "sql_tpch_q22",
-    "join_lineitem_orders",
-    "anti_join_inactive",
-    "range_join_events_day",
-    "agg_element_meta",
-    "agg_activity_histogram",
-    "topk_event_types",
-    "window_rank_users",
-    "except_new_users",
-    "intersect_buyers",
-    "scalar_datetime",
-    "scalar_string_norm",
-    "scalar_math_ratios",
-    "array_explode_embedding",
-    "array_l2_norm",
+    "stream_tumbling_daily",
+    "stream_sliding_hourly",
+    "dedup_ngram_jaccard",
+    "dedup_simhash",
+    "dedup_embedding_cosine",
+    "text_token_count",
+    "text_fingerprint",
+    "ann_cosine_topk",
+    "scan_pages",
+    "filter_lang_en",
+    "distinct_users",
+    "join_orders_customer",
+    "star_join_3way",
+    "semi_join_active_users",
+    "agg_pivot_eventtype",
+    "agg_user_features",
+    "rollup_lang_source",
+    "normalize_minmax",
+    "window_version_chain",
+    "window_running_sum",
+    "window_avg_gap",
+    "window_topk_per_group",
+    "sort_limit_report",
+    "union_sources",
+    "json_extract_props",
+    "stream_session_agg",
+    "dedup_exact",
+    "dedup_minhash_lsh",
+    "text_quality_score",
+    "text_lang_id",
+    "text_hash_embedding",
+    "ann_lsh_bucketed",
+    "ann_ivf_topk",
+    "geo_cell_encode",
+    "kmeans_assign_fixed",
+    "pca_project_fixed",
+    "mm_binary_meta",
+    "ref_element_metadata",
+    "ref_changeset_metadata",
+    "ref_editor_topk",
+    "skew_salted_join",
+    "pages_text_extract",
+    "grouped_quantiles_apply",
+    "sql_tpch_q1",
+    "sql_tpch_q3",
     # --- END GENERATED WINDOW ---
 )
 
