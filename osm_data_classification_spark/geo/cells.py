@@ -239,8 +239,9 @@ def kring_explode(
     n = 1 << res
     # x wraps, so when the ring spans the whole grid (2*ring+1 >= n)
     # distinct dx offsets must be capped at exactly n, or pmod maps two
-    # offsets to the same cell and a row sees the same neighbour twice.
-    # y clamps, so its range only needs trimming to the grid height for
+    # offsets to the same cell and a row sees the same neighbour twice
+    # (in the kNN join: duplicate candidate rows, a wrong top-k, and a
+    # certification bound that would pass it). y clamps, so its range only needs trimming to the grid height for
     # plan size.
     if 2 * ring + 1 <= n:
         dx_lo, dx_hi = -ring, ring
