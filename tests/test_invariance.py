@@ -85,6 +85,22 @@ class TestCheckpointResume:
         assert calls["n"] == 1  # not rebuilt
         assert table_checksum(out1) == table_checksum(out2)
 
+    def test_empty_stage_resumes_without_rebuild(self, spark, sf_dir, tmp):
+        """A 0-row stage writes no lineage rows; its checkpoint is still
+        valid, so a resume reuses it instead of rebuilding."""
+        calls = {"n": 0}
+
+        def build():
+            calls["n"] += 1
+            return load_table(spark, sf_dir, "events").filter("event_id < 0")
+
+        out1 = run_stage(spark, tmp, build, cell_col="user_id")
+        assert calls["n"] == 1 and out1.count() == 0
+        assert checkpoint_exists(spark, tmp)
+        out2 = run_stage(spark, tmp, build, cell_col="user_id")
+        assert calls["n"] == 1  # not rebuilt
+        assert out2.count() == 0 and out2.schema == out1.schema
+
     def test_invalid_checkpoint_recomputed(self, spark, sf_dir, tmp):
         df = load_table(spark, sf_dir, "events").select("event_id", "user_id")
         checkpoint_write(df, tmp)
