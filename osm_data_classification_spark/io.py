@@ -5,7 +5,9 @@ disk — the file IS the checkpoint (SURVEY.md §3.1 `[U: luigi targets]`).
 The new engine's equivalent is: parquet/Iceberg snapshot per stage plus
 a **lineage/metrics side table** with one row per output partition
 ``(partition_id, input_rows, output_rows, cell_range, checksum)``
-(BASELINE.json:6), enabling exact resume-from-checkpoint.
+(BASELINE.json:6), enabling exact resume-from-checkpoint. That pair,
+written and validated by :func:`run_stage`, is the one checkpoint
+format and the one resume path.
 
 Locally the "catalog" is a directory of parquet tables; on a cluster
 swap ``format("parquet")`` for ``format("iceberg")`` — the engine code
@@ -91,16 +93,14 @@ def _sum_mod_2_62(col: F.Column) -> F.Column:
     ).cast("long")
 
 
-def lineage_rows(
-    df: DataFrame,
-    cell_col: str | None = None,
-    input_rows: int | None = None,
-) -> DataFrame:
+def lineage_rows(df: DataFrame, cell_col: str | None = None) -> DataFrame:
     """Per-partition lineage rows (BASELINE.json:6).
 
     Schema: partition_id, input_rows, output_rows, cell_min, cell_max,
-    checksum. Pure built-in aggregation — one narrow pass, no shuffle
-    beyond the final tiny groupBy on partition_id (#partitions rows).
+    checksum. ``input_rows`` is a null long: a checkpoint is written
+    from its data alone, so no stage has an input count to record.
+    Pure built-in aggregation — one narrow pass, no shuffle beyond the
+    final tiny groupBy on partition_id (#partitions rows).
     """
     cell = F.col(cell_col) if cell_col else F.lit(None).cast("long")
     return (
@@ -113,7 +113,7 @@ def lineage_rows(
         )
         .select(
             F.col("__pid").alias("partition_id"),
-            F.lit(input_rows).cast("long").alias("input_rows"),
+            F.lit(None).cast("long").alias("input_rows"),
             "output_rows",
             "cell_min",
             "cell_max",
@@ -137,22 +137,17 @@ def table_checksum(df: DataFrame) -> int:
 # ---------------------------------------------------------------------------
 
 
-def checkpoint_write(
-    df: DataFrame,
-    path: str,
-    cell_col: str | None = None,
-    mode: str = "overwrite",
-) -> None:
+def checkpoint_write(df: DataFrame, path: str, cell_col: str | None = None) -> None:
     """Materialize a stage result + its lineage side table.
 
     Layout: ``{path}/data`` (the rows) and ``{path}/_lineage`` (the
     metrics table). On Iceberg this maps to a snapshot append plus a
     row-append to a metrics table; the resume contract is identical.
     """
-    df.write.mode(mode).parquet(os.path.join(path, "data"))
+    df.write.mode("overwrite").parquet(os.path.join(path, "data"))
     spark = df.sparkSession
     data = spark.read.parquet(os.path.join(path, "data"))
-    lineage_rows(data, cell_col=cell_col).write.mode(mode).parquet(
+    lineage_rows(data, cell_col=cell_col).write.mode("overwrite").parquet(
         os.path.join(path, "_lineage")
     )
 
@@ -182,7 +177,19 @@ def checkpoint_exists(spark: SparkSession, path: str) -> bool:
         return False
 
 
-def checkpoint_read(spark: SparkSession, path: str) -> DataFrame:
+def run_stage(
+    spark: SparkSession,
+    path: str,
+    build: "callable",
+    cell_col: str | None = None,
+    force: bool = False,
+) -> DataFrame:
+    """Resume-from-checkpoint: return the committed stage output if its
+    lineage validates, else build → write → read back. This is the one
+    way a stage is written and resumed; a damaged checkpoint (see
+    :func:`checkpoint_exists`) is rebuilt whole."""
+    if force or not checkpoint_exists(spark, path):
+        checkpoint_write(build(), path, cell_col=cell_col)
     return spark.read.parquet(os.path.join(path, "data"))
 
 
@@ -297,226 +304,6 @@ def cluster_write(
         .write.mode(mode)
         .parquet(path)
     )
-
-
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """Bin-pack small-file compaction — the local emulation of
-    Iceberg's ``rewrite_data_files`` maintenance action (SURVEY.md
-    §4.1). Streaming sinks and fine-grained upserts leave a table as
-    thousands of tiny parquet files; at 100 TB that is the classic
-    small-file problem (every file is a scan task + a name-node entry
-    + a footer fetch). Compaction reads the fragmented table and
-    rewrites it as ``ceil(total_bytes / target_bytes)`` files.
-
-    Scale shape: ``coalesce`` (NOT ``repartition``) — pure bin-packing
-    merges input splits without a shuffle, exactly like Iceberg's
-    bin-pack strategy; a 100-TB compaction moves every byte once,
-    map-only. The rewrite goes to a temp dir then swaps in atomically
-    (same protocol as :func:`upsert`), so readers never observe a
-    half-compacted table. Returns before/after stats; content
-    equality is checksum-gated in tests/test_layout.py via
-    :func:`table_checksum` (order-insensitive, so the merge order of
-    coalesce cannot matter)."""
-    import math
-    import shutil
-    import uuid
-
-    def _data_files(p):
-        out = []
-        for root, _dirs, files in os.walk(p):
-            out.extend(
-                os.path.join(root, f)
-                for f in files
-                if f.endswith(".parquet") and not f.startswith("_")
-            )
-        return out
-
-    before = _data_files(path)
-    bytes_before = sum(os.path.getsize(f) for f in before)
-    n_target = max(1, math.ceil(bytes_before / target_bytes))
-    df = spark.read.parquet(path)
-    tmp = os.path.join(
-        os.path.dirname(path.rstrip("/")),
-        f"_compact_{uuid.uuid4().hex[:8]}",
-    )
-    df.coalesce(n_target).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.replace(tmp, path)
-    after = _data_files(path)
-    return {
-        "files_before": len(before),
-        "files_after": len(after),
-        "bytes_before": bytes_before,
-        "bytes_after": sum(os.path.getsize(f) for f in after),
-    }
-
-
-# ---------------------------------------------------------------------------
-# CSV / JSON checkpoint formats (SURVEY.md §2.1 S2)
-#
-# The reference hands data between luigi tasks as CSV files `[U: luigi
-# targets]`; these helpers provide the same interchange surface with
-# schema round-tripping (CSV carries no types, so the schema is saved
-# alongside and re-applied on read — type-lossless, unlike the
-# reference's stringly CSVs).
-# ---------------------------------------------------------------------------
-
-
-def write_csv_checkpoint(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    import json as _json
-
-    df.write.mode(mode).option("header", True).csv(os.path.join(path, "data"))
-    schema_path = os.path.join(path, "_schema.json")
-    with open(schema_path, "w") as f:
-        f.write(_json.dumps(df.schema.jsonValue()))
-
-
-def read_csv_checkpoint(spark: SparkSession, path: str) -> DataFrame:
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    with open(os.path.join(path, "_schema.json")) as f:
-        schema = StructType.fromJson(_json.loads(f.read()))
-    return (
-        spark.read.option("header", True)
-        .schema(schema)
-        .csv(os.path.join(path, "data"))
-    )
-
-
-def write_json_checkpoint(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
-
-
-def read_json_checkpoint(
-    spark: SparkSession, path: str, schema: "str | None" = None
-) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def run_stage(
-    spark: SparkSession,
-    path: str,
-    build: "callable",
-    cell_col: str | None = None,
-    force: bool = False,
-) -> DataFrame:
-    """Resume-from-checkpoint: return the committed stage output if its
-    lineage validates, else build → write → read back."""
-    if not force and checkpoint_exists(spark, path):
-        return checkpoint_read(spark, path)
-    checkpoint_write(build(), path, cell_col=cell_col)
-    return checkpoint_read(spark, path)
-
-
-# ---------------------------------------------------------------------------
-# Partition-granular resume (BASELINE.json:6 "exact resume-from-checkpoint")
-# ---------------------------------------------------------------------------
-
-
-def partitioned_checkpoint_write(df: DataFrame, path: str, part_col: str) -> None:
-    """Checkpoint a stage partitioned by ``part_col`` (hive layout:
-    ``data/{part_col}=v/``) plus a PER-VALUE lineage table
-    ``(part, output_rows, checksum)`` — the unit of resume is one
-    partition value, not the whole stage."""
-    df.write.mode("overwrite").partitionBy(part_col).parquet(
-        os.path.join(path, "data")
-    )
-    spark = df.sparkSession
-    data = spark.read.parquet(os.path.join(path, "data")).select(*df.columns)
-    lin = _lineage_agg(data, part_col, data.drop(part_col))
-    lin.write.mode("overwrite").parquet(os.path.join(path, "_lineage"))
-
-
-def resume_partitions(
-    spark: SparkSession, path: str, part_col: str, recompute
-) -> tuple[DataFrame, list]:
-    """Heal a partitioned checkpoint: diff the on-disk data against
-    the lineage table per partition value (missing directory, row
-    count drift, or checksum drift → damaged) and recompute ONLY the
-    damaged partitions via ``recompute(spark)`` filtered to them,
-    rewriting each with dynamic partition overwrite. Healthy
-    partitions are never re-read beyond the audit and never
-    rewritten — resume cost is O(damage), not O(stage)
-    (BASELINE.json:6: per-partition lineage enables exact resume).
-
-    Returns (healed DataFrame, list of healed partition values)."""
-    lin_p = os.path.join(path, "_lineage")
-    data_p = os.path.join(path, "data")
-    expected = {
-        r[part_col]: (r["output_rows"], r["checksum"])
-        for r in spark.read.parquet(lin_p).collect()
-    }
-    from pyspark.errors import AnalysisException
-
-    try:
-        data = spark.read.parquet(data_p)
-    except AnalysisException:
-        # data/ missing entirely (first run or total loss): every
-        # lineage partition is damaged. Any OTHER read error must
-        # propagate — a blanket except here made a transient IO
-        # failure indistinguishable from total damage (r3 ADVICE).
-        actual = {}
-    else:
-        actual = {
-            r[part_col]: (r["output_rows"], r["checksum"])
-            for r in _lineage_agg(data, part_col, data.drop(part_col)).collect()
-        }
-    # an on-disk partition the lineage never wrote is foreign data —
-    # including it in the healed frame would silently launder it into
-    # the checkpoint's contract (r3 ADVICE: fail loudly on extras)
-    extras = sorted(set(actual) - set(expected), key=str)
-    if extras:
-        raise ValueError(
-            f"resume_partitions: on-disk partitions not in lineage "
-            f"{lin_p}: {extras} — foreign/corrupt data under {data_p}"
-        )
-    damaged = [p for p, exp in expected.items() if actual.get(p) != exp]
-    if damaged:
-        fresh = recompute(spark).filter(F.col(part_col).isin(damaged))
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            fresh.write.mode("overwrite").partitionBy(part_col).parquet(data_p)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return spark.read.parquet(data_p), damaged
-
-
-def snapshot_expire(path: str, keep_last: int) -> list[int]:
-    """Expire old snapshots (Iceberg ``expire_snapshots`` analog):
-    drop all but the newest ``keep_last`` versions from the manifest
-    FIRST (atomic swap — readers can never resolve an expired
-    version), then delete the orphaned ``v=N`` directories. Returns
-    the expired version numbers. A version still in the manifest is
-    never deleted, and a crash between manifest swap and directory
-    removal only leaves unreferenced directories (safe garbage, swept
-    by the next expire) — never a referenced-but-missing version."""
-    import json as _json
-    import shutil
-
-    if keep_last < 1:
-        raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-    hist = snapshot_history(path)
-    if len(hist) <= keep_last:
-        return []
-    expired = [m["version"] for m in hist[:-keep_last]]
-    man_p = os.path.join(path, "_snapshots.json")
-    tmp = man_p + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(_json.dumps(hist[-keep_last:]))
-    os.replace(tmp, man_p)
-    for v in expired:
-        shutil.rmtree(os.path.join(path, f"v={v}"), ignore_errors=True)
-    return expired
 
 
 def read_evolved(spark: SparkSession, *paths: str) -> DataFrame:

@@ -63,12 +63,11 @@ def pip_join(
     points: DataFrame,
     packed: PackedPolygons,
     res: int = 7,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
     refine: bool = True,
     cover_broadcast_max: int | None = None,
 ) -> DataFrame:
-    """points ⨝ polygons with `point inside polygon` semantics.
+    """points ⨝ polygons with `point inside polygon` semantics;
+    ``points`` carries ``lon``/``lat`` columns.
 
     Phase 1 (coarse, JVM): encode each point's cell at ``res`` and
     equi-join against the (cell, boundary_id) bbox-cover table — the
@@ -108,7 +107,7 @@ def pip_join(
         # physical plan, threshold or not).
         cover = cover.hint("shuffle_hash")
     cand = points.withColumn(
-        "__cell", cell_encode_col(F.col(lon_col), F.col(lat_col), res)
+        "__cell", cell_encode_col(F.col("lon"), F.col("lat"), res)
     ).join(cover, "__cell")
     if not refine:
         return cand.drop("__cell")
@@ -122,7 +121,7 @@ def pip_join(
         return pd.Series(pk.contains(idx, lon.to_numpy(), lat.to_numpy()))
 
     return cand.filter(
-        _inside(F.col("boundary_id"), F.col(lon_col), F.col(lat_col))
+        _inside(F.col("boundary_id"), F.col("lon"), F.col("lat"))
     ).drop("__cell")
 
 
@@ -227,6 +226,15 @@ def knn_join(
 
     Pick ``res`` so that a ring block holds ≳k candidates (see
     :func:`knn_auto_res`).
+
+    Caching: each certifying pass persists its top-k ``stage`` frame
+    and the uncertified ``remaining`` frame, and the returned frame
+    reads them, so they stay cached after this call and after the
+    caller's action. The caller releases them with
+    ``spark.catalog.clearCache()`` once the result has been consumed,
+    as bench.py and perfbench do; perfbench's
+    ``geo_ops.knn_join.cached_rdds_left`` counts what is left before
+    that call.
     """
     qlon, qlat = "lon", "lat"
     n = 1 << res

@@ -217,67 +217,3 @@ def test_dedup_pairs_partitioning_invariant(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert a == b and len(a) > 0
-
-
-class TestPartitionResume:
-    """Partition-granular exact resume (io.resume_partitions): damage
-    ONE hive partition and healing must rewrite exactly that one,
-    byte-equivalently, leaving the rest untouched."""
-
-    @pytest.fixture()
-    def tmp(self):
-        d = tempfile.mkdtemp(prefix="presume_")
-        yield d
-        shutil.rmtree(d, ignore_errors=True)
-
-    def test_heals_only_damaged_partition(self, spark, sf_dir, tmp):
-        import os
-        import shutil
-
-        from osm_data_classification_spark.geo.cells import cell_parent_col
-        from osm_data_classification_spark.io import (
-            partitioned_checkpoint_write,
-            resume_partitions,
-            table_checksum,
-        )
-        from osm_data_classification_spark.sources.pages import geocoded_pages
-
-        def stage(s):
-            return (
-                geocoded_pages(s, sf_dir, res=7)
-                .select("url", "warc_ts", "cell")
-                .withColumn("part", cell_parent_col(F.col("cell"), 7, 2))
-            )
-
-        partitioned_checkpoint_write(stage(spark), tmp, "part")
-        before = spark.read.parquet(os.path.join(tmp, "data"))
-        want_sum = table_checksum(before.select("url", "warc_ts", "cell"))
-        parts = sorted(
-            d for d in os.listdir(os.path.join(tmp, "data")) if d.startswith("part=")
-        )
-        assert len(parts) >= 3
-
-        # undamaged: audit says nothing to heal
-        _, healed = resume_partitions(spark, tmp, "part", stage)
-        assert healed == []
-
-        # damage one partition dir; record the others' file inventory
-        victim = parts[1]
-        victim_val = int(victim.split("=")[1])
-        others_before = {
-            p: sorted(os.listdir(os.path.join(tmp, "data", p)))
-            for p in parts
-            if p != victim
-        }
-        shutil.rmtree(os.path.join(tmp, "data", victim))
-
-        healed_df, healed = resume_partitions(spark, tmp, "part", stage)
-        assert healed == [victim_val]
-        got_sum = table_checksum(healed_df.select("url", "warc_ts", "cell"))
-        assert got_sum == want_sum
-        # untouched partitions keep their exact files
-        for p, files in others_before.items():
-            assert sorted(os.listdir(os.path.join(tmp, "data", p))) == files
-        # and a second audit is clean
-        _, again = resume_partitions(spark, tmp, "part", stage)
-        assert again == []

@@ -1,5 +1,7 @@
-"""S2 interchange formats: CSV (the reference's luigi hand-off medium)
-and JSON checkpoints round-trip with schema fidelity."""
+"""Warehouse table writes in io.py: upsert (MERGE semantics and
+idempotence), the snapshot log (time travel, the driver-graded
+snapshot+MERGE entry's laws), and the engine.zip that ships the
+package. Stage checkpoints are tested in tests/test_invariance.py."""
 
 from __future__ import annotations
 
@@ -9,14 +11,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from osm_data_classification_spark.io import (
-    load_table,
-    read_csv_checkpoint,
-    read_json_checkpoint,
-    table_checksum,
-    write_csv_checkpoint,
-    write_json_checkpoint,
-)
+from osm_data_classification_spark.io import load_table
 
 
 @pytest.fixture()
@@ -24,28 +19,6 @@ def tmp():
     d = tempfile.mkdtemp(prefix="iofmt_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
-
-
-def test_csv_checkpoint_roundtrip_schema_and_values(spark, sf_dir, tmp):
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    write_csv_checkpoint(ev, tmp)
-    back = read_csv_checkpoint(spark, tmp)
-    assert back.schema == ev.schema  # CSV alone is typeless; sidecar restores
-    assert back.count() == ev.count()
-    assert table_checksum(back.select("event_id", "user_id", "event_type")) == \
-        table_checksum(ev.select("event_id", "user_id", "event_type"))
-
-
-def test_json_checkpoint_roundtrip(spark, sf_dir, tmp):
-    docs = load_table(spark, sf_dir, "documents")
-    write_json_checkpoint(docs, tmp)
-    back = read_json_checkpoint(
-        spark, tmp, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    assert back.count() == docs.count()
-    assert table_checksum(back) == table_checksum(docs)
 
 
 def test_upsert_merge_semantics(spark, sf_dir, tmp):

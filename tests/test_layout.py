@@ -185,84 +185,6 @@ def test_zorder_cluster_write_skips_files_on_box_query(spark, sf_dir):
         shutil.rmtree(d_rr, ignore_errors=True)
 
 
-def test_compact_table_binpacks_without_changing_content(spark, sf_dir):
-    """Small-file compaction (io.compact_table, the rewrite_data_files
-    analog): a table fragmented into ~200 tiny files compacts to the
-    bin-packed count implied by target_bytes, with the
-    order-insensitive table checksum — and the exact row multiset it
-    digests — unchanged. Also pins the no-op direction: a compacted
-    table re-compacted at the same target stays put (idempotent
-    maintenance)."""
-    from osm_data_classification_spark.io import compact_table, table_checksum
-
-    orders = load_table(spark, sf_dir, "orders")
-    d = tempfile.mkdtemp(prefix="compact_") + "/t"
-    try:
-        orders.repartition(200).write.parquet(d)
-        n_before = sum(
-            f.endswith(".parquet") for f in os.listdir(d)
-        )
-        assert n_before == 200
-        before_sum = table_checksum(spark.read.parquet(d))
-
-        stats = compact_table(spark, d, target_bytes=256 * 1024)
-        assert stats["files_before"] == 200
-        assert stats["files_after"] < 200 / 4
-        import math
-        assert stats["files_after"] == max(
-            1, math.ceil(stats["bytes_before"] / (256 * 1024))
-        )
-        after = spark.read.parquet(d)
-        assert table_checksum(after) == before_sum
-        assert after.count() == orders.count()
-
-        again = compact_table(spark, d, target_bytes=256 * 1024)
-        # bin-packing is a fixpoint modulo parquet re-encoding: the
-        # second pass may merge 1-2 files as sizes settle, never grow
-        assert again["files_after"] <= stats["files_after"]
-        assert table_checksum(spark.read.parquet(d)) == before_sum
-    finally:
-        shutil.rmtree(os.path.dirname(d), ignore_errors=True)
-
-
-def test_snapshot_expire_keeps_pinned_versions_resolvable(spark, sf_dir):
-    """snapshot_expire: only the newest keep_last versions survive,
-    expired versions fail LOUDLY on read, survivors re-read
-    byte-identically, and the manifest swap is ordered so a version
-    still referenced is never deleted."""
-    import pytest as _pytest
-
-    from osm_data_classification_spark.io import (
-        load_table,
-        snapshot_expire,
-        snapshot_history,
-        snapshot_read,
-        snapshot_write,
-        table_checksum,
-    )
-
-    d = tempfile.mkdtemp(prefix="snapexp_")
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        sums = {}
-        for k in range(1, 5):
-            df = ev.filter(F.col("event_id") % 4 < k).select("event_id", "user_id")
-            v = snapshot_write(df, d)
-            sums[v] = table_checksum(snapshot_read(spark, d, v))
-        assert snapshot_expire(d, 10) == []  # nothing to do
-        assert snapshot_expire(d, 2) == [1, 2]
-        assert [m["version"] for m in snapshot_history(d)] == [3, 4]
-        for v in (3, 4):
-            assert table_checksum(snapshot_read(spark, d, v)) == sums[v]
-        for v in (1, 2):
-            with _pytest.raises(KeyError):
-                snapshot_read(spark, d, v)
-        with _pytest.raises(ValueError):
-            snapshot_expire(d, 0)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def test_read_evolved_merges_added_column(spark, sf_dir):
     """read_evolved: a directory written before a column existed
     surfaces NULL for it; values and counts line up across the union."""
