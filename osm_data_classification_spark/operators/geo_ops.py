@@ -228,13 +228,11 @@ def knn_join(
     :func:`knn_auto_res`).
 
     Caching: each certifying pass persists its top-k ``stage`` frame
-    and the uncertified ``remaining`` frame, and the returned frame
-    reads them, so they stay cached after this call and after the
-    caller's action. The caller releases them with
-    ``spark.catalog.clearCache()`` once the result has been consumed,
-    as bench.py and perfbench do; perfbench's
-    ``geo_ops.knn_join.cached_rdds_left`` counts what is left before
-    that call.
+    and the uncertified ``remaining`` frame; the result reads them, so
+    they stay cached after the caller's action. The caller releases
+    them with ``spark.catalog.clearCache()`` once the result is
+    consumed, as bench.py and perfbench do (perfbench's
+    ``geo_ops.knn_join.cached_rdds_left`` counts them).
     """
     qlon, qlat = "lon", "lat"
     n = 1 << res
