@@ -217,3 +217,30 @@ def test_dedup_pairs_partitioning_invariant(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert a == b and len(a) > 0
+
+
+def test_global_shuffle_is_a_permutation_and_stable(spark, sf_dir):
+    """sample_global_shuffle: positions within each shard are dense
+    0..n-1, every doc appears exactly once, and the assignment is
+    bit-identical across two independent evaluations (no rand()
+    anywhere)."""
+    from osm_data_classification_spark.operators.text import (
+        SHUFFLE_SHARDS,
+        sample_global_shuffle,
+    )
+
+    a = sample_global_shuffle(spark, sf_dir).collect()
+    b = sample_global_shuffle(spark, sf_dir).collect()
+    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+    docs = [r["doc_id"] for r in a]
+    assert len(docs) == len(set(docs))
+    by_shard = {}
+    for r in a:
+        assert 0 <= r["shard"] < SHUFFLE_SHARDS
+        by_shard.setdefault(r["shard"], []).append(r)
+    for rows in by_shard.values():
+        rows.sort(key=lambda r: r["pos"])
+        assert [r["pos"] for r in rows] == list(range(len(rows)))
+        # pos order == (shuffle_key, doc_id) order
+        keys = [(r["shuffle_key"], r["doc_id"]) for r in rows]
+        assert keys == sorted(keys)

@@ -108,3 +108,39 @@ def test_budget_allocate_take_while_not_topk(spark, sf_dir):
             assert r["maxk"] < r["mind"], f"non-prefix fetch set on host {r['host']}"
     kept_counts = {r["n_kept"] for r in per_host}
     assert len(kept_counts) > 1, "every host kept the same count — looks like top-k"
+
+
+def test_quantile_bound_flag_true_on_real_data(spark, sf_dir):
+    from osm_data_classification_spark.operators.relational import CATALOG
+
+    rows = CATALOG["agg_quantile_bound"].fn(spark, sf_dir).collect()
+    assert len(rows) > 0
+    assert all(r["within_bound"] for r in rows)
+
+
+def test_quantile_exact_p50_matches_numpy(spark, sf_dir):
+    """The emitted exact p50 must equal the floor((n-1)/2)-indexed
+    sorted element per group (quantile_disc definition)."""
+    import numpy as np
+
+    from osm_data_classification_spark.io import load_table
+    from osm_data_classification_spark.operators.relational import CATALOG
+
+    got = {
+        r["event_type"]: r
+        for r in CATALOG["agg_quantile_bound"].fn(spark, sf_dir).collect()
+    }
+    ev = (
+        load_table(spark, sf_dir, "events")
+        .where(F.col("value").isNotNull())
+        .select("event_type", "value")
+        .collect()
+    )
+    by_type: dict[str, list[float]] = {}
+    for r in ev:
+        by_type.setdefault(r["event_type"], []).append(r["value"])
+    for et, vals in by_type.items():
+        v = np.sort(np.array(vals))
+        want = int(np.floor(v[(len(v) - 1) // 2] * 1000))
+        assert got[et]["exact_p50_x1000"] == want, et
+        assert got[et]["n"] == len(vals)

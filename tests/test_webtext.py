@@ -1,5 +1,5 @@
 """Unit tests for the round-3 web-curation operators
-(operators/webtext.py) and the quantile-sketch bound entry.
+(operators/webtext.py).
 
 The driver's oracle gate covers sf0.01 value equality; these tests pin
 the SEMANTICS on hand-built rows where the expected answer is written
@@ -255,42 +255,6 @@ def test_stratified_sample_deterministic_and_rate_accurate(spark, sf_dir):
         assert abs(got - want) <= 4 * sigma + 1 / total, (lang, got, want)
 
 
-def test_quantile_bound_flag_true_on_real_data(spark, sf_dir):
-    from osm_data_classification_spark.operators.relational import CATALOG
-
-    rows = CATALOG["agg_quantile_bound"].fn(spark, sf_dir).collect()
-    assert len(rows) > 0
-    assert all(r["within_bound"] for r in rows)
-
-
-def test_quantile_exact_p50_matches_numpy(spark, sf_dir):
-    """The emitted exact p50 must equal the floor((n-1)/2)-indexed
-    sorted element per group (quantile_disc definition)."""
-    import numpy as np
-
-    from osm_data_classification_spark.io import load_table
-    from osm_data_classification_spark.operators.relational import CATALOG
-
-    got = {
-        r["event_type"]: r
-        for r in CATALOG["agg_quantile_bound"].fn(spark, sf_dir).collect()
-    }
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("value").isNotNull())
-        .select("event_type", "value")
-        .collect()
-    )
-    by_type: dict[str, list[float]] = {}
-    for r in ev:
-        by_type.setdefault(r["event_type"], []).append(r["value"])
-    for et, vals in by_type.items():
-        v = np.sort(np.array(vals))
-        want = int(np.floor(v[(len(v) - 1) // 2] * 1000))
-        assert got[et]["exact_p50_x1000"] == want, et
-        assert got[et]["n"] == len(vals)
-
-
 def test_decontaminate_flags_exactly_planted_overlaps(spark, sf_dir):
     """The dedup corpus plants exact copies of originals < 25 (at
     +20000) and first-token-dropped near copies of originals < 50 (at
@@ -496,33 +460,6 @@ def test_repetition_and_paragraph_bounds_randomized(spark):
             assert r["dup_bigram_x1000"] == want
         for r in dedup_paragraph_global(spark, d).collect():
             assert 0 <= r["n_kept"] <= r["n_chunks"]
-
-
-def test_global_shuffle_is_a_permutation_and_stable(spark, sf_dir):
-    """sample_global_shuffle: positions within each shard are dense
-    0..n-1, every doc appears exactly once, and the assignment is
-    bit-identical across two independent evaluations (no rand()
-    anywhere)."""
-    from osm_data_classification_spark.operators.text import (
-        SHUFFLE_SHARDS,
-        sample_global_shuffle,
-    )
-
-    a = sample_global_shuffle(spark, sf_dir).collect()
-    b = sample_global_shuffle(spark, sf_dir).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    docs = [r["doc_id"] for r in a]
-    assert len(docs) == len(set(docs))
-    by_shard = {}
-    for r in a:
-        assert 0 <= r["shard"] < SHUFFLE_SHARDS
-        by_shard.setdefault(r["shard"], []).append(r)
-    for rows in by_shard.values():
-        rows.sort(key=lambda r: r["pos"])
-        assert [r["pos"] for r in rows] == list(range(len(rows)))
-        # pos order == (shuffle_key, doc_id) order
-        keys = [(r["shuffle_key"], r["doc_id"]) for r in rows]
-        assert keys == sorted(keys)
 
 
 def test_outlinks_parse_matches_planted_arithmetic(spark, sf_dir):
