@@ -97,8 +97,7 @@ def raw_catalog() -> dict[str, QuerySpec]:
     cat.update(_RELATIONAL)
     for modname in ("dedup", "text", "similarity", "geo_queries", "ml_queries",
                     "multimodal", "ref_features", "skew_queries", "grouped",
-                    "sql_surface", "temporal", "components", "webtext", "webgraph",
-                    "webtext_quality", "training_prep", "warehouse"):
+                    "sql_surface", "temporal", "components", "warehouse"):
         mod = __import__(
             f"osm_data_classification_spark.operators.{modname}",
             fromlist=["CATALOG"],

@@ -282,9 +282,7 @@ def snapshot_read(
     return spark.read.parquet(os.path.join(path, f"v={version}"))
 
 
-def cluster_write(
-    df: DataFrame, path: str, col: str, n_files: int, mode: str = "overwrite"
-) -> None:
+def cluster_write(df: DataFrame, path: str, col: str, n_files: int) -> None:
     """Z-order-clustered parquet write (the OPTIMIZE ZORDER analog,
     SURVEY.md §4.1). The cell id already IS a Morton code (geo/
     cells.py), so spatial clustering is range-partitioning on it:
@@ -301,7 +299,7 @@ def cluster_write(
     (
         df.repartitionByRange(n_files, F.col(col))
         .sortWithinPartitions(col)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 

@@ -1,5 +1,5 @@
 """End-to-end jobs — the flagship spatial-join + tiling trace
-(SURVEY.md §3.2) and the classification chain entry points.
+(SURVEY.md §3.2).
 
 ``flagship`` is the metric stage (BASELINE.json:2): its throughput in
 pages/sec at two parallelism levels is what bench.py measures, and its
@@ -9,7 +9,6 @@ output is what ``entry(spark)`` returns to the driver smoke check.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .operators.geo_ops import pip_join, tile_aggregate
 from .sources.boundaries import packed_boundaries
@@ -48,46 +47,3 @@ def flagship(
         boundary_col="boundary_id",
     )
 
-
-def run_curate(spark: SparkSession, sf_dir: str, out: str) -> tuple[int, int]:
-    """The curation job's core (jobs/curate.py is the spark-submit
-    shell around this): run the webtext curation funnel, PII-scrub the
-    surviving text, write the curated corpus + funnel report, and
-    return ``(n_docs, checksum)`` — an order-insensitive aggregated
-    checksum of the written corpus, the determinism witness the tests
-    compare across runs. Fully distributed: the old witness collected
-    every (doc_id, md5) to the driver, an O(corpus) driver transfer in
-    a job-API path (r3 VERDICT nit #1); the checksum aggregate keeps
-    the job shell scale-clean at 10^9 docs."""
-    import os
-
-    from .io import checkpoint_write, table_checksum
-    from .operators.webtext import (
-        _EMAIL_RE,
-        _IP_RE,
-        _PHONE_RE,
-        curate_corpus_funnel,
-        curate_stages,
-    )
-
-    scrubbed = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col("text"), _EMAIL_RE, "<EMAIL>"),
-            _PHONE_RE,
-            "<PHONE>",
-        ),
-        _IP_RE,
-        "<IP>",
-    )
-    stages = curate_stages(spark, sf_dir)
-    curated = stages["s6_sampled"].select(
-        "doc_id", "lang", scrubbed.alias("text")
-    )
-    checkpoint_write(curated, os.path.join(out, "data"))
-    funnel = curate_corpus_funnel(spark, sf_dir)
-    funnel.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out, "funnel")
-    )
-    back = spark.read.parquet(os.path.join(out, "data", "data"))
-    witness = back.select("doc_id", "lang", F.md5("text").alias("h"))
-    return (back.count(), table_checksum(witness))

@@ -160,8 +160,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The host link graph is synthesized deterministically from doc_id:
 # each doc's host is doc_id % PR_HOSTS, and it links to three affine
-# images of that host (the same construction style as the messy-URL /
-# PII synthesis in webtext.py — the oracle can rebuild the graph).
+# images of that host, so the oracle can rebuild the graph.
 # The affine maps are bijections mod the prime 97, so two explicit
 # gates plant the PageRank boundary shapes: hosts >= PR_SINK_MIN emit
 # no edges (sinks/dangling — rank leaks), and edges INTO hosts

@@ -33,7 +33,7 @@ from ..geo.cells import cell_encode_col
 from ..io import load_table
 
 N_I = 3600  # lon grid: i in [0, 3600) -> lon in [-180, 180)
-N_HOSTS = 97  # urls and outlink targets live on site0..site96
+N_HOSTS = 97  # urls live on site0..site96
 N_J = 1800  # lat grid: j in [0, 1800) -> lat in [-90, 90)
 MEGA_TOKENS = ((900, 1200), (1800, 900), (2700, 600), (450, 1500), (3200, 300))
 LON_STEP, LAT_STEP = 0.1, 0.1
@@ -117,27 +117,9 @@ def synth_pages(
         days=F.pmod(F.col("page_id") * 31 + F.col("crawl") * 7, F.lit(90)).cast("int"),
         mins=F.pmod(F.col("page_id") * 17 + F.col("crawl") * 13, F.lit(1440)).cast("int"),
     )
-    # --- outlinks: 3 deterministic hrefs in <head> -------------------------
-    # Planted OUTSIDE <body> so html→text extraction stays byte-exact
-    # (operators/skew_queries.py slices between the body tags). Target
-    # host/path are affine functions of page_id, so both the SQL
-    # oracle and numpy tests can rebuild the edge list arithmetically
-    # without parsing (operators/webgraph.py).
-    def _link(m: int) -> Column:
-        host = F.pmod(F.col("page_id") * 7 + m * 13, F.lit(N_HOSTS))
-        tgt = F.col("page_id") * 3 + m
-        return F.concat(
-            F.lit('<link href="https://site'),
-            host.cast("string"),
-            F.lit(".example/p/"),
-            tgt.cast("string"),
-            F.lit('">'),
-        )
-
-    head = F.concat(F.lit("<head>"), _link(1), _link(2), _link(3), F.lit("</head>"))
-    html = F.concat(
-        F.lit("<html>"), head, F.lit("<body>"), F.col("text"), F.lit("</body></html>")
-    ).cast("binary")
+    html = F.concat(F.lit("<html><body>"), F.col("text"), F.lit("</body></html>")).cast(
+        "binary"
+    )
     return base.select(
         "url",
         warc_ts.alias("warc_ts"),

@@ -180,36 +180,24 @@ EMPTY_INPUT_QUERIES = [
     # round-3 additions
     "geo_pip_join_shuffle", "stream_tile_ladder",
     "sample_hash_split", "host_agg",
-    # round-3 web-curation + SQL additions (q6/q14 are agg-without-
-    # groupBy — 1 row on empty input by SQL semantics, so excluded
-    # like agg_approx_distinct; q4 groups, so it qualifies)
-    "url_canonicalize", "text_repetition_metrics",
-    "dedup_paragraph_global", "agg_quantile_bound", "sql_tpch_q4",
-    "dedup_url_canonical", "text_pii_scrub", "sample_stratified",
-    "dedup_decontaminate",
+    # round-3 SQL additions (q6/q14 are agg-without-groupBy — 1 row
+    # on empty input by SQL semantics, so excluded like
+    # agg_approx_distinct; q4 groups, so it qualifies)
+    "agg_quantile_bound", "sql_tpch_q4",
     # TPC-H completion set (q17 is agg-without-groupBy -> excluded
     # like q6/q14; the rest group or project and must yield 0 rows)
     "sql_tpch_q2", "sql_tpch_q8", "sql_tpch_q9", "sql_tpch_q11",
     "sql_tpch_q13", "sql_tpch_q15", "sql_tpch_q16", "sql_tpch_q20",
     "sql_tpch_q21", "sql_tpch_q22",
-    # second web-quality batch + host PageRank (pagerank's empty-input
-    # early return keeps the real schema)
-    "text_line_filter", "text_normalize_unicode", "text_tfidf_topterms",
-    "gopher_quality_filter",
-    "stream_dedup_recrawl",
-    "pagerank_hosts", "text_rarity_score",
-    # training prep: chunking explodes to zero rows on zero docs; packing's
-    # windows are empty-safe
-    "text_chunk_tokens", "sample_pack_sequences",
-    # fifth-session batch (crawl_host_gini / bpe_apply_merge /
-    # stats_table_profile are agg-without-groupBy or agg-fed -> excluded
-    # like agg_approx_distinct; geo_cover_compact / geo_polyfill /
-    # sql_recursive_hierarchy take no table input at all)
+    # re-crawl dedup + host PageRank (pagerank's empty-input early
+    # return keeps the real schema)
+    "stream_dedup_recrawl", "pagerank_hosts",
+    # fifth-session batch (stats_table_profile is agg-without-groupBy
+    # -> excluded like agg_approx_distinct; geo_cover_compact /
+    # geo_polyfill / sql_recursive_hierarchy take no table input at all)
     "geo_cell_neighbors", "geo_cluster_dense_cells", "geo_tile_vectorize",
     "geo_bbox_cells_query", "geo_tile_heat_decay", "sample_global_shuffle",
-    "webgraph_outlinks", "webgraph_host_degree", "crawl_frontier_schedule",
-    "crawl_recrawl_priority", "crawl_robots_filter", "warc_roundtrip_parse",
-    "bpe_pair_counts", "rollup_grouping_sets", "window_range_trailing_sum",
+    "rollup_grouping_sets", "window_range_trailing_sum",
     "embed_drift_centroid", "stream_watermark_late_drop",
     "dedup_bloom_prefilter", "webgraph_hits_exact", "ann_pq_topk",
     "webgraph_triangle_count", "stream_session_dwell", "geo_geohash_encode",
@@ -221,8 +209,7 @@ EMPTY_INPUT_QUERIES = [
     "stream_stream_join", "stream_stream_left_join", "ann_pq_trained",
     "dedup_containment", "dedup_exact_substring_spans",
     "geo_tile_smooth", "geo_contributor_stays", "events_anomaly_mad",
-    "crawl_budget_allocate", "webgraph_host_coupling",
-    "grouped_cusum_apply", "webtext_host_boilerplate",
+    "crawl_budget_allocate", "grouped_cusum_apply",
 ]
 
 

@@ -51,41 +51,11 @@ NOTES = {
     "sql_tpch_q6": "pushdown-only shape: every predicate reaches the "
     "parquet scan (PushedFilters on raw columns), ReadSchema pruned to "
     "4 columns, then partial->final aggregate — no join, no sort",
-    "url_canonicalize": "pure projection: synthesize + decompose + "
-    "normalize entirely inside one codegen stage — zero exchanges at "
-    "any scale",
-    "text_repetition_metrics": "explode -> two-level groupBy; both "
-    "aggregations partial-combine map-side, so the exchange carries "
-    "distinct (doc, bigram) rows, not the token fan-out",
-    "dedup_paragraph_global": "CCNet shape: groupBy(chunk-hash) builds "
-    "the global frequency table, an equi-join annotates chunks (AQE "
-    "picks broadcast at toy scale, sort-merge + skew-split at 100 TB — "
-    "no hint pins it), one per-doc aggregation reassembles",
-    "curate_corpus_funnel": "single-pass funnel: every gate is a "
-    "boolean column (survivor/repetition/contamination flags join in), "
-    "then ONE aggregation over cumulative flag products + stack() — "
-    "no per-stage chain re-scan",
-    "text_line_filter": "C4 line filtering entirely in codegen: "
-    "sequence -> transform -> higher-order filter -> md5, ZERO "
-    "exchanges, zero Python stages — a pure scan-side pass",
-    "text_normalize_unicode": "the designed slow path: exactly one "
-    "ArrowEvalPython node (vectorized NFC pandas UDF), no shuffle; "
-    "all counting/hashing stays JVM-side around it",
-    "text_rarity_score": "explode -> corpus unigram counts "
-    "(map-side partial agg collapses the token stream to the "
-    "vocabulary before the exchange) -> broadcast join back -> one "
-    "groupBy(doc_id)",
-    "gopher_quality_filter": "Gopher doc filter entirely in codegen: "
-    "zip_with plants the violations, aggregate/filter/size HOFs "
-    "measure them — ZERO exchanges, zero Python stages",
     "geo_quadkey_encode": "floors + 17 base-4 digit expressions are "
     "pure JVM bit arithmetic in one codegen stage; the only exchange "
     "is the synthetic source's spread repartition",
     "embed_quantize_int8": "int8 recode as array HOFs (abs/max/floor) "
     "— zero exchanges, zero Python; a 10^12-vector pass is scan-bound",
-    "sample_mix_weights": "one groupBy(lang) with map-side partials "
-    "(the exchange carries one row per language), then a broadcast of "
-    "the language-sized totals back onto the dim",
     "geo_bbox_cells_query": "Z-order window scan: ONE higher-order "
     "exists over the literal range array (constant codegen size — an "
     "OR-chain of 49 BETWEENs made Janino fail the compile) + exact "
@@ -98,20 +68,8 @@ NOTES = {
     "the adjacency explode/join and label-propagation rounds run over "
     "the dense-CELL set (bounded by 4^res), with localCheckpoint "
     "truncating the iterative plan",
-    "webgraph_outlinks": "binary html -> regexp_extract_all -> "
-    "posexplode, all JVM codegen; zero exchanges — a pure scan pass",
-    "webgraph_host_degree": "distinct(url) then groupBy(src,dst): two "
-    "exchanges on host-cardinality keys, both partial-combined",
-    "bpe_pair_counts": "explode words -> explode pairs -> ONE "
-    "groupBy(pair): the exchange carries at most alphabet-squared rows "
-    "per task after map-side combine",
     "sample_global_shuffle": "one hash exchange on shard + per-shard "
     "sort for row_number — no global ordering anywhere",
-    "crawl_frontier_schedule": "distinct + per-host window: exchanges "
-    "hash on host; per-host serialization is the politeness SEMANTICS",
-    "warc_roundtrip_parse": "serialize + parse + self-join on "
-    "(url, warc_ts); the join hashes on the natural key — map-heavy, "
-    "one exchange pair",
     "stats_table_profile": "single Aggregate computes every metric; "
     "exact NDV x5 costs Expand x5 (documented exactness price), then "
     "a literal inline unpivot over the 1-row result",
@@ -167,10 +125,6 @@ NOTES = {
     "(single hash exchange); the running prefix sum streams per "
     "partition in sort order — take-while gating with O(1) state per "
     "host",
-    "webgraph_host_coupling": "distinct edge rollup + in-degree "
-    "groupBy + bounded-fan-out self-join on hub-capped destinations "
-    "+ candidate-only Jaccard — the rare-shingle blocking shape on "
-    "the graph, nothing all-pairs over hosts",
     "grouped_cusum_apply": "relational pre-aggregation collapses "
     "events to the per-host daily series BEFORE the single "
     "applyInPandas exchange — the Arrow transfer is bounded by "

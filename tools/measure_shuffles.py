@@ -28,16 +28,12 @@ sys.path.insert(0, ROOT)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 DEFAULT = [
-    "dedup_paragraph_global",
     "dedup_minhash_lsh",
-    "curate_corpus_funnel",
     "sample_global_shuffle",
-    "bpe_pair_counts",
     "geo_tile_agg",
     "agg_user_features",
     "sql_tpch_q5",
     "pagerank_hosts_exact",
-    "webgraph_host_degree",
 ]
 QUERIES = sys.argv[2:] or DEFAULT
 
