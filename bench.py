@@ -46,7 +46,9 @@ HEADLINE = [
     "ann_cosine_topk",        # similarity search over embeddings
     "text_quality_score",     # text-analysis pipeline op
     "sql_tpch_q5",            # deepest join chain (6-way, SQL surface)
+    "gopher_quality_filter",  # scan-side doc filter (zip_with + HOFs)
     "embed_quantize_int8",    # map-only int8 vector recode
+    "bpe_pair_counts",        # tokenizer-training inner loop (s5)
     # round-4 breadth (r3 VERDICT #4): the heaviest round-3 families
     "pagerank_hosts_exact",   # bounded iterative joins on the host graph
     "geo_polyfill",           # polygon -> covering cells (center-in-poly)

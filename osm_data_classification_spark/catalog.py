@@ -97,7 +97,8 @@ def raw_catalog() -> dict[str, QuerySpec]:
     cat.update(_RELATIONAL)
     for modname in ("dedup", "text", "similarity", "geo_queries", "ml_queries",
                     "multimodal", "ref_features", "skew_queries", "grouped",
-                    "sql_surface", "temporal", "components", "warehouse"):
+                    "sql_surface", "temporal", "components", "webtext_quality",
+                    "training_prep", "warehouse"):
         mod = __import__(
             f"osm_data_classification_spark.operators.{modname}",
             fromlist=["CATALOG"],

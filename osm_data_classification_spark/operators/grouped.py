@@ -134,8 +134,9 @@ def udtf_term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     `@udtf`, Arrow-optimized) fans each document out to its repeated
     terms (count >= 2) via LATERAL join — the genuine user-defined
     table function API, not an explode equivalent. This is the
-    API-surface demo. FULL oracle: DuckDB re-counts with unnest +
-    HAVING."""
+    API-surface demo; the hot-path twin of this computation is the
+    all-JVM text_tfidf_topterms. FULL oracle: DuckDB re-counts with
+    unnest + HAVING."""
     from collections import Counter
 
     from pyspark.sql.functions import udtf

@@ -1575,9 +1575,10 @@ def window_ntile_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     total order made deterministic by the (total, user_id) tie-break
     — the percentile-bucket assignment scoring pipelines use. The
     global-order window runs over the per-user AGGREGATE (user
-    cardinality), never raw events; at extreme user counts a
-    two-level prefix sum replaces the single-partition window. FULL
-    oracle: DuckDB's NTILE on the same integer totals."""
+    cardinality), never raw events; at extreme user counts the
+    two-level prefix-sum pattern (sample_pack_sequences) replaces the
+    single-partition window. FULL oracle: DuckDB's NTILE on the same
+    integer totals."""
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events")

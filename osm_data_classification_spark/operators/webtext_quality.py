@@ -1,9 +1,7 @@
 """Web-corpus quality operators, second batch (round 3): C4-style
 line filtering, Unicode NFC normalization, and TF-IDF top terms.
 
-These complete the extraction-side curation family in
-``operators/webtext.py`` (SURVEY.md §2 LLM-pipeline ops are
-first-class catalog entries):
+SURVEY.md §2 LLM-pipeline ops are first-class catalog entries:
 
 - **Line filtering** — the C4 recipe: split a page into lines, keep
   only lines that end in terminal punctuation, have a minimum word
@@ -19,8 +17,7 @@ first-class catalog entries):
   doc with a deterministic total-order tie-break.
 
 `documents.text` is space-separated tokens with no newlines or
-punctuation (TESTDATA.md), so — exactly like the paragraph/PII/URL
-operators in webtext.py — the messy input (line breaks, missing
+punctuation (TESTDATA.md), so the messy input (line breaks, missing
 punctuation, boilerplate lines, decomposed accents) is synthesized
 DETERMINISTICALLY from doc_id, letting the DuckDB oracle rebuild the
 byte-identical input and re-apply the identical rules.
@@ -309,8 +306,7 @@ RARE_MAX = 3  # a token with corpus-wide count <= this is "rare"
 # The synthetic corpus has a 31-token vocabulary with every token
 # appearing ≥26 times at any sf, so the rare/hapax branches would be
 # dead code against raw `text`. Rare tokens are therefore planted
-# deterministically from doc_id (the standard webtext.py synthesis
-# move): every 7th doc gains a doc-unique token `xh<doc_id>` (a hapax,
+# deterministically from doc_id: every 7th doc gains a doc-unique token `xh<doc_id>` (a hapax,
 # gcnt=1) and every 5th gains `xr<doc_id div 10>` — multiples of 5
 # within a div-10 block are exactly {10k, 10k+5}, so each xr token has
 # gcnt exactly 2 ≤ RARE_MAX at every sf.

@@ -1,5 +1,5 @@
-"""Second-batch web-quality operators (webtext_quality.py) and the
-host PageRank (components.py) vs single-threaded numpy/pandas oracles.
+"""Second-batch web-quality operators (webtext_quality.py) vs
+single-threaded numpy/pandas oracles.
 
 The driver-facing DuckDB oracles cover the full-value gate; these
 tests pin the kernels against an INDEPENDENT formulation (pandas /
@@ -11,20 +11,6 @@ from __future__ import annotations
 import hashlib
 import unicodedata
 
-import numpy as np
-import pandas as pd
-import pytest
-
-from osm_data_classification_spark.operators.components import (
-    PR_DAMPING,
-    PR_EDGE_MAPS,
-    PR_HOSTS,
-    PR_ITERS,
-    PR_SINK_MIN,
-    PR_SOURCE_MOD,
-    host_link_edges,
-    pagerank_hosts,
-)
 from osm_data_classification_spark.operators.webtext_quality import (
     BOILER,
     COMPOSED,
@@ -208,60 +194,6 @@ def test_rarity_matches_pandas_oracle(spark, sf_dir):
     # the planted tokens must actually exercise both branches (the raw
     # corpus has a 31-token vocab where every token appears >= 26x)
     assert any_rare and any_hapax
-
-
-# ---------------------------------------------------------------------------
-# host PageRank
-# ---------------------------------------------------------------------------
-
-
-def test_pagerank_matches_numpy_oracle(spark, sf_dir):
-    edges = {
-        (r["src"], r["dst"]) for r in host_link_edges(spark, sf_dir).collect()
-    }
-    # oracle rebuilds the same affine graph independently
-    doc_ids = _docs_pdf(spark, sf_dir).doc_id.values
-    exp_edges = set()
-    for d in doc_ids:
-        s = d % PR_HOSTS
-        for a, b in PR_EDGE_MAPS:
-            t = (a * s + b) % PR_HOSTS
-            if s != t and s < PR_SINK_MIN and t % PR_SOURCE_MOD != 0:
-                exp_edges.add((s, t))
-    assert edges == exp_edges
-
-    nodes = sorted({x for e in edges for x in e})
-    idx = {h: i for i, h in enumerate(nodes)}
-    n = len(nodes)
-    out_deg = np.zeros(n)
-    for s, _ in edges:
-        out_deg[idx[s]] += 1
-    ranks = np.full(n, 1.0 / n)
-    for _ in range(PR_ITERS):
-        contrib = np.zeros(n)
-        for s, t in edges:
-            contrib[idx[t]] += ranks[idx[s]] / out_deg[idx[s]]
-        ranks = (1.0 - PR_DAMPING) / n + PR_DAMPING * contrib
-    got = {r["host"]: r["rank"] for r in pagerank_hosts(spark, sf_dir).collect()}
-    assert set(got) == set(nodes)
-    for h in nodes:
-        assert got[h] == pytest.approx(ranks[idx[h]], rel=1e-9, abs=1e-12)
-    # textbook variant: dangling hosts leak rank, so total < 1 iff any
-    # host is dangling; ranks are all >= teleport term
-    teleport = (1.0 - PR_DAMPING) / n
-    assert all(v >= teleport - 1e-15 for v in got.values())
-    if (out_deg == 0).any():
-        assert sum(got.values()) < 1.0
-
-
-def test_pagerank_graph_has_dangling_and_unlinked(spark, sf_dir):
-    """The synthesized graph must exercise both boundary shapes: at
-    least one host with no out-edges and one with no in-links."""
-    rows = host_link_edges(spark, sf_dir).collect()
-    srcs = {r["src"] for r in rows}
-    dsts = {r["dst"] for r in rows}
-    assert dsts - srcs, "no dangling host (no out-edges)"
-    assert srcs - dsts, "no unlinked host (no in-links)"
 
 
 # ---------------------------------------------------------------------------

@@ -51,11 +51,27 @@ NOTES = {
     "sql_tpch_q6": "pushdown-only shape: every predicate reaches the "
     "parquet scan (PushedFilters on raw columns), ReadSchema pruned to "
     "4 columns, then partial->final aggregate — no join, no sort",
+    "text_line_filter": "C4 line filtering entirely in codegen: "
+    "sequence -> transform -> higher-order filter -> md5, ZERO "
+    "exchanges, zero Python stages — a pure scan-side pass",
+    "text_normalize_unicode": "the designed slow path: exactly one "
+    "ArrowEvalPython node (vectorized NFC pandas UDF), no shuffle; "
+    "all counting/hashing stays JVM-side around it",
+    "text_rarity_score": "explode -> corpus unigram counts "
+    "(map-side partial agg collapses the token stream to the "
+    "vocabulary before the exchange) -> broadcast join back -> one "
+    "groupBy(doc_id)",
+    "gopher_quality_filter": "Gopher doc filter entirely in codegen: "
+    "zip_with plants the violations, aggregate/filter/size HOFs "
+    "measure them — ZERO exchanges, zero Python stages",
     "geo_quadkey_encode": "floors + 17 base-4 digit expressions are "
     "pure JVM bit arithmetic in one codegen stage; the only exchange "
     "is the synthetic source's spread repartition",
     "embed_quantize_int8": "int8 recode as array HOFs (abs/max/floor) "
     "— zero exchanges, zero Python; a 10^12-vector pass is scan-bound",
+    "sample_mix_weights": "one groupBy(lang) with map-side partials "
+    "(the exchange carries one row per language), then a broadcast of "
+    "the language-sized totals back onto the dim",
     "geo_bbox_cells_query": "Z-order window scan: ONE higher-order "
     "exists over the literal range array (constant codegen size — an "
     "OR-chain of 49 BETWEENs made Janino fail the compile) + exact "
@@ -68,6 +84,9 @@ NOTES = {
     "the adjacency explode/join and label-propagation rounds run over "
     "the dense-CELL set (bounded by 4^res), with localCheckpoint "
     "truncating the iterative plan",
+    "bpe_pair_counts": "explode words -> explode pairs -> ONE "
+    "groupBy(pair): the exchange carries at most alphabet-squared rows "
+    "per task after map-side combine",
     "sample_global_shuffle": "one hash exchange on shard + per-shard "
     "sort for row_number — no global ordering anywhere",
     "stats_table_profile": "single Aggregate computes every metric; "

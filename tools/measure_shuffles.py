@@ -30,6 +30,7 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 DEFAULT = [
     "dedup_minhash_lsh",
     "sample_global_shuffle",
+    "bpe_pair_counts",
     "geo_tile_agg",
     "agg_user_features",
     "sql_tpch_q5",
