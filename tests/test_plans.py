@@ -100,6 +100,21 @@ def test_geocode_encode_is_jvm_only(spark, sf_dir):
     assert audit.codegen_stage_count(df) >= 1
 
 
+def test_cell_encode_computes_grid_xy_once(spark, sf_dir):
+    """Each Morton encode computes the grid x and y once (one ``floor``
+    each) and spreads the projected columns. Inlined, the spread's five
+    mask steps copy x and y 32 times apiece (64 ``floor`` per encode),
+    which Catalyst then analyses on every withColumn the driver makes.
+    The flagship encodes twice: the geocode cell and the PIP key."""
+    from osm_data_classification_spark.jobs_api import flagship
+
+    for df, want in ((geocoded_pages(spark, sf_dir, res=7), 2), (flagship(spark, sf_dir), 4)):
+        qe = df._jdf.queryExecution()
+        for stage in (qe.analyzed(), qe.optimizedPlan()):
+            text = stage.toString()
+            assert text.lower().count("floor(") == want, text[:2000]
+
+
 def test_asof_join_single_exchange_no_join_node(spark, sf_dir):
     """The as-of join is a window composition: one hash exchange on the
     key, no join operator at all (and certainly no range/BNL join)."""
