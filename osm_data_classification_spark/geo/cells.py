@@ -288,6 +288,17 @@ def cell_encode_col(lon: Column, lat: Column, res: int) -> Column:
     return cell_from_xy_col(x, y, res).alias(f"cell_r{res}")
 
 
+def with_cell(df: DataFrame, name: str, res: int) -> DataFrame:
+    """``df`` plus ``name``, the :func:`cell_encode_col` id at ``res`` of
+    its ``lon``/``lat``, from grid x/y projected once: inlined into the
+    Morton spread they appear 32 times each in every plan Catalyst
+    analyses (CollapseProject does not re-inline an alias used twice)."""
+    x, y = xy_cols(F.col("lon"), F.col("lat"), res)
+    xy = df.select("*", x.alias("__x"), y.alias("__y"))
+    cell = cell_from_xy_col(F.col("__x"), F.col("__y"), res)
+    return xy.withColumn(name, cell).drop("__x", "__y")
+
+
 def cell_parent_col(cell: Column, child_res: int, parent_res: int) -> Column:
     """Parent id via bit arithmetic (res known statically, as it always
     is in the tile rollup ladder)."""

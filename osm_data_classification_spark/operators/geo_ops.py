@@ -41,10 +41,10 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
 from ..geo.cells import (
-    cell_encode_col,
     cell_parent_col,
     cell_size_deg,
     kring_explode,
+    with_cell,
     xy_cols,
 )
 from ..geo.pip import PackedPolygons
@@ -69,15 +69,15 @@ def pip_join(
     """points ⨝ polygons with `point inside polygon` semantics;
     ``points`` carries ``lon``/``lat`` columns.
 
-    Phase 1 (coarse, JVM): encode each point's cell at ``res`` and
-    equi-join against the (cell, boundary_id) bbox-cover table — the
-    STRtree-candidate analog (BASELINE.json:6). The cover side is
-    BROADCAST while it fits (points never shuffle — the plan that wins
-    up to ~10^4 boundaries); past ``_COVER_BROADCAST_MAX`` pairs it
-    becomes a shuffle equi-join on cell, because a multi-hundred-MB
-    broadcast to every executor is the same OOM class as the kNN
-    fallback round 1 shipped. The cover row count is known driver-side
-    for free, so the switch costs nothing.
+    Phase 1 (coarse, JVM): encode each point's cell at ``res`` (x/y
+    once, ``with_cell``) and equi-join against the (cell, boundary_id)
+    bbox-cover table — the STRtree-candidate analog (BASELINE.json:6).
+    The cover side is BROADCAST while it fits (points never shuffle —
+    the plan that wins up to ~10^4 boundaries); past
+    ``_COVER_BROADCAST_MAX`` pairs it becomes a shuffle equi-join on
+    cell, because a multi-hundred-MB broadcast to every executor is the
+    same OOM class as the kNN fallback round 1 shipped. The cover row
+    count is known driver-side for free, so the switch costs nothing.
     Phase 2 (exact): Arrow-batched pandas UDF ray-cast against the
     broadcast packed rings. ``refine=False`` exposes phase 1 alone
     (used by tests to check the cover is a superset).
@@ -106,9 +106,7 @@ def pip_join(
         # driver-graded geo_pip_join_shuffle entry runs this exact
         # physical plan, threshold or not).
         cover = cover.hint("shuffle_hash")
-    cand = points.withColumn(
-        "__cell", cell_encode_col(F.col("lon"), F.col("lat"), res)
-    ).join(cover, "__cell")
+    cand = with_cell(points, "__cell", res).join(cover, "__cell")
     if not refine:
         return cand.drop("__cell")
 
@@ -426,7 +424,8 @@ def tile_aggregate(
     each row a kind-0 row (the tile key) and a kind-1 row keyed
     (cell, boundary) with null measures, so the input is read once.
     """
-    cell = F.col(cell_col) if cell_col else cell_encode_col(F.col("lon"), F.col("lat"), res)
+    if not cell_col:
+        pages, cell_col = with_cell(pages, "__cell", res), "__cell"
     dow = F.dayofweek("warc_ts")
     kind, mine, uid = [], (lambda c: c), F.col(contributor_col)
     if boundary_col:
@@ -435,7 +434,7 @@ def tile_aggregate(
         kind, mine = ["__k"], (lambda c: F.when(own, c))
         uid = F.when(own, uid).otherwise(F.col(boundary_col))
     base = pages.select(
-        cell.alias("cell"),
+        F.col(cell_col).alias("cell"),
         *kind,
         uid.alias("__uid"),
         mine(F.col("url")).alias("__url"),

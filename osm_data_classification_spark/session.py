@@ -8,6 +8,11 @@ sizes so ring-heavy geo kernels don't blow worker memory, a
 shuffle-partition count sized to the local test harness and a driver
 heap of half the host's RAM (a real cluster overrides both via
 spark-submit conf; ``extra_conf`` overrides them here).
+
+PySpark's DataFrame call-site capture
+(``spark.python.sql.dataFrameDebugging.enabled``) is off: it costs about
+eight py4j round trips per ``F.*``/Column call, and it only adds the
+Python ``file:line`` to an error message (``extra_conf`` turns it on).
 """
 
 from __future__ import annotations
@@ -62,6 +67,7 @@ def get_spark(
         # --- misc -------------------------------------------------------
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # single-JVM local mode: driver heap is ALL executor memory too.
         # Half the host's RAM leaves the other half to the Python
         # workers and the OS; a bigger heap let one JVM grow past the

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..geo.cells import cell_encode_col
+from ..geo.cells import with_cell
 from ..io import load_table
 
 N_I = 3600  # lon grid: i in [0, 3600) -> lon in [-180, 180)
@@ -153,7 +153,8 @@ def geocode_cols(text: Column) -> tuple[Column, Column]:
 def geocode(pages: DataFrame, res: int) -> DataFrame:
     """The geocode step of the pages → tiles path, on any pages frame,
     batch or streaming: place token → ``lon``/``lat`` → drop the rows
-    that do not geocode → ``cell`` at ``res``.
+    that do not geocode → ``cell`` at ``res`` (``geo.cells.with_cell``:
+    the grid x/y computed once, not inlined into the Morton spread).
 
     Pages whose text has no place token geocode to NULL and are
     DROPPED here, never NULL-tiled: on a real crawl a junk page would
@@ -161,15 +162,10 @@ def geocode(pages: DataFrame, res: int) -> DataFrame:
     batch and stream tiles would differ (asserted in
     tests/test_robustness.py and tests/test_streaming.py)."""
     lon, lat = geocode_cols(F.col("text"))
-    return (
-        pages.select(
-            "*",
-            lon.alias("lon"),
-            lat.alias("lat"),
-        )
-        .filter(F.col("lon").isNotNull() & F.col("lat").isNotNull())
-        .withColumn("cell", cell_encode_col(F.col("lon"), F.col("lat"), res))
+    located = pages.select("*", lon.alias("lon"), lat.alias("lat")).filter(
+        F.col("lon").isNotNull() & F.col("lat").isNotNull()
     )
+    return with_cell(located, "cell", res)
 
 
 def geocoded_pages(spark: SparkSession, sf_dir: str, multiplier: int = 1, res: int = 7) -> DataFrame:

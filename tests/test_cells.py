@@ -153,6 +153,39 @@ def test_golden_values_stable():
     assert got[1] == (7 << 56)  # origin corner -> morton 0
 
 
+def test_with_cell_matches_encode_col_and_numpy(spark):
+    """The staged encode (x/y projected once) gives the ids of the
+    one-expression Column form and of the numpy twin: on the golden
+    points, at both poles, on the anti-meridian (lon 180 wraps to
+    x = 0) and at the clamped last row and column."""
+    from pyspark.sql import functions as F
+
+    pts = [
+        (0.0, 0.0), (-180.0, -90.0), (179.999, 89.999), (2.35, 48.86),
+        (180.0, 90.0), (-180.0, 90.0), (179.9999999, -90.0), (0.0, 89.9999999),
+        (-179.9999999, -89.9999999), (540.0, 0.0),
+    ]
+    df = spark.createDataFrame(pts, "lon double, lat double")
+    lon = np.array([p[0] for p in pts])
+    lat = np.array([p[1] for p in pts])
+    for res in (0, 1, 7, 12, 15):
+        got = cells.with_cell(df, "cell", res).select(
+            "lon", "lat", "cell",
+            cells.cell_encode_col(F.col("lon"), F.col("lat"), res).alias("inline"),
+        )
+        assert got.columns == ["lon", "lat", "cell", "inline"]
+        rows = got.collect()
+        want = cells.encode_np(lon, lat, res).tolist()
+        assert [(r.lon, r.lat) for r in rows] == pts
+        assert [r.cell for r in rows] == want, res
+        assert [r.inline for r in rows] == want, res
+
+
+def test_session_turns_off_call_site_capture(spark):
+    """``get_spark`` turns PySpark's per-call call-site capture off."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
 # ---------------------------------------------------------------------------
 # quadkey string rendering (operators/geo_queries.py)
 # ---------------------------------------------------------------------------
