@@ -10,8 +10,9 @@ the tail of stdout::
 
 The flagship query is the metric stage from BASELINE.json:2 — the
 spatial-join + tiling trace — so the line also carries its throughput
-in pages/sec. The per-query plan fingerprints, the noise-probe samples
-and both parallelism-invariance checksums go to ``BENCH/profile.json``
+in pages/sec. The per-query plan fingerprints and plan-build times
+(``build_s``: the builder call alone), the noise-probe samples and both
+parallelism-invariance checksums go to ``BENCH/profile.json``
 (committed, so a plan change shows as a diff of that file).
 Scaling-efficiency evidence (the same job at two parallelism levels)
 is produced by ``tools/bench_scaling.py`` → BENCH/BASELINE.md.
@@ -128,15 +129,17 @@ def main() -> None:
 
     from osm_data_classification_spark.plans.audit import plan_fingerprint
 
-    def best_of(n: int, build) -> tuple[float, int]:
-        """Fastest of ``n`` timed build+count runs, and the row count."""
-        best = None
+    def best_of(n: int, build) -> tuple[float, int, float]:
+        """Fastest of ``n`` timed build+count runs, the row count and the
+        fastest builder call alone (the driver's plan build)."""
+        runs = []
         for _ in range(n):
             t0 = time.perf_counter()
-            rows = build().count()
-            dt = time.perf_counter() - t0
-            best = dt if best is None or dt < best else best
-        return best, rows
+            df = build()
+            t1 = time.perf_counter()
+            rows = df.count()
+            runs.append((time.perf_counter() - t0, t1 - t0))
+        return min(runs)[0], rows, min(r[1] for r in runs)
 
     def fingerprint(build) -> str:
         # fingerprint of the optimized logical plan (r4 VERDICT #4):
@@ -148,6 +151,7 @@ def main() -> None:
         return fp1 if fp1 == fp2 else "unstable"
 
     timings: dict[str, float] = {}
+    build_s: dict[str, float] = {}
     fingerprints: dict[str, str] = {}
     probes: list[float] = [noise_probe()]
 
@@ -163,7 +167,7 @@ def main() -> None:
     def flagship_big():
         return flagship(spark, SF_DIR, multiplier=MULTIPLIER)
 
-    flagship_s, n_tiles = best_of(5, flagship_big)
+    flagship_s, n_tiles, build_s["flagship_spatial_tiling"] = best_of(5, flagship_big)
     probes.append(noise_probe())
     # pages processed = input rows of the trace (crawl fan-out included)
     from osm_data_classification_spark.sources.pages import synth_pages
@@ -187,7 +191,8 @@ def main() -> None:
         if warm_dir != SF_DIR and os.path.isdir(warm_dir):
             spec.fn(spark, warm_dir).count()
         # best-of-3: GC/scheduler/steal noise is real
-        timings[name] = round(best_of(3, lambda: spec.fn(spark, SF_DIR))[0], 3)
+        best, _, build_s[name] = best_of(3, lambda: spec.fn(spark, SF_DIR))
+        timings[name] = round(best, 3)
         fingerprints[name] = fingerprint(lambda: spec.fn(spark, SF_DIR))
         probes.append(noise_probe())
 
@@ -210,6 +215,8 @@ def main() -> None:
     profile = {
         # plans depend on the core count (pre-fan-out repartition)
         "cpus": cpus,
+        # includes the jobs a builder runs itself (kNN, PageRank)
+        "build_s": {k: round(v, 4) for k, v in build_s.items()},
         "plan_fingerprints": fingerprints,
         "noise_probe_s": [round(p, 4) for p in probes],
         "invariance": {
