@@ -169,12 +169,10 @@ def test_with_cell_matches_encode_col_and_numpy(spark):
     lon = np.array([p[0] for p in pts])
     lat = np.array([p[1] for p in pts])
     for res in (0, 1, 7, 12, 15):
-        got = cells.with_cell(df, "cell", res).select(
-            "lon", "lat", "cell",
-            cells.cell_encode_col(F.col("lon"), F.col("lat"), res).alias("inline"),
-        )
-        assert got.columns == ["lon", "lat", "cell", "inline"]
-        rows = got.collect()
+        staged = cells.with_cell(df, "cell", res)
+        assert staged.columns == ["lon", "lat", "cell"]
+        inline = cells.cell_encode_col(F.col("lon"), F.col("lat"), res)
+        rows = staged.select("*", inline.alias("inline")).collect()
         want = cells.encode_np(lon, lat, res).tolist()
         assert [(r.lon, r.lat) for r in rows] == pts
         assert [r.cell for r in rows] == want, res
