@@ -11,7 +11,7 @@ spark-submit conf; ``extra_conf`` overrides them here).
 
 PySpark's DataFrame call-site capture
 (``spark.python.sql.dataFrameDebugging.enabled``) is off: it costs about
-eight py4j round trips per ``F.*``/Column call, and it only adds the
+ten py4j round trips per ``F.*``/Column call, and it only adds the
 Python ``file:line`` to an error message (``extra_conf`` turns it on).
 """
 
