@@ -1,7 +1,7 @@
 """Assembles the full query catalog from every operator module.
 
-One entry per operator row in SURVEY.md §2 (plus the training-data
-pipeline ops). Import side effects populate each module's CATALOG.
+One entry per kept operator row in SURVEY.md §2. Import side effects
+populate each module's CATALOG.
 
 ORDERING MATTERS: the driver evaluates only the first 50 catalog
 entries against their DuckDB oracles (round-1 lesson — the geo/ref
@@ -97,8 +97,7 @@ def raw_catalog() -> dict[str, QuerySpec]:
     cat.update(_RELATIONAL)
     for modname in ("dedup", "text", "similarity", "geo_queries", "ml_queries",
                     "multimodal", "ref_features", "skew_queries", "grouped",
-                    "sql_surface", "temporal", "components", "webtext_quality",
-                    "training_prep", "warehouse"):
+                    "sql_surface", "temporal", "components", "warehouse"):
         mod = __import__(
             f"osm_data_classification_spark.operators.{modname}",
             fromlist=["CATALOG"],

@@ -259,17 +259,6 @@ def test_runtime_bloom_filter_prunes_fact_side(spark, sf_dir):
                 spark.conf.set(k, v)
 
 
-def test_line_filter_is_map_only_codegen(spark, sf_dir):
-    """text_line_filter's whole recipe (sequence → transform →
-    higher-order filter → md5) must stay a single map-only codegen
-    pass: zero exchanges, zero Python stages. At 10^12 pages any
-    exchange or Arrow hop here would dominate the stage."""
-    df = _q("text_line_filter")(spark, sf_dir)
-    assert audit.count_exchanges(df) == 0, audit.plan_nodes(df)
-    assert not audit.has_python_stage(df)
-    assert audit.codegen_stage_count(df) >= 1
-
-
 def test_quadkey_encode_is_map_only_codegen(spark, sf_dir):
     """geo_quadkey_encode: floors + 17 digit expressions are all JVM
     bit arithmetic — zero exchanges beyond the synthetic source's own
@@ -290,40 +279,6 @@ def test_quantize_int8_is_map_only_codegen(spark, sf_dir):
     assert audit.codegen_stage_count(df) >= 1
 
 
-def test_gopher_filter_is_map_only_codegen(spark, sf_dir):
-    """gopher_quality_filter must stay a single map-only pass: the
-    zip_with plant + HOF aggregates are all JVM expressions — zero
-    exchanges, zero Python stages. One verdict row per document at
-    10^12 pages is scan-bound or it is wrong."""
-    df = _q("gopher_quality_filter")(spark, sf_dir)
-    assert audit.count_exchanges(df) == 0, audit.plan_nodes(df)
-    assert not audit.has_python_stage(df)
-    assert audit.codegen_stage_count(df) >= 1
-
-
-def test_nfc_normalize_is_single_arrow_stage_no_shuffle(spark, sf_dir):
-    """text_normalize_unicode is the designed slow path: exactly ONE
-    ArrowEvalPython (vectorized pandas UDF) node, no exchange — the
-    JVM-side length/md5 work must not force a second Python hop."""
-    df = _q("text_normalize_unicode")(spark, sf_dir)
-    nodes = audit.plan_nodes(df)
-    arrow = [n for n in nodes if "ArrowEvalPython" in n]
-    assert len(arrow) == 1, nodes
-    assert audit.count_exchanges(df) == 0, nodes
-
-
-def test_rarity_join_broadcasts_vocabulary_side(spark, sf_dir):
-    """text_rarity_score joins the token stream against the corpus
-    unigram table; the unigram side is vocabulary-sized, so the join
-    must resolve as a broadcast hash join (AQE or static), never a
-    sort-merge over the token stream."""
-    df = _q("text_rarity_score")(spark, sf_dir)
-    df.collect()  # let AQE finalize the adaptive plan
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, plan[:2000]
-    assert "SortMergeJoin" not in plan, plan[:2000]
-
-
 def test_bbox_query_is_single_source_exchange(spark, sf_dir):
     """geo_bbox_cells_query: the exists-over-range-array predicate
     adds NO exchange beyond the source repartition and never leaves
@@ -333,17 +288,6 @@ def test_bbox_query_is_single_source_exchange(spark, sf_dir):
     df = _q("geo_bbox_cells_query")(spark, sf_dir)
     assert audit.count_exchanges(df) <= 1
     assert not audit.has_python_stage(df)
-
-
-def test_bpe_pair_counts_partial_aggregates(spark, sf_dir):
-    """bpe_pair_counts: the pair groupBy must partial-combine
-    map-side (HashAggregate below the exchange) so the shuffle
-    carries at most alphabet^2 rows per task, never the token
-    fan-out."""
-    df = _q("bpe_pair_counts")(spark, sf_dir)
-    plan = audit.formatted_plan(df)
-    assert plan.count("HashAggregate") >= 2  # partial + final
-    assert audit.count_exchanges(df) <= 2  # source spread is absent here
 
 
 def test_cross_snapshot_dedup_joins_on_fingerprint(spark, sf_dir):

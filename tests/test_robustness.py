@@ -189,22 +189,15 @@ EMPTY_INPUT_QUERIES = [
     "sql_tpch_q2", "sql_tpch_q8", "sql_tpch_q9", "sql_tpch_q11",
     "sql_tpch_q13", "sql_tpch_q15", "sql_tpch_q16", "sql_tpch_q20",
     "sql_tpch_q21", "sql_tpch_q22",
-    # second web-quality batch + host PageRank (pagerank's empty-input
-    # early return keeps the real schema)
-    "text_line_filter", "text_normalize_unicode", "text_tfidf_topterms",
-    "gopher_quality_filter",
-    "stream_dedup_recrawl",
-    "pagerank_hosts", "text_rarity_score",
-    # training prep: chunking explodes to zero rows on zero docs; packing's
-    # windows are empty-safe
-    "text_chunk_tokens", "sample_pack_sequences",
-    # fifth-session batch (bpe_apply_merge / stats_table_profile are
-    # agg-without-groupBy or agg-fed -> excluded like
+    # recrawl dedup + host PageRank (pagerank's empty-input early
+    # return keeps the real schema)
+    "stream_dedup_recrawl", "pagerank_hosts",
+    # fifth-session batch (stats_table_profile is agg-fed -> excluded like
     # agg_approx_distinct; geo_cover_compact / geo_polyfill /
     # sql_recursive_hierarchy take no table input at all)
     "geo_cell_neighbors", "geo_cluster_dense_cells", "geo_tile_vectorize",
     "geo_bbox_cells_query", "geo_tile_heat_decay", "sample_global_shuffle",
-    "bpe_pair_counts", "rollup_grouping_sets", "window_range_trailing_sum",
+    "rollup_grouping_sets", "window_range_trailing_sum",
     "embed_drift_centroid", "stream_watermark_late_drop",
     "dedup_bloom_prefilter", "webgraph_hits_exact", "ann_pq_topk",
     "webgraph_triangle_count", "stream_session_dwell", "geo_geohash_encode",
