@@ -25,8 +25,9 @@ A7/A8) cheap.
 Two implementations with identical semantics (golden-tested against
 each other):
 
-- numpy (``encode_np`` etc.) — used inside pandas-UDF kernels and the
-  single-threaded test oracle;
+- numpy (``encode_np``, ``xy_np``, ``cover_bbox_np``) — used inside
+  pandas-UDF kernels and driver-side covers; the decode and hierarchy
+  twins the tests check against live in tests/oracle_geo.py;
 - Spark Column expressions (``cell_encode_col`` etc.) — pure JVM
   bit-twiddling inside whole-stage codegen, no Python worker at all.
   This is the hot path: at 10^12 rows the encode must not pay the
@@ -64,16 +65,6 @@ def _spread_np(v: np.ndarray) -> np.ndarray:
     return v
 
 
-def _compact_np(v: np.ndarray) -> np.ndarray:
-    v = v.astype(np.uint64) & _MAGIC[-1][1]
-    v = (v | (v >> np.uint64(1))) & _MAGIC[-2][1]
-    v = (v | (v >> np.uint64(2))) & _MAGIC[-3][1]
-    v = (v | (v >> np.uint64(4))) & _MAGIC[-4][1]
-    v = (v | (v >> np.uint64(8))) & _MAGIC[-5][1]
-    v = (v | (v >> np.uint64(16))) & np.uint64(0x00000000FFFFFFFF)
-    return v
-
-
 def xy_np(lon: np.ndarray, lat: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:
     """Grid coordinates at ``res``. lon wraps into [-180,180); lat clamps."""
     n = 1 << res
@@ -94,74 +85,6 @@ def encode_np(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
     x, y = xy_np(lon, lat, res)
     morton = _spread_np(x) | (_spread_np(y) << np.uint64(1))
     return (np.uint64(res) << np.uint64(RES_BITS_SHIFT) | morton).astype(np.int64)
-
-
-def cell_res_np(cell: np.ndarray) -> np.ndarray:
-    return (np.asarray(cell).astype(np.uint64) >> np.uint64(RES_BITS_SHIFT)).astype(
-        np.int64
-    )
-
-
-def cell_xy_np(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    morton = np.asarray(cell).astype(np.uint64) & np.uint64((1 << RES_BITS_SHIFT) - 1)
-    return (
-        _compact_np(morton).astype(np.int64),
-        _compact_np(morton >> np.uint64(1)).astype(np.int64),
-    )
-
-
-def parent_np(cell: np.ndarray, parent_res: int) -> np.ndarray:
-    """Ancestor at ``parent_res`` — pure bit arithmetic, no trig."""
-    cell = np.asarray(cell).astype(np.uint64)
-    res = cell >> np.uint64(RES_BITS_SHIFT)
-    if np.any(res < parent_res):
-        raise ValueError("parent_res must be <= cell res")
-    morton = cell & np.uint64((1 << RES_BITS_SHIFT) - 1)
-    shift = (np.uint64(2) * (res - np.uint64(parent_res))).astype(np.uint64)
-    return (
-        np.uint64(parent_res) << np.uint64(RES_BITS_SHIFT) | (morton >> shift)
-    ).astype(np.int64)
-
-
-def children_np(cell: int) -> np.ndarray:
-    """Four direct children (res+1)."""
-    c = np.uint64(cell)
-    res = int(c >> np.uint64(RES_BITS_SHIFT))
-    if res >= MAX_RES:
-        raise ValueError("cell already at max res")
-    morton = c & np.uint64((1 << RES_BITS_SHIFT) - 1)
-    kids = (morton << np.uint64(2)) + np.arange(4, dtype=np.uint64)
-    return (np.uint64(res + 1) << np.uint64(RES_BITS_SHIFT) | kids).astype(np.int64)
-
-
-def kring_np(cell: int, k: int = 1) -> np.ndarray:
-    """All cells within Chebyshev distance k (the (2k+1)² block).
-    x wraps across the anti-meridian; y rows beyond the poles are
-    dropped. Includes the center cell. Sorted, deduped."""
-    c = np.uint64(cell)
-    res = int(c >> np.uint64(RES_BITS_SHIFT))
-    n = 1 << res
-    x, y = cell_xy_np(np.array([cell]))
-    dx, dy = np.meshgrid(np.arange(-k, k + 1), np.arange(-k, k + 1))
-    xs = (x[0] + dx.ravel()) % n
-    ys = y[0] + dy.ravel()
-    ok = (ys >= 0) & (ys < n)
-    xs, ys = xs[ok], ys[ok]
-    morton = _spread_np(xs) | (_spread_np(ys) << np.uint64(1))
-    out = (np.uint64(res) << np.uint64(RES_BITS_SHIFT) | morton).astype(np.int64)
-    return np.unique(out)
-
-
-def cell_bounds_np(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """(lon_min, lat_min, lon_max, lat_max) of each cell."""
-    cell = np.asarray(cell)
-    res = cell_res_np(cell)
-    n = (np.int64(1) << res).astype(np.float64)
-    x, y = cell_xy_np(cell)
-    w, h = 360.0 / n, 180.0 / n
-    lon0 = -180.0 + x * w
-    lat0 = -90.0 + y * h
-    return lon0, lat0, lon0 + w, lat0 + h
 
 
 def cell_size_deg(res: int) -> tuple[float, float]:
@@ -221,12 +144,12 @@ def kring_explode(
     inner: int | None = None,
 ) -> tuple[DataFrame, Column, Column, Column, Column]:
     """One row per k-ring neighbour of each row's grid cell (x, y) — the
-    Spark twin of :func:`kring_np`: x wraps at the anti-meridian, y rows
-    beyond the poles are dropped. Returns the exploded frame and, as
-    Column expressions over it, the neighbour's grid (x, y) and its
-    (dx, dy) offset. The frame keeps ``df``'s columns plus working
-    columns named ``__x``, ``__y``, ``__dx``, ``__dy`` and ``__ny``;
-    callers select what they need. The offsets are exploded as literal
+    Spark twin of ``kring_np`` in tests/oracle_geo.py: x wraps at the
+    anti-meridian, y rows beyond the poles are dropped. Returns the
+    exploded frame and, as Column expressions over it, the neighbour's
+    grid (x, y) and its (dx, dy) offset. The frame keeps ``df``'s
+    columns plus working columns named ``__x``, ``__y``, ``__dx``,
+    ``__dy`` and ``__ny``; callers select what they need. The offsets are exploded as literal
     sequences FIRST and the neighbour computed once per output row, so
     the plan carries one small expression instead of (2r+1)² inlined
     copies.

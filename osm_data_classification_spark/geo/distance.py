@@ -1,17 +1,17 @@
-"""Great-circle (haversine) distance — JVM Column expression + numpy
-twin (SURVEY.md §2.8 geo scalars).
+"""Great-circle (haversine) distance as a JVM Column expression
+(SURVEY.md §2.8 geo scalars).
 
 The grid kNN uses planar squared-degree distance (exact, rational —
 safe for cross-engine oracles); haversine is the geodesic-correct
 variant for ranking/radius filters at real-world scale. Trig is NOT
 bit-identical across math libraries, so this function is never used in
-a DuckDB-oracle query — its gate is numpy parity within 1e-9 relative
-(tests/test_functions.py).
+a DuckDB-oracle query — its gate is parity with the numpy twin in
+tests/oracle_geo.py within 1e-9 relative
+(tests/test_robustness.py::test_haversine_jvm_matches_numpy).
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -30,11 +30,3 @@ def haversine_km_col(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> 
     )
     # clamp: float error can push a infinitesimally past 1 → asin NaN
     return F.lit(2.0 * EARTH_RADIUS_KM) * F.asin(F.sqrt(F.least(a, F.lit(1.0))))
-
-
-def haversine_km_np(lon1, lat1, lon2, lat2) -> np.ndarray:
-    rlat1, rlat2 = np.radians(lat1), np.radians(lat2)
-    dlat = rlat1 * 0 + np.radians(lat2) - np.radians(lat1)
-    dlon = np.radians(lon2) - np.radians(lon1)
-    a = np.sin(dlat / 2) ** 2 + np.cos(rlat1) * np.cos(rlat2) * np.sin(dlon / 2) ** 2
-    return 2.0 * EARTH_RADIUS_KM * np.arcsin(np.sqrt(np.minimum(a, 1.0)))

@@ -185,20 +185,3 @@ def with_contributor(pages: DataFrame) -> DataFrame:
     return pages.withColumn(
         "contributor", F.regexp_extract("url", r"site(\d+)", 1).try_cast("long")
     )
-
-
-def geocode_np(texts) -> tuple:
-    """numpy oracle twin of :func:`geocode_cols` (same semantics)."""
-    import re
-
-    import numpy as np
-
-    pat = re.compile(r"loc_(\d+)_(\d+)")
-    lon = np.empty(len(texts))
-    lat = np.empty(len(texts))
-    for k, t in enumerate(texts):
-        m = pat.search(t)
-        i, j = int(m.group(1)), int(m.group(2))
-        lon[k] = -180.0 + i * LON_STEP + LON_OFF
-        lat[k] = -90.0 + j * LAT_STEP + LAT_OFF
-    return lon, lat

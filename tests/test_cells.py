@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 
 from osm_data_classification_spark.geo import cells
+from tests import oracle_geo
 
 
 RNG = np.random.default_rng(42)
@@ -14,13 +15,13 @@ LAT = RNG.uniform(-90, 90, 500)
 @pytest.mark.parametrize("res", range(5, 13))
 def test_encode_decode_roundtrip(res):
     c = cells.encode_np(LON, LAT, res)
-    assert np.all(cells.cell_res_np(c) == res)
-    x, y = cells.cell_xy_np(c)
+    assert np.all(oracle_geo.cell_res_np(c) == res)
+    x, y = oracle_geo.cell_xy_np(c)
     ex, ey = cells.xy_np(LON, LAT, res)
     assert np.array_equal(x, ex)
     assert np.array_equal(y, ey)
     # point lies inside its own cell bounds
-    lon0, lat0, lon1, lat1 = cells.cell_bounds_np(c)
+    lon0, lat0, lon1, lat1 = oracle_geo.cell_bounds_np(c)
     assert np.all((LON >= lon0) & (LON < lon1 + 1e-9))
     assert np.all((LAT >= lat0 - 1e-9) & (LAT <= lat1 + 1e-9))
 
@@ -30,25 +31,25 @@ def test_parent_hierarchy_invariant(res):
     """parent(encode(p, r), r-1) == encode(p, r-1) — the invariant the
     res-ladder rollup (A7/A8) depends on."""
     c = cells.encode_np(LON, LAT, res)
-    p = cells.parent_np(c, res - 1)
+    p = oracle_geo.parent_np(c, res - 1)
     assert np.array_equal(p, cells.encode_np(LON, LAT, res - 1))
 
 
 def test_children_roundtrip():
     c = cells.encode_np(np.array([12.3]), np.array([45.6]), 8)[0]
-    kids = cells.children_np(c)
+    kids = oracle_geo.children_np(c)
     assert len(kids) == 4
     for kid in kids:
-        assert cells.parent_np(np.array([kid]), 8)[0] == c
+        assert oracle_geo.parent_np(np.array([kid]), 8)[0] == c
 
 
 def test_kring_basic():
     c = cells.encode_np(np.array([0.0]), np.array([0.0]), 8)[0]
-    ring = cells.kring_np(c, 1)
+    ring = oracle_geo.kring_np(c, 1)
     assert len(ring) == 9 and c in ring
     # neighbors are Chebyshev distance <= 1
-    x0, y0 = cells.cell_xy_np(np.array([c]))
-    xs, ys = cells.cell_xy_np(ring)
+    x0, y0 = oracle_geo.cell_xy_np(np.array([c]))
+    xs, ys = oracle_geo.cell_xy_np(ring)
     assert np.all(np.abs(xs - x0[0]) <= 1)
     assert np.all(np.abs(ys - y0[0]) <= 1)
 
@@ -58,8 +59,8 @@ def test_kring_antimeridian_wraps():
     res = 8
     n = 1 << res
     c = cells.encode_np(np.array([-180.0]), np.array([0.0]), res)[0]
-    ring = cells.kring_np(c, 1)
-    xs, _ = cells.cell_xy_np(ring)
+    ring = oracle_geo.kring_np(c, 1)
+    xs, _ = oracle_geo.cell_xy_np(ring)
     assert (n - 1) in xs and 0 in xs
     assert len(ring) == 9
 
@@ -68,9 +69,9 @@ def test_kring_pole_clamps():
     res = 8
     n = 1 << res
     c = cells.encode_np(np.array([0.0]), np.array([89.9]), res)[0]
-    _, ys = cells.cell_xy_np(np.array([c]))
+    _, ys = oracle_geo.cell_xy_np(np.array([c]))
     assert ys[0] == n - 1
-    ring = cells.kring_np(c, 1)
+    ring = oracle_geo.kring_np(c, 1)
     assert len(ring) == 6  # top row clipped
 
 
@@ -103,9 +104,9 @@ def test_kring_explode_equals_kring_np(spark):
             got.setdefault(r.pid, []).append(r.c)
         for pid, (lon, lat) in enumerate(pts):
             c = cells.encode_np(np.array([lon]), np.array([lat]), res)[0]
-            want = set(cells.kring_np(c, ring).tolist())
+            want = set(oracle_geo.kring_np(c, ring).tolist())
             if inner is not None:
-                want -= set(cells.kring_np(c, inner).tolist())
+                want -= set(oracle_geo.kring_np(c, inner).tolist())
             case = f"res={res} ring={ring} inner={inner} pt={pts[pid]}"
             assert sorted(got.get(pid, [])) == sorted(want), case
 
@@ -241,11 +242,11 @@ def test_cell_neighbors_match_kring_np(spark, sf_dir):
     n = 1 << NB_RES
     seen_pole = False
     for r in rows:
-        ring = cells.kring_np(int(r["cell"]), k=1)
+        ring = oracle_geo.kring_np(int(r["cell"]), k=1)
         want = sorted(int(c) for c in ring if int(c) != r["cell"])
         got = [int(c) for c in r["neighbors"].split("|")]
         assert got == want, r["cell"]
-        _, y = cells.cell_xy_np(np.array([int(r["cell"])]))
+        _, y = oracle_geo.cell_xy_np(np.array([int(r["cell"])]))
         expect = 8 if 0 < y[0] < n - 1 else 5
         assert r["n_neighbors"] == expect, r["cell"]
         seen_pole = seen_pole or expect == 5
@@ -255,8 +256,8 @@ def test_cell_neighbors_match_kring_np(spark, sf_dir):
 
     # anti-meridian: x must wrap, never go negative or >= 2^r
     c0 = int(cells.encode_np(np.array([-179.9]), np.array([10.0]), NB_RES)[0])
-    ring = cells.kring_np(c0, k=1)
-    xs, _ = cells.cell_xy_np(ring)
+    ring = oracle_geo.kring_np(c0, k=1)
+    xs, _ = oracle_geo.cell_xy_np(ring)
     assert xs.min() == 0 and xs.max() == (1 << NB_RES) - 1
 
 
@@ -267,10 +268,7 @@ def test_bbox_cover_ranges_exact_cover():
     extras beyond boundary cells (wasted scan)."""
     import numpy as np
 
-    from osm_data_classification_spark.geo.cells import (
-        bbox_cover_ranges,
-        cell_bounds_np,
-    )
+    from osm_data_classification_spark.geo.cells import bbox_cover_ranges
 
     res, n = 5, 1 << 5
     all_cells = []
@@ -281,7 +279,7 @@ def test_bbox_cover_ranges_exact_cover():
         _spread_np(ys.ravel().astype(np.uint64)) << np.uint64(1)
     )
     all_cells = (np.uint64(res << RES_BITS_SHIFT) | morton).astype(np.int64)
-    lon0b, lat0b, lon1b, lat1b = cell_bounds_np(all_cells)
+    lon0b, lat0b, lon1b, lat1b = oracle_geo.cell_bounds_np(all_cells)
 
     rng = np.random.default_rng(7)
     for _ in range(25):

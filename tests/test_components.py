@@ -20,6 +20,7 @@ from osm_data_classification_spark.operators.components import (
     host_link_edges,
     pagerank_hosts,
 )
+from tests import oracle_geo
 
 
 def _union_find(pairs):
@@ -157,7 +158,7 @@ def test_dense_cell_clusters_match_union_find(spark, sf_dir):
         assert r["cluster_cells"] == ncells
         assert r["cluster_pages"] == npages
         assert r["n_pages"] == counts[
-            tuple(int(v[0]) for v in cells.cell_xy_np(np.array([r["cell"]])))
+            tuple(int(v[0]) for v in oracle_geo.cell_xy_np(np.array([r["cell"]])))
         ]
     # the fixture must actually exercise multi-cell clusters
     assert any(r["cluster_cells"] > 1 for r in got)

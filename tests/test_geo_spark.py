@@ -16,10 +16,10 @@ from osm_data_classification_spark.operators.geo_ops import (
 )
 from osm_data_classification_spark.sources.boundaries import packed_boundaries
 from osm_data_classification_spark.sources.pages import (
-    geocode_np,
     geocoded_pages,
     synth_pages,
 )
+from tests.oracle_geo import geocode_np
 from tests.oracle_knn import knn_bruteforce
 
 

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from osm_data_classification_spark.io import load_table
 from osm_data_classification_spark.plans import audit
+from tests import plan_probes
 
 
 @pytest.fixture(scope="module")
@@ -45,8 +46,8 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, warehouse):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         joined = spark.table("ev_b").join(spark.table("agg_b"), "user_id")
-        kinds = audit.join_kinds(joined)
-        n_ex = audit.count_exchanges(joined)
+        kinds = plan_probes.join_kinds(joined)
+        n_ex = plan_probes.count_exchanges(joined)
         assert n_ex == 0, f"bucketed join still shuffles: {n_ex} exchanges"
         assert "SortMergeJoin" in kinds
         # and it computes the right thing

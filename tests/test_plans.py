@@ -14,6 +14,7 @@ from osm_data_classification_spark.operators.geo_ops import pip_join, tile_aggre
 from osm_data_classification_spark.plans import audit
 from osm_data_classification_spark.sources.boundaries import packed_boundaries
 from osm_data_classification_spark.sources.pages import geocoded_pages
+from tests import plan_probes
 
 
 def _q(name):
@@ -22,46 +23,46 @@ def _q(name):
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
     df = _q("filter_lang_en")(spark, sf_dir)
-    pushed = " ".join(audit.pushed_filters(df))
+    pushed = " ".join(plan_probes.pushed_filters(df))
     assert "lang" in pushed, f"lang filter not pushed: {pushed!r}"
 
 
 def test_projection_prunes_read_schema(spark, sf_dir):
     df = _q("scan_pages")(spark, sf_dir)
-    cols = audit.read_schema_columns(df)
+    cols = plan_probes.read_schema_columns(df)
     assert "text" not in cols, f"text should be pruned, read: {cols}"
     assert cols <= {"doc_id", "lang", "n_chars"}
 
 
 def test_small_dim_join_broadcasts(spark, sf_dir):
     df = _q("join_orders_customer")(spark, sf_dir)
-    kinds = audit.join_kinds(df)
+    kinds = plan_probes.join_kinds(df)
     assert "BroadcastHashJoin" in kinds, kinds
     assert "SortMergeJoin" not in kinds, kinds
 
 
 def test_star_join_all_broadcast_no_shuffle(spark, sf_dir):
     df = _q("star_join_3way")(spark, sf_dir)
-    kinds = audit.join_kinds(df)
+    kinds = plan_probes.join_kinds(df)
     assert kinds.count("BroadcastHashJoin") >= 2, kinds
 
 
 def test_pip_coarse_join_is_broadcast(spark, sf_dir):
     pages = geocoded_pages(spark, sf_dir, res=7)
     cand = pip_join(pages, packed_boundaries(50), res=7, refine=False)
-    kinds = audit.join_kinds(cand)
+    kinds = plan_probes.join_kinds(cand)
     assert kinds == ["BroadcastHashJoin"], kinds
     # the points side never shuffles for the PIP join (SURVEY.md §4.2)
-    assert audit.count_exchanges(cand) <= 1  # only the synth repartition
+    assert plan_probes.count_exchanges(cand) <= 1  # only the synth repartition
 
 
 def test_pip_refine_is_single_arrow_stage(spark, sf_dir):
     pages = geocoded_pages(spark, sf_dir, res=7)
     refined = pip_join(pages, packed_boundaries(50), res=7)
-    assert audit.has_python_stage(refined)
+    assert plan_probes.has_python_stage(refined)
     # refine adds NO exchange on top of the coarse join
     coarse = pip_join(pages, packed_boundaries(50), res=7, refine=False)
-    assert audit.count_exchanges(refined) == audit.count_exchanges(coarse)
+    assert plan_probes.count_exchanges(refined) == plan_probes.count_exchanges(coarse)
 
 
 def test_tile_agg_three_phase_exchanges(spark, sf_dir):
@@ -71,7 +72,7 @@ def test_tile_agg_three_phase_exchanges(spark, sf_dir):
     tiles = tile_aggregate(pages, res=7, cell_col="cell")
     # synth repartition + (cell,uid,url) + (cell,uid) + (cell): ≤4, and
     # each agg phase must combine map-side (partial_ in the plan)
-    assert audit.count_exchanges(tiles) <= 4
+    assert plan_probes.count_exchanges(tiles) <= 4
     plan = audit.formatted_plan(tiles)
     assert "partial_" in plan
 
@@ -79,25 +80,25 @@ def test_tile_agg_three_phase_exchanges(spark, sf_dir):
 def test_window_version_chain_single_exchange(spark, sf_dir):
     df = _q("window_version_chain")(spark, sf_dir)
     # both window specs share the partition key -> one hash exchange
-    assert audit.count_exchanges(df) == 1, audit.count_exchanges(df)
+    assert plan_probes.count_exchanges(df) == 1, plan_probes.count_exchanges(df)
 
 
 def test_relational_ops_stay_in_codegen(spark, sf_dir):
     for name in ("agg_user_features", "agg_element_meta", "scalar_math_ratios"):
         df = _q(name)(spark, sf_dir)
-        assert audit.codegen_stage_count(df) >= 1, name
-        assert not audit.has_python_stage(df), f"{name} crossed into Python"
+        assert plan_probes.codegen_stage_count(df) >= 1, name
+        assert not plan_probes.has_python_stage(df), f"{name} crossed into Python"
 
 
 def test_sort_limit_uses_take_ordered(spark, sf_dir):
     df = _q("sort_limit_report")(spark, sf_dir)
-    assert "TakeOrderedAndProject" in audit.simple_plan(df)
+    assert "TakeOrderedAndProject" in plan_probes.simple_plan(df)
 
 
 def test_geocode_encode_is_jvm_only(spark, sf_dir):
     df = geocoded_pages(spark, sf_dir, res=7)
-    assert not audit.has_python_stage(df), "hot-path encode crossed into Python"
-    assert audit.codegen_stage_count(df) >= 1
+    assert not plan_probes.has_python_stage(df), "hot-path encode crossed into Python"
+    assert plan_probes.codegen_stage_count(df) >= 1
 
 
 def test_cell_encode_computes_grid_xy_once(spark, sf_dir):
@@ -119,8 +120,8 @@ def test_asof_join_single_exchange_no_join_node(spark, sf_dir):
     """The as-of join is a window composition: one hash exchange on the
     key, no join operator at all (and certainly no range/BNL join)."""
     df = _q("asof_join_purchase_view")(spark, sf_dir)
-    assert audit.join_kinds(df) == [], audit.join_kinds(df)
-    assert audit.count_exchanges(df) == 1
+    assert plan_probes.join_kinds(df) == [], plan_probes.join_kinds(df)
+    assert plan_probes.count_exchanges(df) == 1
 
 
 def test_interval_join_is_equi_not_nested_loop(spark, sf_dir):
@@ -128,7 +129,7 @@ def test_interval_join_is_equi_not_nested_loop(spark, sf_dir):
     join — BroadcastNestedLoopJoin/CartesianProduct would be the naive
     no-equi-key plan that dies at scale."""
     df = _q("interval_join_bucketed")(spark, sf_dir)
-    kinds = audit.join_kinds(df)
+    kinds = plan_probes.join_kinds(df)
     assert "BroadcastNestedLoopJoin" not in kinds, kinds
     assert "CartesianProduct" not in kinds, kinds
     assert any(k in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin") for k in kinds), kinds
@@ -142,7 +143,7 @@ def test_flagship_has_no_expand_on_cell_key(spark, sf_dir):
     from osm_data_classification_spark.jobs_api import flagship
 
     df = flagship(spark, sf_dir)
-    nodes = audit.plan_nodes(df)
+    nodes = plan_probes.plan_nodes(df)
     assert not any("Expand" in n for n in nodes), nodes
 
 
@@ -154,12 +155,12 @@ def test_flagship_reads_matched_pages_once(spark, sf_dir):
     from osm_data_classification_spark.jobs_api import flagship
 
     df = flagship(spark, sf_dir)
-    nodes = audit.plan_nodes(df)
+    nodes = plan_probes.plan_nodes(df)
     python = [n for n in nodes if n in ("ArrowEvalPython", "BatchEvalPython")]
     assert len(python) == 1, nodes
     scanned = re.findall(r"^Location: \w+ \[(.*)\]$", audit.formatted_plan(df), re.M)
     assert [os.path.basename(p) for p in scanned] == ["documents.parquet"], scanned
-    assert audit.join_kinds(df) == ["BroadcastHashJoin"], audit.join_kinds(df)
+    assert plan_probes.join_kinds(df) == ["BroadcastHashJoin"], plan_probes.join_kinds(df)
 
 
 def test_pip_cover_switches_to_shuffle_join(spark, sf_dir, monkeypatch):
@@ -182,7 +183,7 @@ def test_pip_cover_switches_to_shuffle_join(spark, sf_dir, monkeypatch):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         coarse = pip_join(pages, pk, res=7, refine=False)
-        kinds = audit.join_kinds(coarse)
+        kinds = plan_probes.join_kinds(coarse)
         assert "BroadcastHashJoin" not in kinds, kinds
         got = sorted(
             (r["url"], r["boundary_id"])
@@ -207,7 +208,7 @@ def test_pip_shuffle_entry_runs_non_broadcast_path(spark, sf_dir):
         for r in _q("geo_pip_join_exact")(spark, sf_dir).collect()
     )
     df = _q("geo_pip_join_shuffle")(spark, sf_dir)
-    kinds = audit.join_kinds(df)
+    kinds = plan_probes.join_kinds(df)
     assert "BroadcastHashJoin" not in kinds, kinds
     assert "ShuffledHashJoin" in kinds, kinds
     got = sorted(
@@ -248,7 +249,7 @@ def test_runtime_bloom_filter_prunes_fact_side(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("n"))
         )
         df.collect()
-        plan = audit.simple_plan(df)
+        plan = plan_probes.simple_plan(df)
         assert "might_contain" in plan, plan[:2000]
         assert "bloom_filter_agg" in plan, plan[:2000]
     finally:
@@ -264,9 +265,9 @@ def test_quadkey_encode_is_map_only_codegen(spark, sf_dir):
     bit arithmetic — zero exchanges beyond the synthetic source's own
     spread repartition, zero Python stages."""
     df = _q("geo_quadkey_encode")(spark, sf_dir)
-    assert audit.count_exchanges(df) <= 1, audit.plan_nodes(df)
-    assert not audit.has_python_stage(df)
-    assert audit.codegen_stage_count(df) >= 1
+    assert plan_probes.count_exchanges(df) <= 1, plan_probes.plan_nodes(df)
+    assert not plan_probes.has_python_stage(df)
+    assert plan_probes.codegen_stage_count(df) >= 1
 
 
 def test_quantize_int8_is_map_only_codegen(spark, sf_dir):
@@ -274,9 +275,9 @@ def test_quantize_int8_is_map_only_codegen(spark, sf_dir):
     expressions — zero exchanges, zero Python stages (a 10^12-vector
     recode must be scan-bound)."""
     df = _q("embed_quantize_int8")(spark, sf_dir)
-    assert audit.count_exchanges(df) == 0, audit.plan_nodes(df)
-    assert not audit.has_python_stage(df)
-    assert audit.codegen_stage_count(df) >= 1
+    assert plan_probes.count_exchanges(df) == 0, plan_probes.plan_nodes(df)
+    assert not plan_probes.has_python_stage(df)
+    assert plan_probes.codegen_stage_count(df) >= 1
 
 
 def test_bbox_query_is_single_source_exchange(spark, sf_dir):
@@ -286,15 +287,15 @@ def test_bbox_query_is_single_source_exchange(spark, sf_dir):
     interpreted mode — pinned indirectly by stage count here and by
     wall time in the catalog gate)."""
     df = _q("geo_bbox_cells_query")(spark, sf_dir)
-    assert audit.count_exchanges(df) <= 1
-    assert not audit.has_python_stage(df)
+    assert plan_probes.count_exchanges(df) <= 1
+    assert not plan_probes.has_python_stage(df)
 
 
 def test_cross_snapshot_dedup_joins_on_fingerprint(spark, sf_dir):
     """dedup_cross_snapshot: the probe is an equi-join on the hash
     column — no nested loop, no cartesian."""
     df = _q("dedup_cross_snapshot")(spark, sf_dir)
-    kinds = " ".join(audit.join_kinds(df)).lower()
+    kinds = " ".join(plan_probes.join_kinds(df)).lower()
     assert "nestedloop" not in kinds and "cartesian" not in kinds
 
 
@@ -303,7 +304,7 @@ def test_bloom_prefilter_broadcasts_filter_and_truth_sides(spark, sf_dir):
     old-fingerprint join must both broadcast — the probe side is the
     only data-sized input and it must never be the build side."""
     df = _q("dedup_bloom_prefilter")(spark, sf_dir)
-    kinds = audit.join_kinds(df)
+    kinds = plan_probes.join_kinds(df)
     assert kinds.count("BroadcastHashJoin") >= 2, kinds
     assert "SortMergeJoin" not in kinds, kinds
 
@@ -313,7 +314,7 @@ def test_pq_scores_against_broadcast_codebook_and_lut(spark, sf_dir):
     the broadcast probe LUT — the vector/code side streams, matching
     the memory-resident PQ layout claimed in SCALE.md."""
     df = _q("ann_pq_topk")(spark, sf_dir)
-    kinds = audit.join_kinds(df)
+    kinds = plan_probes.join_kinds(df)
     assert kinds.count("BroadcastHashJoin") >= 2, kinds
     assert "SortMergeJoin" not in kinds, kinds
     assert "CartesianProduct" not in kinds, kinds
@@ -324,7 +325,7 @@ def test_triangle_count_no_cartesian(spark, sf_dir):
     closure an equi-join on (y, z) — a plan that degrades to a
     cartesian or a broadcast nested loop has lost the equi-keys."""
     df = _q("webgraph_triangle_count")(spark, sf_dir)
-    nodes = " ".join(audit.plan_nodes(df))
+    nodes = " ".join(plan_probes.plan_nodes(df))
     assert "CartesianProduct" not in nodes, nodes
     assert "BroadcastNestedLoopJoin" not in nodes, nodes
 

@@ -11,14 +11,12 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from osm_data_classification_spark.geo.distance import (
-    haversine_km_col,
-    haversine_km_np,
-)
+from osm_data_classification_spark.geo.distance import haversine_km_col
 from osm_data_classification_spark.operators import dedup, text
 from osm_data_classification_spark.operators.geo_ops import pip_join
 from osm_data_classification_spark.sources.boundaries import packed_boundaries
 from osm_data_classification_spark.sources.pages import geocoded_pages
+from tests.oracle_geo import haversine_km_np
 
 GEN_PRIORITY = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools", "gen_priority.py"
