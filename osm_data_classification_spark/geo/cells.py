@@ -149,10 +149,10 @@ def kring_explode(
     exploded frame and, as Column expressions over it, the neighbour's
     grid (x, y) and its (dx, dy) offset. The frame keeps ``df``'s
     columns plus working columns named ``__x``, ``__y``, ``__dx``,
-    ``__dy`` and ``__ny``; callers select what they need. The offsets are exploded as literal
-    sequences FIRST and the neighbour computed once per output row, so
-    the plan carries one small expression instead of (2r+1)² inlined
-    copies.
+    ``__dy`` and ``__ny``; callers select what they need. The offsets
+    are exploded as literal sequences FIRST and the neighbour computed
+    once per output row, so the plan carries one small expression
+    instead of (2r+1)² inlined copies.
 
     ``inner``: drop the cells of the ``inner``-ring block and emit the
     ANNULUS only (``inner=0`` drops just the centre). Valid whenever
