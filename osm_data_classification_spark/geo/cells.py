@@ -126,7 +126,9 @@ def _spread_col(v: Column) -> Column:
 def xy_cols(lon: Column, lat: Column, res: int) -> tuple[Column, Column]:
     """Grid (x, y) Column expressions — twin of :func:`xy_np`."""
     n = 1 << res
-    lonw = (lon + F.lit(180.0)) % F.lit(360.0)
+    # pmod, not %: Spark's % keeps the dividend's sign, so lon < -180
+    # would clamp to x = 0 instead of wrapping as numpy's % does
+    lonw = F.pmod(lon + F.lit(180.0), F.lit(360.0))
     x = F.least(F.floor(lonw / F.lit(360.0) * F.lit(n)), F.lit(n - 1)).cast("long")
     x = F.greatest(x, F.lit(0))
     y = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(n)).cast("long")

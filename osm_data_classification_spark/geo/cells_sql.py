@@ -36,11 +36,17 @@ def SPREAD(v: str) -> str:
 
 def X_SQL(lon: str, res: int) -> str:
     # float literals cast to DOUBLE explicitly: DuckDB parses `360.0`
-    # as DECIMAL, whose division/floor need not match Spark's IEEE path
+    # as DECIMAL, whose division/floor need not match Spark's IEEE path.
+    # DuckDB's % keeps the dividend's sign; the CASE is Spark's pmod
+    # (adding 360 only to a negative remainder keeps the others exact)
     n = 1 << res
+    r = f"((({lon}) + CAST(180.0 AS DOUBLE)) % CAST(360.0 AS DOUBLE))"
+    lonw = (
+        f"CASE WHEN {r} < 0 THEN ({r} + CAST(360.0 AS DOUBLE)) "
+        f"% CAST(360.0 AS DOUBLE) ELSE {r} END"
+    )
     return (
-        f"greatest(least(CAST(floor((((({lon}) + CAST(180.0 AS DOUBLE)) "
-        f"% CAST(360.0 AS DOUBLE)) / CAST(360.0 AS DOUBLE)) * {n}) "
+        f"greatest(least(CAST(floor(({lonw}) / CAST(360.0 AS DOUBLE) * {n}) "
         f"AS BIGINT), {n - 1}), 0)"
     )
 

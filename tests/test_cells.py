@@ -156,17 +156,24 @@ def test_golden_values_stable():
 
 def test_with_cell_matches_encode_col_and_numpy(spark):
     """The staged encode (x/y projected once) gives the ids of the
-    one-expression Column form and of the numpy twin: on the golden
-    points, at both poles, on the anti-meridian (lon 180 wraps to
-    x = 0) and at the clamped last row and column."""
+    one-expression Column form, of the DuckDB twin and of the numpy
+    twin: on the golden points, at both poles, on the anti-meridian
+    (lon 180 wraps to x = 0), past it on either side (lon -190 wraps to
+    x = 124 at res 7, not x = 0) and at the clamped last row and
+    column."""
+    import duckdb
     from pyspark.sql import functions as F
+
+    from osm_data_classification_spark.geo.cells_sql import CELL_SQL
 
     pts = [
         (0.0, 0.0), (-180.0, -90.0), (179.999, 89.999), (2.35, 48.86),
         (180.0, 90.0), (-180.0, 90.0), (179.9999999, -90.0), (0.0, 89.9999999),
         (-179.9999999, -89.9999999), (540.0, 0.0),
+        (-190.0, 10.0), (-180.0, 10.0), (190.0, 10.0),
     ]
     df = spark.createDataFrame(pts, "lon double, lat double")
+    values = ", ".join(f"({lon}::DOUBLE, {lat}::DOUBLE)" for lon, lat in pts)
     lon = np.array([p[0] for p in pts])
     lat = np.array([p[1] for p in pts])
     for res in (0, 1, 7, 12, 15):
@@ -178,6 +185,8 @@ def test_with_cell_matches_encode_col_and_numpy(spark):
         assert [(r.lon, r.lat) for r in rows] == pts
         assert [r.cell for r in rows] == want, res
         assert [r.inline for r in rows] == want, res
+        sql = f"SELECT {CELL_SQL('lon', 'lat', res)} FROM (VALUES {values}) t(lon, lat)"
+        assert [r[0] for r in duckdb.sql(sql).fetchall()] == want, res
 
 
 def test_session_turns_off_call_site_capture(spark):
