@@ -43,13 +43,10 @@ HEADLINE = [
     "geo_pip_join",           # J5 broadcast PIP (coarse + Arrow refine)
     "geo_knn_join",           # J6 grid kNN
     "geo_tile_agg",           # A7 two-phase tile aggregation
-    "dedup_minhash_lsh",      # MinHash+LSH near-dup (training-data op)
-    "ann_cosine_topk",        # similarity search over embeddings
+    "dedup_minhash_lsh",      # MinHash+LSH near-dup pairs
     "text_quality_score",     # text-analysis pipeline op
     "sql_tpch_q5",            # deepest join chain (6-way, SQL surface)
-    "embed_quantize_int8",    # map-only int8 vector recode
     # round-4 breadth (r3 VERDICT #4): the heaviest round-3 families
-    "pagerank_hosts_exact",   # bounded iterative joins on the host graph
     "geo_polyfill",           # polygon -> covering cells (center-in-poly)
     "sample_global_shuffle",  # shard-partitioned global shuffle (no sort)
 ]
@@ -213,7 +210,7 @@ def main() -> None:
     profile = {
         # plans depend on the core count (pre-fan-out repartition)
         "cpus": cpus,
-        # includes the jobs a builder runs itself (kNN, PageRank)
+        # includes the jobs a builder runs itself (kNN)
         "build_s": {k: round(v, 4) for k, v in build_s.items()},
         "plan_fingerprints": fingerprints,
         "noise_probe_s": [round(p, 4) for p in probes],

@@ -22,10 +22,10 @@ DataFrame engine, lifted to web scale per BASELINE.json:6:
   min-max normalize → PCA → KMeans (:mod:`.operators.features`,
   :mod:`.operators.ml`),
 - training-data-pipeline operators: dedup (exact/MinHash-LSH/
-  SimHash/n-gram-Jaccard), ANN similarity search, text quality /
-  language-ID / tokenization, multimodal binary-column plumbing
-  (:mod:`.operators.dedup`, :mod:`.operators.similarity`,
-  :mod:`.operators.text`, :mod:`.operators.multimodal`),
+  SimHash/n-gram-Jaccard), text quality / language-ID /
+  tokenization, multimodal binary-column plumbing
+  (:mod:`.operators.dedup`, :mod:`.operators.text`,
+  :mod:`.operators.multimodal`),
 - per-partition lineage + checkpoint/resume (:mod:`.io`).
 
 Everything is DataFrame-first: Catalyst plans, broadcast joins, AQE

@@ -45,7 +45,6 @@ PRIORITY: tuple[str, ...] = (
     "dedup_embedding_cosine",
     "text_token_count",
     "text_fingerprint",
-    "ann_cosine_topk",
     "scan_pages",
     "filter_lang_en",
     "distinct_users",
@@ -69,8 +68,6 @@ PRIORITY: tuple[str, ...] = (
     "text_quality_score",
     "text_lang_id",
     "text_hash_embedding",
-    "ann_lsh_bucketed",
-    "ann_ivf_topk",
     "geo_cell_encode",
     "kmeans_assign_fixed",
     "pca_project_fixed",
@@ -83,6 +80,9 @@ PRIORITY: tuple[str, ...] = (
     "grouped_quantiles_apply",
     "sql_tpch_q1",
     "sql_tpch_q3",
+    "asof_join_purchase_view",
+    "cube_user_type",
+    "window_rank_family",
     # --- END GENERATED WINDOW ---
 )
 
@@ -95,8 +95,8 @@ def raw_catalog() -> dict[str, QuerySpec]:
     order it was derived from)."""
     cat: dict[str, QuerySpec] = {}
     cat.update(_RELATIONAL)
-    for modname in ("dedup", "text", "similarity", "geo_queries", "ml_queries",
-                    "multimodal", "ref_features", "skew_queries", "grouped",
+    for modname in ("dedup", "text", "geo_queries", "ml_queries", "multimodal",
+                    "ref_features", "skew_queries", "grouped",
                     "sql_surface", "temporal", "components", "warehouse"):
         mod = __import__(
             f"osm_data_classification_spark.operators.{modname}",

@@ -18,6 +18,8 @@ from .relational import QuerySpec, register
 
 CATALOG: dict[str, QuerySpec] = {}
 
+EMB_DIM = 64  # length of every vector in the embeddings table
+
 
 @register("pca_project")  # rows-only (eigendecomposition)
 def pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -68,9 +70,37 @@ def kmeans_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
 _K_FIXED = 5
 
 
-def _kmeans_fixed_sql() -> str:
-    from .similarity import EMB_DIM
+def _plane_w_sql(m: str, d: str) -> str:
+    """Integer hyperplane weight in [-1000, 1000]: derived from the
+    portable hash of 'm:d' — both engines compute the identical plane."""
+    return (
+        f"(CAST('0x' || substr(md5(CAST({m} AS VARCHAR) || ':' || "
+        f"CAST({d} AS VARCHAR)), 1, 15) AS BIGINT) % 2001) - 1000"
+    )
 
+
+def _planes(spark: SparkSession) -> DataFrame:
+    """(m, d, w) hyperplane table for planes m = 0..3 — built with Column
+    expressions so the weights match the SQL formula bit-for-bit."""
+    m = F.expr("explode(sequence(0, 3))").alias("m")
+    base = spark.range(1, EMB_DIM + 1).select(F.col("id").alias("d"), m)
+    w = (
+        F.conv(
+            F.substring(
+                F.md5(F.concat(F.col("m").cast("string"), F.lit(":"), F.col("d").cast("string"))),
+                1,
+                15,
+            ),
+            16,
+            10,
+        ).cast("long")
+        % 2001
+        - 1000
+    )
+    return base.select("m", "d", w.alias("w"))
+
+
+def _kmeans_fixed_sql() -> str:
     diff = (
         "(CAST(e.embedding[g.i] AS DOUBLE) - CAST(c.embedding[g.i] AS DOUBLE))"
     )
@@ -131,8 +161,6 @@ def kmeans_assign_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pca_fixed_sql() -> str:
-    from .similarity import EMB_DIM, _plane_w_sql
-
     return f"""
     WITH planes AS (
         SELECT m, d, {_plane_w_sql('m', 'd')} AS w
@@ -156,12 +184,10 @@ def _pca_fixed_sql() -> str:
 
 @register("pca_project_fixed", _pca_fixed_sql())
 def pca_project_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A10's projection step with FIXED integer components (the same
-    portable-hash-derived planes the LSH signatures use): exact-decimal
+    """A10's projection step with FIXED integer components (planes 0 and
+    1 of ``_planes``, derived from a portable hash): exact-decimal
     dot per component, floor-scaled x1000. Full oracle: DuckDB builds
     the identical planes and recomputes both projections."""
-    from .similarity import _planes
-
     emb = load_table(spark, sf_dir, "embeddings")
     dims = emb.select(
         "vec_id", F.posexplode("embedding").alias("pos", "x")

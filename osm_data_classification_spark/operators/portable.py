@@ -3,9 +3,10 @@
 The driver's correctness gate hashes query output values from Spark
 and DuckDB side-by-side (__spark_entry__.py), so every operator that
 wants a full value-level check must compute *bit-identical* results in
-both engines. These helpers pin down the three places engines usually
-diverge — hashing, float summation order, and integer division — with
-one construction each:
+both engines. Engines usually diverge in three places — hashing, float
+summation order, and integer division. These helpers pin down the
+hashing; the operators that sum floats round each term and sum it as
+DECIMAL, so any order gives the same value. The constructions:
 
 - ``phash`` — a 60-bit integer hash both engines derive from md5 hex
   (md5 is standardized; hex→int via Spark ``conv`` / DuckDB
@@ -46,29 +47,6 @@ def pmix_col(h: Column, a: int, b: int) -> Column:
 
 def PMIX(expr: str, a: int, b: int) -> str:
     return f"(({a} * (({expr}) % {MOD30}) + {b}) % {PMIX_P})"
-
-
-def dec_dot_col(x: Column, y: Column, scale: int = 12) -> Column:
-    """Order-insensitive dot product of two float arrays: each pairwise
-    product is rounded to ``scale`` decimals and summed as DECIMAL (a
-    sequential fold, but the rounding makes ANY order produce the same
-    decimal), returned as double. This is what makes cosine/L2 values
-    hash-identical between Spark and DuckDB regardless of partitioning."""
-    prods = F.zip_with(x, y, lambda p, q: F.round(p.cast("double") * q.cast("double"), scale))
-    return F.aggregate(
-        prods,
-        F.lit(0).cast("decimal(38,15)"),
-        lambda acc, v: (acc + v.cast("decimal(38,15)")).cast("decimal(38,15)"),
-    ).cast("double")
-
-
-def DEC_SUM_PROD(a_elem: str, b_elem: str, scale: int = 12) -> str:
-    """DuckDB aggregate-position mirror of one :func:`dec_dot_col` term:
-    use inside ``sum(...)`` grouped over a ``generate_series`` index."""
-    return (
-        f"CAST(sum(CAST(round(CAST({a_elem} AS DOUBLE) * CAST({b_elem} AS DOUBLE),"
-        f" {scale}) AS DECIMAL(38,15))) AS DOUBLE)"
-    )
 
 
 def perm_params(n: int, seed: int = 42) -> list[tuple[int, int]]:

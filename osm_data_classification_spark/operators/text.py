@@ -276,9 +276,9 @@ def _embed_sql() -> str:
 def text_hash_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-hashing vectorizer: tokens hashed into HASH_DIM buckets,
     counts l2-normalized — text → embedding entirely in the engine, so
-    tokenize → embed → ANN (operators/similarity.py) is one relational
-    pipeline. Values floor-scaled ×1e5 for engine-exact comparison
-    (sqrt/division are correctly-rounded IEEE in both engines).
+    tokenize → embed is one relational pipeline. Values floor-scaled
+    ×1e5 for engine-exact comparison (sqrt/division are
+    correctly-rounded IEEE in both engines).
     Output is one row per (doc_id, dim) — array columns crash the
     driver's pandas canonicalization (round-1 ERROR)."""
     docs = load_table(spark, sf_dir, "documents")

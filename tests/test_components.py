@@ -1,24 +1,14 @@
-"""Connected components vs a single-threaded union-find oracle; host
-PageRank vs a numpy oracle."""
+"""Connected components vs a single-threaded union-find oracle."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from osm_data_classification_spark.operators import dedup
 from osm_data_classification_spark.operators.components import (
-    PR_DAMPING,
-    PR_EDGE_MAPS,
-    PR_HOSTS,
-    PR_ITERS,
-    PR_SINK_MIN,
-    PR_SOURCE_MOD,
     connected_components,
     dedup_clusters,
-    host_link_edges,
-    pagerank_hosts,
 )
 from tests import oracle_geo
 
@@ -162,116 +152,3 @@ def test_dense_cell_clusters_match_union_find(spark, sf_dir):
         ]
     # the fixture must actually exercise multi-cell clusters
     assert any(r["cluster_cells"] > 1 for r in got)
-
-
-def test_pagerank_exact_parallels_float_variant(spark, sf_dir):
-    """pagerank_hosts_exact (8 integer rounds) vs pagerank_hosts
-    (20 float rounds): same node set, same top-10 authority ordering,
-    and normalized scores within 1e-3 of each other — the integer
-    twin is a faithful, driver-gradable rendering of the same
-    recurrence, not a different algorithm."""
-    import numpy as np
-
-    from osm_data_classification_spark.operators.components import (
-        pagerank_hosts,
-        pagerank_hosts_exact,
-    )
-
-    f = {r["host"]: r["rank"] for r in pagerank_hosts(spark, sf_dir).collect()}
-    i = {
-        r["host"]: r["rank_x1e12"]
-        for r in pagerank_hosts_exact(spark, sf_dir).collect()
-    }
-    assert set(f) == set(i) and f
-    fo = sorted(f, key=lambda h: (-f[h], h))
-    io = sorted(i, key=lambda h: (-i[h], h))
-    assert fo[:10] == io[:10]
-    hosts = sorted(f)
-    fv = np.array([f[h] for h in hosts])
-    iv = np.array([float(i[h]) for h in hosts])
-    assert np.max(np.abs(fv / fv.sum() - iv / iv.sum())) < 1e-3
-
-
-def test_triangle_count_matches_numpy_bruteforce(spark, sf_dir):
-    """Independent gate for webgraph_triangle_count: the Spark and SQL
-    sides share the orientation construction, so a systematic bug
-    would pass the driver hash — numpy's adjacency-matrix count
-    (diag(A^3)/2 per node, trace/6 total) can't share it."""
-    import numpy as np
-
-    from osm_data_classification_spark.operators.components import (
-        PR_HOSTS,
-        host_link_edges,
-        webgraph_triangle_count,
-    )
-
-    edges = host_link_edges(spark, sf_dir).collect()
-    A = np.zeros((PR_HOSTS, PR_HOSTS), dtype=np.int64)
-    for e in edges:
-        A[e["src"], e["dst"]] = 1
-        A[e["dst"], e["src"]] = 1
-    A3 = A @ A @ A
-    per_node = {h: int(A3[h, h]) // 2 for h in range(PR_HOSTS) if A3[h, h]}
-    got = {
-        r["host"]: r["n_triangles"]
-        for r in webgraph_triangle_count(spark, sf_dir).collect()
-    }
-    assert got == per_node
-    assert sum(got.values()) == int(np.trace(A3)) // 6 * 3
-
-
-def _docs_pdf(spark, sf_dir):
-    return (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .toPandas()
-    )
-
-
-def test_pagerank_matches_numpy_oracle(spark, sf_dir):
-    edges = {
-        (r["src"], r["dst"]) for r in host_link_edges(spark, sf_dir).collect()
-    }
-    # oracle rebuilds the same affine graph independently
-    doc_ids = _docs_pdf(spark, sf_dir).doc_id.values
-    exp_edges = set()
-    for d in doc_ids:
-        s = d % PR_HOSTS
-        for a, b in PR_EDGE_MAPS:
-            t = (a * s + b) % PR_HOSTS
-            if s != t and s < PR_SINK_MIN and t % PR_SOURCE_MOD != 0:
-                exp_edges.add((s, t))
-    assert edges == exp_edges
-
-    nodes = sorted({x for e in edges for x in e})
-    idx = {h: i for i, h in enumerate(nodes)}
-    n = len(nodes)
-    out_deg = np.zeros(n)
-    for s, _ in edges:
-        out_deg[idx[s]] += 1
-    ranks = np.full(n, 1.0 / n)
-    for _ in range(PR_ITERS):
-        contrib = np.zeros(n)
-        for s, t in edges:
-            contrib[idx[t]] += ranks[idx[s]] / out_deg[idx[s]]
-        ranks = (1.0 - PR_DAMPING) / n + PR_DAMPING * contrib
-    got = {r["host"]: r["rank"] for r in pagerank_hosts(spark, sf_dir).collect()}
-    assert set(got) == set(nodes)
-    for h in nodes:
-        assert got[h] == pytest.approx(ranks[idx[h]], rel=1e-9, abs=1e-12)
-    # textbook variant: dangling hosts leak rank, so total < 1 iff any
-    # host is dangling; ranks are all >= teleport term
-    teleport = (1.0 - PR_DAMPING) / n
-    assert all(v >= teleport - 1e-15 for v in got.values())
-    if (out_deg == 0).any():
-        assert sum(got.values()) < 1.0
-
-
-def test_pagerank_graph_has_dangling_and_unlinked(spark, sf_dir):
-    """The synthesized graph must exercise both boundary shapes: at
-    least one host with no out-edges and one with no in-links."""
-    rows = host_link_edges(spark, sf_dir).collect()
-    srcs = {r["src"] for r in rows}
-    dsts = {r["dst"] for r in rows}
-    assert dsts - srcs, "no dangling host (no out-edges)"
-    assert srcs - dsts, "no unlinked host (no in-links)"

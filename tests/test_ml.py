@@ -87,51 +87,25 @@ def test_kmeans_matches_numpy_lloyd(spark, sf_dir):
     np.testing.assert_allclose(model["inertia"], d.min(axis=1).sum(), rtol=1e-8)
 
 
-def test_pq_trained_codebook_matches_numpy(spark, sf_dir):
-    """The integer-exact Lloyd training behind ann_pq_trained must be
-    BIT-identical to an independent numpy implementation of the same
-    rule (floor(x*1e6) domain, exact integer argmin with ties to the
-    lower centroid id, floor(sum/count) updates, empty clusters frozen)
-    — if any engine-side float creeps into training, centroids drift
-    and this fails."""
-    from osm_data_classification_spark.operators.similarity import (
-        _PQ_M,
-        _PQ_SUB,
-        _PQT_ITERS,
-        _PQT_K,
-        _PQT_SCALE,
-        _pqt_subs,
-        pq_train_codebook,
+def test_plane_weights_match_duckdb_twin(spark):
+    """pca_project_fixed's planes come from ``_planes`` in Spark and
+    from ``_plane_w_sql`` in its DuckDB oracle: both must give the same
+    weight for every (m, d) of the table."""
+    import duckdb
+
+    from osm_data_classification_spark.operators.ml_queries import (
+        EMB_DIM,
+        _plane_w_sql,
+        _planes,
     )
 
-    emb, x, vec_ids = _matrix(spark, sf_dir)
-    xi = np.floor(x * _PQT_SCALE).astype(np.int64)
-    order = np.argsort(vec_ids)
-    xi = xi[order]
-
-    # numpy twin of pq_train_codebook
-    cent = np.zeros((_PQ_M, _PQT_K, _PQ_SUB), dtype=np.int64)
-    for s in range(_PQ_M):
-        cent[s] = xi[:_PQT_K, s * _PQ_SUB:(s + 1) * _PQ_SUB]
-    for _ in range(_PQT_ITERS):
-        new = cent.copy()
-        for s in range(_PQ_M):
-            sub = xi[:, s * _PQ_SUB:(s + 1) * _PQ_SUB]
-            d = ((sub[:, None, :] - cent[s][None, :, :]) ** 2).sum(axis=2)
-            asg = np.argmin(d, axis=1)  # ties -> lower index
-            for j in range(_PQT_K):
-                mask = asg == j
-                if mask.any():
-                    new[s, j] = np.floor(
-                        sub[mask].sum(axis=0, dtype=np.int64)
-                        / mask.sum()
-                    ).astype(np.int64)
-        cent = new
-
-    got = pq_train_codebook(_pqt_subs(emb)).collect()
-    assert len(got) == _PQ_M * _PQT_K * _PQ_SUB
-    for r in got:
-        assert cent[r["s"], r["j"], r["d"]] == r["c"], (
-            f"centroid mismatch at s={r['s']} j={r['j']} d={r['d']}: "
-            f"numpy {cent[r['s'], r['j'], r['d']]} vs spark {r['c']}"
-        )
+    got = sorted(
+        (r["m"], r["d"], r["w"]) for r in _planes(spark).collect()
+    )
+    want = duckdb.sql(
+        f"SELECT m, d, {_plane_w_sql('m', 'd')} AS w"
+        f" FROM generate_series(0, 3) AS pm(m),"
+        f" generate_series(1, {EMB_DIM}) AS pd(d) ORDER BY m, d"
+    ).fetchall()
+    assert len(got) == 4 * EMB_DIM
+    assert got == [tuple(r) for r in want]

@@ -270,16 +270,6 @@ def test_quadkey_encode_is_map_only_codegen(spark, sf_dir):
     assert plan_probes.codegen_stage_count(df) >= 1
 
 
-def test_quantize_int8_is_map_only_codegen(spark, sf_dir):
-    """embed_quantize_int8: abs/max/floor array HOFs are all JVM
-    expressions — zero exchanges, zero Python stages (a 10^12-vector
-    recode must be scan-bound)."""
-    df = _q("embed_quantize_int8")(spark, sf_dir)
-    assert plan_probes.count_exchanges(df) == 0, plan_probes.plan_nodes(df)
-    assert not plan_probes.has_python_stage(df)
-    assert plan_probes.codegen_stage_count(df) >= 1
-
-
 def test_bbox_query_is_single_source_exchange(spark, sf_dir):
     """geo_bbox_cells_query: the exists-over-range-array predicate
     adds NO exchange beyond the source repartition and never leaves
@@ -307,27 +297,6 @@ def test_bloom_prefilter_broadcasts_filter_and_truth_sides(spark, sf_dir):
     kinds = plan_probes.join_kinds(df)
     assert kinds.count("BroadcastHashJoin") >= 2, kinds
     assert "SortMergeJoin" not in kinds, kinds
-
-
-def test_pq_scores_against_broadcast_codebook_and_lut(spark, sf_dir):
-    """PQ assignment joins the broadcast 128-row codebook; ADC joins
-    the broadcast probe LUT — the vector/code side streams, matching
-    the memory-resident PQ layout claimed in SCALE.md."""
-    df = _q("ann_pq_topk")(spark, sf_dir)
-    kinds = plan_probes.join_kinds(df)
-    assert kinds.count("BroadcastHashJoin") >= 2, kinds
-    assert "SortMergeJoin" not in kinds, kinds
-    assert "CartesianProduct" not in kinds, kinds
-
-
-def test_triangle_count_no_cartesian(spark, sf_dir):
-    """The wedge join is an equi-join on the pivot node and the
-    closure an equi-join on (y, z) — a plan that degrades to a
-    cartesian or a broadcast nested loop has lost the equi-keys."""
-    df = _q("webgraph_triangle_count")(spark, sf_dir)
-    nodes = " ".join(plan_probes.plan_nodes(df))
-    assert "CartesianProduct" not in nodes, nodes
-    assert "BroadcastNestedLoopJoin" not in nodes, nodes
 
 
 def test_plan_fingerprint_stable_and_discriminating(spark, sf_dir):

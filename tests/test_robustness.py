@@ -170,7 +170,7 @@ EMPTY_INPUT_QUERIES = [
     "window_avg_gap", "window_topk_per_group", "topk_event_types",
     "stream_session_agg", "dedup_exact", "dedup_minhash_lsh",
     "dedup_simhash", "text_quality_score", "text_lang_id",
-    "text_hash_embedding", "ann_cosine_topk", "geo_cell_encode",
+    "text_hash_embedding", "geo_cell_encode",
     "geo_pip_join", "geo_knn_join", "geo_tile_agg", "mm_frame_sample",
     "pages_text_extract", "asof_join_purchase_view", "dedup_clusters",
     "sql_tpch_q5", "sql_tpch_q18", "kmeans_assign_fixed",
@@ -187,24 +187,22 @@ EMPTY_INPUT_QUERIES = [
     "sql_tpch_q2", "sql_tpch_q8", "sql_tpch_q9", "sql_tpch_q11",
     "sql_tpch_q13", "sql_tpch_q15", "sql_tpch_q16", "sql_tpch_q20",
     "sql_tpch_q21", "sql_tpch_q22",
-    # recrawl dedup + host PageRank (pagerank's empty-input early
-    # return keeps the real schema)
-    "stream_dedup_recrawl", "pagerank_hosts",
+    # recrawl dedup
+    "stream_dedup_recrawl",
     # fifth-session batch (stats_table_profile is agg-fed -> excluded like
     # agg_approx_distinct; geo_cover_compact / geo_polyfill /
     # sql_recursive_hierarchy take no table input at all)
     "geo_cell_neighbors", "geo_cluster_dense_cells", "geo_tile_vectorize",
     "geo_bbox_cells_query", "geo_tile_heat_decay", "sample_global_shuffle",
     "rollup_grouping_sets", "window_range_trailing_sum",
-    "embed_drift_centroid", "stream_watermark_late_drop",
-    "dedup_bloom_prefilter", "webgraph_hits_exact", "ann_pq_topk",
-    "webgraph_triangle_count", "stream_session_dwell", "geo_geohash_encode",
-    "mm_scene_cut", "embed_matryoshka_topk", "sample_host_cap",
+    "stream_watermark_late_drop",
+    "dedup_bloom_prefilter", "stream_session_dwell", "geo_geohash_encode",
+    "mm_scene_cut", "sample_host_cap",
     "crawl_snapshot_coverage",
     # round-5 batch (stream_stream joins buffer nothing on empty
-    # sides; CUSUM/MAD see zero hosts; PQ training degenerates to an
-    # empty codebook join; blocking deduds produce no candidates)
-    "stream_stream_join", "stream_stream_left_join", "ann_pq_trained",
+    # sides; CUSUM/MAD see zero hosts; blocking deduds produce no
+    # candidates)
+    "stream_stream_join", "stream_stream_left_join",
     "dedup_containment", "dedup_exact_substring_spans",
     "geo_tile_smooth", "geo_contributor_stays", "events_anomaly_mad",
     "crawl_budget_allocate", "grouped_cusum_apply",

@@ -54,8 +54,6 @@ NOTES = {
     "geo_quadkey_encode": "floors + 17 base-4 digit expressions are "
     "pure JVM bit arithmetic in one codegen stage; the only exchange "
     "is the synthetic source's spread repartition",
-    "embed_quantize_int8": "int8 recode as array HOFs (abs/max/floor) "
-    "— zero exchanges, zero Python; a 10^12-vector pass is scan-bound",
     "geo_bbox_cells_query": "Z-order window scan: ONE higher-order "
     "exists over the literal range array (constant codegen size — an "
     "OR-chain of 49 BETWEENs made Janino fail the compile) + exact "
@@ -117,10 +115,6 @@ NOTES = {
     "window partitioning (ONE exchange + sort), then one "
     "partial-combined groupBy over runs — sessionize_events on a "
     "spatial key",
-    "ann_pq_trained": "every Lloyd iteration joins the dim stream to "
-    "a BROADCAST 1024-row centroid table (no shuffle on the scan "
-    "side) and updates via one groupBy to M*K*SUB rows; encode/ADC "
-    "reuse the ann_pq_topk broadcast-LUT layout",
     "crawl_budget_allocate": "ONE window over the host partition key "
     "(single hash exchange); the running prefix sum streams per "
     "partition in sort order — take-while gating with O(1) state per "

@@ -33,7 +33,6 @@ DEFAULT = [
     "geo_tile_agg",
     "agg_user_features",
     "sql_tpch_q5",
-    "pagerank_hosts_exact",
 ]
 QUERIES = sys.argv[2:] or DEFAULT
 
@@ -98,7 +97,7 @@ def main() -> None:
             print(f"| {name} | MISSING | | | |")
             continue
         spark.catalog.clearCache()
-        # snapshot BEFORE fn(): iterative operators (pagerank, HITS,
+        # snapshot BEFORE fn(): iterative operators (dedup_clusters,
         # the stream entries) do their shuffling eagerly inside fn()
         # via localCheckpoint — measuring only the final action would
         # read 0 B for them
